@@ -16,8 +16,10 @@ max(struct(...)) argmax — seq first, payload after), because
 upsert/delete are both last-writer-wins; intermediate events are
 algebraically dead. That makes the fold ONE shuffle on the key over
 the change log — at 100 TB of log the cost is the log's group-by, not
-|log| sequential applies — followed by the same anti-join + union +
-atomic-swap apply as upsert_parquet.
+|log| sequential applies — followed by the same anti-join + union
+apply as upsert_parquet, published through ``versioned.replace_parquet``
+(stage, rename the live dir aside and the staged one in, roll back if
+the move-in fails).
 
 Contract: (key, seq) pairs must be unique — a tie between two ops at
 the same sequence number has no defined order, so duplicates raise
@@ -27,6 +29,8 @@ rather than pick a nondeterministic winner.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from pyspark_big_data_spark.operators.versioned import replace_parquet
 
 
 def resolve_changes(
@@ -90,11 +94,9 @@ def apply_changes(
 
     The winning event per key is applied: 'u' replaces-or-inserts the
     payload row, 'd' removes the key (deleting an absent key is a
-    no-op, as in every CDC sink). Commits via the same stage-then-
-    atomic-rename swap as upsert_parquet. Returns
+    no-op, as in every CDC sink). Commits through
+    ``versioned.replace_parquet``. Returns
     {"upserted": n, "deleted": n, "total": n}."""
-    from pyspark_big_data_spark.operators.upsert import _fs
-
     winners = resolve_changes(changes, key, seq_col, op_col).localCheckpoint(
         eager=True
     )  # pin: the apply reads it twice and must not recompute across the swap
@@ -110,26 +112,10 @@ def apply_changes(
         )
 
     survivors = existing.join(touched, key, "left_anti")
-    merged = survivors.unionByName(upserts)
+    total = replace_parquet(survivors.unionByName(upserts), path)
 
-    tmp = path.rstrip("/") + ".cdc_tmp"
-    old = path.rstrip("/") + ".cdc_old"
-    merged.write.mode("overwrite").parquet(tmp)
-
-    fs, hpath, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(hpath, Path(old)):
-        raise RuntimeError(f"cdc swap failed: could not move {path} aside")
-    if not fs.rename(Path(tmp), hpath):
-        fs.rename(Path(old), hpath)  # roll back: dataset stays readable
-        raise RuntimeError(f"cdc swap failed: could not move {tmp} into place")
-    fs.delete(Path(old), True)
-    spark.catalog.refreshByPath(path)
-
-    n_upserted = upserts.count()
-    n_deleted = winners.filter(F.col(op_col) == "d").count()
     return {
-        "upserted": n_upserted,
-        "deleted": n_deleted,
-        "total": spark.read.parquet(path).count(),
+        "upserted": upserts.count(),
+        "deleted": winners.filter(F.col(op_col) == "d").count(),
+        "total": total,
     }

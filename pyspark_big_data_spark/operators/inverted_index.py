@@ -54,6 +54,8 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from pyspark_big_data_spark.operators.versioned import path_exists
+
 TOKEN_SPLIT = "[^a-z0-9]+"
 
 DOCLEN_DIR = "doclen"
@@ -154,13 +156,10 @@ def read_term_postings(
     if not qterms:
         raise ValueError("need at least one term")
     buckets = sorted(set(term_buckets(spark, qterms, n_buckets).values()))
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
     parts = []
     for b in buckets:
         path = f"{index_root.rstrip('/')}/bucket={b}"
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        if hpath.getFileSystem(hconf).exists(hpath):
+        if path_exists(spark, path):
             parts.append(spark.read.parquet(path))
     if not parts:
         return None, len(buckets)

@@ -1,10 +1,11 @@
 """Keyed upsert (MERGE) into a parquet dataset without a table format.
 
 Plain parquet has no transactional MERGE; the operational pattern is
-read -> anti-join out the updated keys -> union the new rows ->
-rewrite -> atomic rename swap (the same crash-safe swap as
-tools/compact_index.py, so a failed rewrite can never leave a
-half-written dataset). This is the CDC-apply shape for mutable
+read -> drop the updated keys -> union the new rows -> rewrite, and the
+rewrite publishes through ``versioned.replace_parquet`` (stage under a
+writer-unique name, rename the live dir aside and the staged one in,
+roll back if the move-in fails), so a failed rewrite can never leave a
+half-written dataset. This is the CDC-apply shape for mutable
 dimensions (customer records, document metadata) next to the engine's
 append-only corpora; at 100 TB you run it per partition (pass
 ``partition_by`` so only touched hive partitions rewrite their files
@@ -22,13 +23,23 @@ nondeterministic).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+from pyspark_big_data_spark.operators.versioned import replace_parquet
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+def _drop_keys(existing: DataFrame, keys: DataFrame, key: str) -> tuple[DataFrame, Observation]:
+    """``existing`` minus the rows whose ``key`` is in ``keys`` (one row
+    per key), plus an observation of {"rows": existing rows, "matched":
+    rows dropped} that fills in when the result is written. A flagged
+    left join instead of a left-anti join, so both counts come from the
+    rewrite itself rather than separate actions."""
+    obs = Observation()
+    flagged = existing.join(keys.select(key, F.lit(True).alias("_hit")), key, "left")
+    flagged = flagged.observe(
+        obs, F.count(F.lit(1)).alias("rows"), F.count("_hit").alias("matched")
+    )
+    return flagged.filter(F.col("_hit").isNull()).drop("_hit"), obs
 
 
 def upsert_parquet(
@@ -56,32 +67,12 @@ def upsert_parquet(
             f"vs updates {sorted(updates.columns)}"
         )
 
-    n_before = existing.count()
-    survivors = existing.join(updates.select(key), key, "left_anti")
-    n_survivors = survivors.count()
-    n_updates = updates.count()
-    merged = survivors.unionByName(updates)
-
-    tmp = path.rstrip("/") + ".upsert_tmp"
-    old = path.rstrip("/") + ".upsert_old"
-    writer = merged.write
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.mode("overwrite").parquet(tmp)
-
-    fs, hpath, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(hpath, Path(old)):
-        raise RuntimeError(f"upsert swap failed: could not move {path} aside")
-    if not fs.rename(Path(tmp), hpath):
-        fs.rename(Path(old), hpath)  # roll back: dataset stays usable
-        raise RuntimeError(f"upsert swap failed: could not move {tmp} into place")
-    fs.delete(Path(old), True)
-
+    survivors, seen = _drop_keys(existing, updates, key)
+    total = replace_parquet(survivors.unionByName(updates), path, partition_by)
     return {
-        "updated": n_before - n_survivors,
-        "inserted": n_updates - (n_before - n_survivors),
-        "total": n_survivors + n_updates,
+        "updated": seen.get["matched"],
+        "inserted": total - seen.get["rows"],
+        "total": total,
     }
 
 
@@ -93,8 +84,9 @@ def erase_keys_parquet(
     partition_by: list[str] | None = None,
 ) -> dict:
     """Right-to-be-forgotten delete: remove every row whose ``key`` is
-    in ``keys`` and rewrite the dataset through the same crash-safe
-    rename swap as ``upsert_parquet``. Returns {"erased": n, "kept": n}.
+    in ``keys`` and rewrite the dataset through
+    ``versioned.replace_parquet``, like ``upsert_parquet``. Returns
+    {"erased": n, "kept": n}.
 
     Idempotent by construction (erasing already-absent keys is a
     no-op rewrite), which is what a compliance replay needs — enabled
@@ -113,24 +105,6 @@ def erase_keys_parquet(
     swap)."""
     spark.catalog.refreshByPath(path)
     existing = spark.read.parquet(path)
-    n_before = existing.count()
-    survivors = existing.join(keys.select(key).distinct(), key, "left_anti")
-    n_kept = survivors.count()
-
-    tmp = path.rstrip("/") + ".erase_tmp"
-    old = path.rstrip("/") + ".erase_old"
-    writer = survivors.write
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.mode("overwrite").parquet(tmp)
-
-    fs, hpath, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(hpath, Path(old)):
-        raise RuntimeError(f"erase swap failed: could not move {path} aside")
-    if not fs.rename(Path(tmp), hpath):
-        fs.rename(Path(old), hpath)  # roll back: dataset stays usable
-        raise RuntimeError(f"erase swap failed: could not move {tmp} into place")
-    fs.delete(Path(old), True)
-
-    return {"erased": n_before - n_kept, "kept": n_kept}
+    survivors, seen = _drop_keys(existing, keys.select(key).distinct(), key)
+    kept = replace_parquet(survivors, path, partition_by)
+    return {"erased": seen.get["matched"], "kept": kept}

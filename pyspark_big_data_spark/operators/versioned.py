@@ -7,8 +7,8 @@ A versioned dataset is a directory of immutable full snapshots::
     root/v=2/ ...
 
 ``write_version`` stages the new snapshot in a temp dir and RENAMES it
-into ``v=N`` (N = latest + 1) — the same crash-safe single-rename seam
-as operators/upsert.py, so readers never observe a half-written
+into ``v=N`` (N = latest + 1) — a crash-safe single-rename commit
+(``commit_staged``), so readers never observe a half-written
 version: an interrupted write leaves only a stale temp dir that the
 next writer sweeps. ``read_version`` pins any historical version;
 ``latest_version`` resolves the newest COMMITTED one (rename is the
@@ -30,7 +30,10 @@ sidecars + broadcast anti-join reads) in operators/deletes.py,
 small-file compaction is ``compact_version`` below, and file-level
 APPEND deltas are ``append_version`` (O(delta) commits whose reads
 resolve a base-version chain) — every named format seam now has a
-working in-repo shape.
+working in-repo shape. Unversioned plain-parquet datasets (upsert,
+erasure, CDC apply, the streaming maintainers, index compaction) are
+rewritten in place by ``replace_parquet``, the module's one
+replace-by-rename seam.
 
 The honest economics at 100 TB: REWRITES (update-in-place via
 write_version) are still full-copy, so keep those for DIMENSION-sized
@@ -57,13 +60,22 @@ import re
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """True iff ``path`` exists on whatever filesystem Spark resolves it
+    to. An explicit probe, not try/except around a read: a corrupted or
+    partially-written dataset must fail its reader, never be silently
+    treated as absent."""
+    fs, hpath, _ = _fs(spark, path)
+    return fs.exists(hpath)
 
 
 _V_RE = re.compile(r"^v=(\d+)$")
@@ -825,6 +837,58 @@ def commit_staged(fs, jvm, root: str, staging: str, n: int, prefix: str = "v=") 
     fs.delete(Path(nested), True)
     fs.delete(Path(staging), True)
     return False
+
+
+def replace_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
+    """Replace the plain-parquet dataset at ``path`` with ``df`` (or
+    create it); returns the number of rows written. The one seam for
+    in-place rewrites of unversioned datasets (upsert, erasure, CDC
+    apply, the CMS grid, the dedup cluster map, index compaction, PCA
+    moments).
+
+    ``df`` is written to a writer-unique, dot-prefixed sibling
+    ``.{name}.{token}.staging`` (Spark's file index skips it, and
+    concurrent writers never share staging bytes), so ``df`` may be a
+    plan over ``path`` itself. Then the live directory is renamed aside
+    and the staged one in; if the move-in fails the live directory is
+    renamed back and ``RuntimeError`` names ``path``. The aside copy is
+    deleted only after a successful swap. The row count comes from an
+    observation on the write itself, not a second action.
+
+    Remaining window: between the two renames ``path`` does not exist,
+    so a crash there leaves the previous data only at the aside name."""
+    spark = df.sparkSession
+    fs, hpath, jvm = _fs(spark, path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    parent, name = os.path.split(path.rstrip("/"))
+    token = uuid.uuid4().hex
+    staging = os.path.join(parent, f".{name}.{token}.staging")
+    aside = Path(os.path.join(parent, f".{name}.{token}.aside"))
+
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    try:
+        writer.parquet(staging)
+    except BaseException:
+        fs.delete(Path(staging), True)
+        raise
+    live = fs.exists(hpath)
+    if live and not fs.rename(hpath, aside):
+        fs.delete(Path(staging), True)
+        raise RuntimeError(f"replace of {path} failed: could not move it aside")
+    if not fs.rename(Path(staging), hpath):
+        restored = not live or fs.rename(aside, hpath)
+        fs.delete(Path(staging), True)
+        raise RuntimeError(
+            f"replace of {path} failed: could not move the new data into place "
+            + ("(previous data restored)" if restored else f"(previous data left at {aside})")
+        )
+    if live:
+        fs.delete(aside, True)
+    spark.catalog.refreshByPath(path)
+    return obs.get["rows"]
 
 
 def _validate_append_base(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyspark_big_data_spark.functions import vectors as V
 from pyspark_big_data_spark.io import read_table
+from pyspark_big_data_spark.operators.versioned import path_exists, replace_parquet
 from pyspark_big_data_spark.queries.registry import register
 
 _R = 8  # output dimensionality
@@ -131,19 +132,16 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # projection; only new data is touched.
 
 
-def _moments_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    return hp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hp)
-
-
 def update_moments(batch: DataFrame, dim: int, path: str) -> tuple[np.ndarray, np.ndarray, int]:
     """Fold one batch of (vec_id, e) into the persisted moments at
     ``path`` (absent = first batch); returns the UPDATED (mean, cov, n).
 
     The fold is numerically exact w.r.t. batching: partial sums add, so
     any split of the corpus into batches yields the same moments up to
-    float addition order (asserted in tests/test_pca.py)."""
+    float addition order (asserted in tests/test_pca.py). The new
+    moments publish through ``versioned.replace_parquet``: a failed
+    swap leaves the previous moments in place, never a restart from
+    zero."""
     spark = batch.sparkSession
     import pandas as pd
 
@@ -171,7 +169,7 @@ def update_moments(batch: DataFrame, dim: int, path: str) -> tuple[np.ndarray, n
         else np.zeros((dim, dim))
     )
 
-    if _moments_exists(spark, path):
+    if path_exists(spark, path):
         prev = spark.read.parquet(path).collect()[0]
         n += prev["n"]
         s = s + np.array(prev["s"])
@@ -179,14 +177,7 @@ def update_moments(batch: DataFrame, dim: int, path: str) -> tuple[np.ndarray, n
 
     row = [(int(n), [float(v) for v in s], [float(v) for v in m2.ravel()])]
     upd = spark.createDataFrame(row, "n long, s array<double>, m2 array<double>")
-    tmp = path.rstrip("/") + ".tmp"
-    upd.coalesce(1).write.mode("overwrite").parquet(tmp)
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(Path(path), True)
-    if not fs.rename(Path(tmp), Path(path)):
-        raise RuntimeError(f"moments update failed: could not move {tmp} into place")
+    replace_parquet(upd.coalesce(1), path)
 
     mean = s / n
     cov = m2 / n - np.outer(mean, mean)

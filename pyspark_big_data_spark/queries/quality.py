@@ -275,8 +275,8 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     order keys) and customer -> events (user activity). The audit is
     the dry-run a compliance pipeline reviews before the destructive
     pass; the destructive pass itself is
-    operators/upsert.py::erase_keys_parquet per relation (crash-safe
-    rename swap, idempotent on replay), tested in tests/test_upsert.py.
+    operators/upsert.py::erase_keys_parquet per relation (rewritten
+    through versioned.replace_parquet, idempotent on replay), tested in tests/test_upsert.py.
 
     Shape: each relation contributes one semi-join count + one
     anti-join count against the (broadcastable by construction) probe
@@ -347,8 +347,8 @@ FROM after2 ORDER BY c_custkey
 def upsert_merge_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE semantics driver-verified (the lakehouse-gap witness,
     MIGRATION.md): run TWO sequential keyed upserts through
-    operators/upsert.py::upsert_parquet — anti-join out updated keys,
-    union updates, rewrite, crash-safe rename swap — against a mutable
+    operators/upsert.py::upsert_parquet — drop updated keys, union
+    updates, rewrite through versioned.replace_parquet — against a mutable
     customer dimension written as hive-partitioned parquet, then return
     the FINAL persisted dataset row-for-row. Merge 1 exercises both
     MERGE arms (matched-UPDATE: c_custkey % 7 == 0 gets +1000.0 /

@@ -125,8 +125,8 @@ def streaming_cms_replay_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the streaming_dedup_replay_witness pattern applied to the
     continuous CMS index): replay the corpus through the availableNow
     foreachBatch loop of streaming/cms_maintain.py — one micro-batch
-    per JSONL file, each folded into the persisted d x w grid with the
-    crash-safe swap and the in-grid redelivery marker — then return the
+    per JSONL file, each folded into the persisted d x w grid through
+    versioned.replace_parquet with the in-grid redelivery marker — then return the
     PERSISTED grid itself. Because CMS cells ADD, the batch-folded grid
     must equal the single-pass grid CELL FOR CELL, and DuckDB
     recomputes that single-pass grid independently — so this row

@@ -123,7 +123,7 @@ def write_release_manifest(spark: SparkSession, out_path: str) -> dict:
         },
     }
     payload = json.dumps(manifest, sort_keys=True, indent=1)
-    from pyspark_big_data_spark.operators.upsert import _fs
+    from pyspark_big_data_spark.operators.versioned import _fs
 
     fs, _, jvm = _fs(spark, out_path)
     Path = jvm.org.apache.hadoop.fs.Path

@@ -8,8 +8,9 @@ tests/test_sketch_freq.py::test_cms_cells_merge_across_shards). This
 module is the operational loop around that algebra, shaped like
 streaming/incremental_dedup.py:
 
-- ``update_cms_index`` folds one batch into the persisted grid with a
-  crash-safe tmp -> rename swap (operators/upsert.py mechanics);
+- ``update_cms_index`` folds one batch into the persisted grid and
+  publishes it through ``versioned.replace_parquet`` (stage, rename
+  the live grid aside and the staged one in, roll back on failure);
 - idempotence under foreachBatch REDELIVERY is load-bearing: adds are
   not naturally idempotent (a re-applied batch double-counts), so the
   applied batch_id rides ON EVERY GRID ROW and is swapped atomically
@@ -30,9 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyspark_big_data_spark.functions import text as TX
 from pyspark_big_data_spark.io import ensure_min_partitions
-from pyspark_big_data_spark.operators.upsert import _fs
+from pyspark_big_data_spark.operators.versioned import path_exists, replace_parquet
 from pyspark_big_data_spark.queries.sketch_freq import cms_cells, cms_estimate
-from pyspark_big_data_spark.streaming.incremental_dedup import _index_exists
 
 
 def _batch_grid(batch: DataFrame, text_col: str = "text") -> DataFrame:
@@ -49,7 +49,7 @@ def update_cms_index(
     ``{index_dir}/grid``. Returns {"applied": bool, "cells": n}."""
     spark = batch.sparkSession
     grid_path = f"{index_dir}/grid"
-    if _index_exists(spark, grid_path):
+    if path_exists(spark, grid_path):
         old = spark.read.parquet(grid_path)
         last = old.agg(F.max("last_batch_id")).first()[0]
         if last is not None and batch_id <= last:
@@ -61,28 +61,10 @@ def update_cms_index(
             .agg(F.sum("cell").alias("cell"))
         )
     else:
-        old = None
         merged = _batch_grid(batch, text_col)
 
     out = merged.withColumn("last_batch_id", F.lit(batch_id).cast("long"))
-    tmp = grid_path + ".tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-
-    fs, hpath, jvm = _fs(spark, grid_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if old is not None:
-        bak = grid_path + ".old"
-        if not fs.rename(hpath, Path(bak)):
-            raise RuntimeError(f"cms swap failed: could not move {grid_path} aside")
-        if not fs.rename(Path(tmp), hpath):
-            fs.rename(Path(bak), hpath)  # roll back
-            raise RuntimeError(f"cms swap failed: could not move {tmp} into place")
-        fs.delete(Path(bak), True)
-    else:
-        if not fs.rename(Path(tmp), hpath):
-            raise RuntimeError(f"cms swap failed: could not move {tmp} into place")
-    return {"applied": True, "cells": n}
+    return {"applied": True, "cells": replace_parquet(out, grid_path)}
 
 
 def run_cms_stream(docs_stream: DataFrame, index_dir: str, checkpoint_dir: str):

@@ -34,18 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pyspark_big_data_spark.functions import vectors as V
+from pyspark_big_data_spark.operators.versioned import path_exists
 
 _NPROBE = 4
 _TOP_K = 5
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    """Explicit existence probe (see incremental_dedup._index_exists:
-    a corrupted index must fail the batch, never read as empty)."""
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.exists(hadoop_path)
 
 
 def _dim_of(df: DataFrame, vec_col: str) -> int:
@@ -117,7 +109,7 @@ def process_vector_batch(
     neighbor. The returned frame is localCheckpoint-ed before the
     append so it can never lazily re-read the mutated index."""
     spark = batch.sparkSession
-    if not _exists(spark, f"{index_dir}/centroids"):
+    if not path_exists(spark, f"{index_dir}/centroids"):
         raise ValueError(
             f"incremental ANN index at {index_dir} is missing centroids; "
             "seed it with build_ivf_index first"

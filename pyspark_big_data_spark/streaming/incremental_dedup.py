@@ -29,20 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyspark_big_data_spark.operators import dedup as DD
+from pyspark_big_data_spark.operators.versioned import path_exists, replace_parquet
 from pyspark_big_data_spark.queries.dedup import _EST_THRESHOLD
-
-
-def _index_exists(spark: SparkSession, path: str) -> bool:
-    """True iff `path` exists on whatever filesystem Spark resolves it to.
-
-    An explicit existence probe, not try/except around the read: a
-    corrupted or partially-written index must FAIL the batch, never be
-    silently treated as empty — the whole contract of this component is
-    "never miss an old x new pair"."""
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.exists(hadoop_path)
 
 
 def process_document_batch(
@@ -59,7 +47,7 @@ def process_document_batch(
     batch_sigs = DD.minhash_signatures(DD.shingles(batch)).cache()
     batch_bands = DD.band_keys(batch_sigs).cache()
 
-    if _index_exists(spark, f"{index_dir}/sigs"):
+    if path_exists(spark, f"{index_dir}/sigs"):
         # Read errors past this point (corrupt footer, truncated part
         # file, missing bands dir) propagate and fail the batch.
         idx_sigs = spark.read.parquet(f"{index_dir}/sigs")
@@ -111,24 +99,25 @@ def update_cluster_map(batch_ids: DataFrame, pairs: DataFrame, map_dir: str) -> 
     """Fold one batch into the persisted duplicate-cluster map: read the
     (id, component) parquet at ``map_dir`` (absent = first batch), merge
     via operators.graph.merge_components_incremental (CC only on the
-    contracted touched subgraph), overwrite the map, return it.
+    contracted touched subgraph), replace the map through
+    ``versioned.replace_parquet``, return it.
 
     Pairs should be the batch's NEW pairs (old x new and new x new) —
     exactly what process_document_batch returns — so chaining the two
     per micro-batch maintains survivor-ready clusters continuously
     without ever re-clustering the corpus. The merged frame is
-    localCheckpoint-ed before the overwrite so the write never races
-    its own read path."""
+    localCheckpoint-ed so the returned frame never re-reads the
+    swapped-out map."""
     from pyspark_big_data_spark.operators.graph import merge_components_incremental
 
     spark = batch_ids.sparkSession
     ids = batch_ids.select(F.col(batch_ids.columns[0]).alias("id"))
-    if _index_exists(spark, map_dir):
+    if path_exists(spark, map_dir):
         cmap = spark.read.parquet(map_dir)
     else:
         cmap = spark.createDataFrame([], "id long, component long")
     updated = merge_components_incremental(cmap, ids, pairs).localCheckpoint(eager=True)
-    updated.write.mode("overwrite").parquet(map_dir)
+    replace_parquet(updated, map_dir)
     return updated
 
 

@@ -19,7 +19,7 @@ state must outlive any watermark horizon, stay offline-queryable
 and be compactable — per-append small files inside each bucket are the
 usual streaming-ingest fragmentation, bounded offline exactly like the
 minhash band index (tools/compact_index.py pattern: rewrite one bucket
-directory, rename-swap). Doc ids are assumed unique across batches
+directory through versioned.replace_parquet). Doc ids are assumed unique across batches
 (upstream ingest dedup, streaming/corpus_ingest.py's contract);
 re-delivered files are excluded by the file source's checkpoint.
 

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pyspark_big_data_spark.operators.upsert import upsert_parquet
-from pyspark_big_data_spark.streaming.incremental_dedup import _index_exists
+from pyspark_big_data_spark.operators.versioned import path_exists
 
 # persisted dimension schema (typed; the oracled query's formatted
 # strings are a VIEW over this): c_custkey, version, priority,
@@ -53,7 +53,7 @@ def process_order_batch(batch: DataFrame, dim_dir: str) -> dict:
         F.col("o_orderkey").alias("okey"),
     )
 
-    if _index_exists(spark, dim_dir):
+    if path_exists(spark, dim_dir):
         dim = _dim_view(spark, dim_dir)
         cur = dim.filter(F.col("valid_to_ts").isNull()).select(
             "c_custkey",

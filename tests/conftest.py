@@ -50,3 +50,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+@pytest.fixture
+def fail_move_in(monkeypatch):
+    """Call to make ``versioned.replace_parquet``'s move-in rename (the
+    staged dir onto the live path) fail while the move-aside and
+    rollback renames still succeed; ``monkeypatch.undo()`` disarms."""
+    from pyspark_big_data_spark.operators import versioned
+
+    real_fs = versioned._fs
+
+    def breaking_fs(spark_, path):
+        fs, hpath, jvm = real_fs(spark_, path)
+
+        class BrokenFs:
+            def __getattr__(self, name):
+                return getattr(fs, name)
+
+            def rename(self, src, dst):
+                if str(src).endswith(".staging"):
+                    return False
+                return fs.rename(src, dst)
+
+        return BrokenFs(), hpath, jvm
+
+    return lambda: monkeypatch.setattr(versioned, "_fs", breaking_fs)

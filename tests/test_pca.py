@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from pyspark_big_data_spark.io import read_table
@@ -130,3 +131,34 @@ def test_incremental_moments_equal_full_pass(spark, sf_dir, tmp_path):
     _, comps_p = principal_components(cov_p, _R)
     _, comps_f = principal_components(cov_f, _R)
     assert np.allclose(np.abs(comps_p), np.abs(comps_f), atol=1e-7)
+
+
+def test_failed_moments_swap_keeps_previous_moments(
+    spark, sf_dir, tmp_path, monkeypatch, fail_move_in
+):
+    """A failed move-in must leave the previous moments readable and
+    unchanged, so the next batch folds onto them instead of silently
+    restarting from zero."""
+    from pyspark_big_data_spark.queries.pca_reduce import corpus_mean_cov, update_moments
+
+    emb = _emb(spark, sf_dir)
+    dim = len(emb.first()["e"])
+    path = str(tmp_path / "moments")
+    for shard in range(2):
+        update_moments(emb.filter(F.col("vec_id") % 3 == shard), dim, path)
+    before = spark.read.parquet(path).collect()
+
+    last = emb.filter(F.col("vec_id") % 3 == 2)
+    fail_move_in()
+    with pytest.raises(RuntimeError, match="could not move"):
+        update_moments(last, dim, path)
+    monkeypatch.undo()
+
+    spark.catalog.refreshByPath(path)
+    assert spark.read.parquet(path).collect() == before
+    # the retried batch folds onto the kept moments: full-pass result
+    mean_i, cov_i, n_i = update_moments(last, dim, path)
+    mean_f, cov_f, n_f = corpus_mean_cov(emb, dim)
+    assert n_i == n_f
+    assert np.allclose(mean_i, mean_f, atol=1e-10)
+    assert np.allclose(cov_i, cov_f, atol=1e-8)

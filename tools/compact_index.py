@@ -12,13 +12,15 @@ the band_no partitioning the probe-side pruning relies on.
 
     python tools/compact_index.py <index_dir> [--target-mb 128]
 
-Safety: the rewrite goes to {path}.compact_tmp first, then the old dir
-is moved aside and the tmp swapped in (pure renames — atomic on a
-HDFS-like FS per directory); the old dir is only deleted after the
-swap. A crash mid-swap leaves either the old or the new complete
-directory plus a leftover to clean up — never a half-written index the
-silent-empty-read contract (incremental_dedup._index_exists) would
-mistake for data.
+Safety: the rewrite publishes through
+``pyspark_big_data_spark.operators.versioned.replace_parquet`` — staged
+under a writer-unique dot-prefixed sibling, then the old dir is renamed
+aside and the staged one in (pure renames, atomic per directory on an
+HDFS-like FS), with the old dir renamed back if the move-in fails and
+deleted only after the swap. A failed swap never leaves a half-written
+index the silent-empty-read contract (``versioned.path_exists``) would
+mistake for data; a crash between the two renames leaves the old index
+under its aside name.
 """
 
 from __future__ import annotations
@@ -28,11 +30,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+from pyspark_big_data_spark.operators.versioned import _fs, replace_parquet  # noqa: E402
 
 
 def dataset_file_stats(spark, path: str) -> tuple[int, int]:
@@ -63,25 +61,7 @@ def compact_dataset(
     # partitioned data the repartition is BY the partition columns so
     # each hive partition lands in as few tasks as the size warrants.
     n_out = max(1, int(bytes_before / (target_mb * 1024 * 1024)) + 1)
-    tmp = path.rstrip("/") + ".compact_tmp"
-    old = path.rstrip("/") + ".compact_old"
-    if partition_by:
-        writer = df.repartition(n_out, *[df[c] for c in partition_by]).write.partitionBy(
-            *partition_by
-        )
-    else:
-        writer = df.repartition(n_out).write
-    writer.mode("overwrite").parquet(tmp)
-
-    fs, hpath, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(hpath, Path(old)):
-        raise RuntimeError(f"compaction swap failed: could not move {path} aside")
-    if not fs.rename(Path(tmp), hpath):
-        # roll back so the index stays usable
-        fs.rename(Path(old), hpath)
-        raise RuntimeError(f"compaction swap failed: could not move {tmp} into place")
-    fs.delete(Path(old), True)
+    replace_parquet(df.repartition(n_out, *[df[c] for c in partition_by or []]), path, partition_by)
 
     files_after, bytes_after = dataset_file_stats(spark, path)
     return {
