@@ -63,8 +63,7 @@ from pyspark_big_data_spark.operators.deletes import (
     _embedded_deletes_dir,
     _guard_reserved_address_cols,
     _qualified_file_expr,
-    list_delete_commits,
-    list_pos_delete_commits,
+    external_vectors,
 )
 from pyspark_big_data_spark.operators.versioned import (
     list_versions,
@@ -89,12 +88,6 @@ def _range_commits(
     no full rewrite) plus the typed feed's own: EXTERNAL post-hoc
     vectors against an in-range version refuse; EMBEDDED vectors are
     the point and pass."""
-    from pyspark_big_data_spark.operators.deletes import (
-        DELETES_DIR,
-        POS_DELETES_DIR,
-        _versions_with_vector_dirs,
-    )
-
     committed = set(list_versions(spark, root))
     for v in (from_version, to_version):
         if v not in committed:
@@ -103,10 +96,6 @@ def _range_commits(
         raise ValueError(
             f"from_version {from_version} is newer than to_version {to_version}"
         )
-    # two parent listings bound the per-version external-vector probes
-    # over the whole walk (r14)
-    eq_vs = _versions_with_vector_dirs(spark, root, DELETES_DIR)
-    pos_vs = _versions_with_vector_dirs(spark, root, POS_DELETES_DIR)
     chain: list[int] = []
     v = to_version
     while v != from_version:
@@ -119,17 +108,6 @@ def _range_commits(
                 f"v={from_version} and v={to_version}; use a keyed "
                 "snapshot diff instead"
             )
-        if (v in eq_vs and list_delete_commits(spark, root, v)) or (
-            v in pos_vs and list_pos_delete_commits(spark, root, v)
-        ):
-            raise ValueError(
-                f"v={v} under {root} carries EXTERNAL deletion vectors "
-                "(post-hoc delete_keys/delete_positions commits) — those "
-                "mutate an already-committed version after the fact, so a "
-                "version-interval feed cannot place them as events; "
-                "commit removals as versions (delete_where / update_where "
-                "/ merge_into) to make them feedable"
-            )
         chain.append(v)
         v = int(base)
         if v < from_version:
@@ -137,6 +115,16 @@ def _range_commits(
                 f"v={to_version} under {root} does not chain through "
                 f"v={from_version} (chain skips to v={v})"
             )
+    external = external_vectors(spark, root, chain)
+    if external:
+        raise ValueError(
+            f"v={next(iter(external))} under {root} carries EXTERNAL "
+            "deletion vectors (post-hoc delete_keys/delete_positions "
+            "commits) — those mutate an already-committed version after "
+            "the fact, so a version-interval feed cannot place them as "
+            "events; commit removals as versions (delete_where / "
+            "update_where / merge_into) to make them feedable"
+        )
     return sorted(chain)
 
 

@@ -34,6 +34,16 @@ their positional vectors INSIDE the committed version directory
 scans), which makes a MERGE one atomic rename; the chain read picks
 them up like any other member vector.
 
+Layout: external vectors live at ``root/_deletes/v=N/d=K`` (equality)
+and ``root/_pos_deletes/v=N/d=K`` (positional); MERGE-embedded ones at
+``v=N/_merge_deletes``. No other operator module knows these names.
+``external_vectors`` is the one census of committed external vectors
+over a set of chain members (two parent listings, then one ``d=``
+listing per member that has a tree); callers that also need embedded
+vectors ask ``_embedded_deletes_dir``, which answers from the memoized
+manifest. ``vector_dirs`` names the external trees that go with a
+version when retention or a rollback deletes it.
+
 Commit protocol: each delete commit stages under
 ``root/_deletes/v=N/.staging_dK`` and publishes by the same verified
 single-rename as ``write_version`` (rename is the commit; a race loser
@@ -64,8 +74,8 @@ full-rewrite variant is operators/upsert.py::erase_keys_parquet).
 from __future__ import annotations
 
 import json
-import re
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -74,6 +84,7 @@ from pyspark_big_data_spark.operators.versioned import (
     _fs,
     _resolve_version,
     commit_staged,
+    list_numbered_dirs,
     list_versions,
     manifest,
     read_version,
@@ -83,8 +94,6 @@ from pyspark_big_data_spark.operators.versioned import (
 )
 
 DELETES_DIR = "_deletes"
-
-_D_RE = re.compile(r"^d=(\d+)$")
 
 # Default ceiling for broadcasting the tombstone side of the MOR
 # anti-join: ~10M keys (~100-200 MB serialized) is the upper edge of a
@@ -96,47 +105,13 @@ def _deletes_root(root: str, version: int) -> str:
     return f"{root.rstrip('/')}/{DELETES_DIR}/v={version}"
 
 
-def _versions_with_vector_dirs(spark: SparkSession, root: str, sub: str) -> set[int]:
-    """Version numbers that have ANY ``v=N`` dir under ``root/<sub>`` —
-    ONE parent listing instead of an exists-probe per chain member.
-    A SUPERSET signal: a listed dir may hold only staging (zero
-    committed ``d=K``), so presence still needs the per-version
-    listing — but absence (the common case on merge/append chains,
-    whose vectors are MERGE-embedded, not external) proves there is
-    nothing to list. Always a LIVE listing, never memoized: external
-    vectors are mutable post-commit (r13 memory note)."""
-    proot = f"{root.rstrip('/')}/{sub}"
-    fs, hroot, jvm = _fs(spark, proot)
-    if not fs.exists(hroot):
-        return set()
-    out: set[int] = set()
-    for status in fs.listStatus(hroot):
-        if not status.isDirectory():
-            continue
-        m = re.match(r"^v=(\d+)$", status.getPath().getName())
-        if m:
-            out.add(int(m.group(1)))
-    return out
-
-
 def list_delete_commits(
     spark: SparkSession, root: str, version: int
 ) -> list[int]:
-    """Committed delete-commit ids against ``v=version``, ascending.
-    Like versions, a commit counts iff its dir sits at ``d=K`` (the
-    rename is the commit); staging dirs never match."""
-    droot = _deletes_root(root, version)
-    fs, hroot, jvm = _fs(spark, droot)
-    if not fs.exists(hroot):
-        return []
-    out = []
-    for status in fs.listStatus(hroot):
-        if not status.isDirectory():
-            continue
-        m = _D_RE.match(status.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    """Committed equality-delete commit ids against ``v=version``,
+    ascending. Like versions, a commit counts iff its dir sits at
+    ``d=K`` (the rename is the commit); staging dirs never match."""
+    return list_numbered_dirs(spark, _deletes_root(root, version), "d=")
 
 
 def _write_rows_sidecar(spark, fs, jvm, staging: str) -> None:
@@ -153,19 +128,20 @@ def _write_rows_sidecar(spark, fs, jvm, staging: str) -> None:
         out.close()
 
 
-def _commit_rows(spark: SparkSession, commit_dir: str) -> int:
-    """Row count of one tombstone commit: the ``_rows.json`` sidecar
-    when present, else a footer-only count (pre-r11 commits)."""
+def _commit_rows(spark: SparkSession, commit_dir: str) -> tuple[int, bool]:
+    """``(rows, has_sidecar)`` of one tombstone commit: the row count
+    comes from the ``_rows.json`` sidecar when present, else from a
+    footer-only count (pre-r11 commits, which predate the sidecar)."""
     fs, _, jvm = _fs(spark, commit_dir)
     side = jvm.org.apache.hadoop.fs.Path(f"{commit_dir}/_rows.json")
     if fs.exists(side):
         stream = fs.open(side)
         try:
-            return int(json.loads(bytes(stream.readAllBytes()))["rows"])
+            return int(json.loads(bytes(stream.readAllBytes()))["rows"]), True
         finally:
             stream.close()
     spark.catalog.refreshByPath(commit_dir)
-    return spark.read.parquet(commit_dir).count()
+    return spark.read.parquet(commit_dir).count(), False
 
 
 def delete_keys(
@@ -199,7 +175,10 @@ def delete_keys(
             f"delete key {key!r} is not a column of v={version} "
             f"(schema: {sorted(snap_cols)})"
         )
-    existing_key = _delete_key_col(spark, root, version)
+    commits = list_delete_commits(spark, root, version)
+    existing_key = _delete_key_col(
+        spark, version, _delete_commit_dirs(root, version, commits)
+    )
     if existing_key is not None and existing_key != key:
         raise ValueError(
             f"v={version} already has tombstones keyed by {existing_key!r}; "
@@ -225,21 +204,23 @@ def delete_keys(
         # lost the race: another deleter took d=K; retry at K+1
 
 
-def _delete_key_col(
-    spark: SparkSession, root: str, version: int
-) -> str | None:
-    """The single key column of the committed tombstones for
-    ``v=version`` (None when there are none). Enforces the one-key
-    contract on read, so a foreign file dropped into the deletes tree
-    fails loudly instead of silently skewing the anti-join."""
-    commits = list_delete_commits(spark, root, version)
-    if not commits:
-        return None
-    cols = set()
+def _delete_commit_dirs(root: str, version: int, commits: list[int]) -> list[str]:
     droot = _deletes_root(root, version)
-    for k in commits:
-        spark.catalog.refreshByPath(f"{droot}/d={k}")
-        cols.update(spark.read.parquet(f"{droot}/d={k}").columns)
+    return [f"{droot}/d={k}" for k in commits]
+
+
+def _delete_key_col(spark: SparkSession, version: int, paths: list[str]) -> str | None:
+    """The single key column of the equality tombstones committed at
+    ``paths`` for ``v=version`` (None when there are none). Enforces
+    the one-key contract on read, so a foreign file dropped into the
+    deletes tree fails loudly instead of silently skewing the
+    anti-join."""
+    cols = set()
+    for p in paths:
+        spark.catalog.refreshByPath(p)
+        cols.update(spark.read.parquet(p).columns)
+    if not cols:
+        return None
     if len(cols) != 1:
         raise ValueError(
             f"tombstones of v={version} carry mixed key columns "
@@ -259,13 +240,11 @@ def deleted_keys(
     change the result — and the cross-commit distinct was a full
     shuffle re-paid on every evaluation of every MOR plan."""
     version = _resolve_version(spark, root, version)
-    key = _delete_key_col(spark, root, version)
+    commits = list_delete_commits(spark, root, version)
+    paths = _delete_commit_dirs(root, version, commits)
+    key = _delete_key_col(spark, version, paths)
     if key is None:
         return None, None
-    droot = _deletes_root(root, version)
-    paths = [f"{droot}/d={k}" for k in list_delete_commits(spark, root, version)]
-    for p in paths:
-        spark.catalog.refreshByPath(p)
     return spark.read.parquet(*paths), key
 
 
@@ -339,18 +318,43 @@ def _embedded_deletes_dir(
 def list_pos_delete_commits(
     spark: SparkSession, root: str, version: int
 ) -> list[int]:
-    droot = _pos_deletes_root(root, version)
-    fs, hroot, jvm = _fs(spark, droot)
-    if not fs.exists(hroot):
-        return []
-    out = []
-    for status in fs.listStatus(hroot):
-        if not status.isDirectory():
-            continue
-        m = _D_RE.match(status.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    """Committed positional-delete commit ids against ``v=version``,
+    ascending."""
+    return list_numbered_dirs(spark, _pos_deletes_root(root, version), "d=")
+
+
+def vector_dirs(root: str, version: int) -> list[str]:
+    """The external deletion-vector trees pinned to ``v=version`` (equality
+    and positional). Whoever deletes the version deletes these with it;
+    embedded MERGE vectors live inside ``v=version`` itself."""
+    return [_deletes_root(root, version), _pos_deletes_root(root, version)]
+
+
+def external_vectors(
+    spark: SparkSession, root: str, versions: Iterable[int]
+) -> dict[int, tuple[list[int], list[int]]]:
+    """The census of EXTERNAL deletion vectors (``delete_keys`` /
+    ``delete_positions`` commits) over ``versions``: for each member
+    with at least one committed external vector, its ``(equality,
+    positional)`` commit ids, in the order ``versions`` gives.
+
+    Two parent listings bound the probes: a member with no ``v=N``
+    dir under either tree has nothing to list, which is the common
+    case for merge/append chains, whose vectors are MERGE-embedded
+    (ask ``_embedded_deletes_dir`` for those). A listed dir may hold
+    only staging, so the members inside those sets pay one ``d=``
+    listing each. Always LIVE listings, never memoized: external
+    vectors are mutable post-commit."""
+    base = root.rstrip("/")
+    eq_vs = set(list_numbered_dirs(spark, f"{base}/{DELETES_DIR}", "v="))
+    pos_vs = set(list_numbered_dirs(spark, f"{base}/{POS_DELETES_DIR}", "v="))
+    out: dict[int, tuple[list[int], list[int]]] = {}
+    for v in versions:
+        eq = list_delete_commits(spark, root, v) if v in eq_vs else []
+        pos = list_pos_delete_commits(spark, root, v) if v in pos_vs else []
+        if eq or pos:
+            out[v] = (eq, pos)
+    return out
 
 
 def has_any_delete_vectors(
@@ -359,19 +363,11 @@ def has_any_delete_vectors(
     """True iff ANY chain member of ``v=version`` carries equality,
     positional, or embedded (MERGE) deletion vectors — the question
     every physical-read consumer (compaction, plain appends, CDF)
-    must ask before trusting ``read_version``. Two parent listings
-    answer the external-vector side for the whole chain (r14); only
-    members inside those supersets pay the per-version listing."""
-    eq_vs = _versions_with_vector_dirs(spark, root, DELETES_DIR)
-    pos_vs = _versions_with_vector_dirs(spark, root, POS_DELETES_DIR)
-    for v in version_chain(spark, root, version):
-        if (
-            (v in eq_vs and list_delete_commits(spark, root, v))
-            or (v in pos_vs and list_pos_delete_commits(spark, root, v))
-            or _embedded_deletes_dir(spark, root, v) is not None
-        ):
-            return True
-    return False
+    must ask before trusting ``read_version``."""
+    members = version_chain(spark, root, version)
+    return bool(external_vectors(spark, root, members)) or any(
+        _embedded_deletes_dir(spark, root, v) is not None for v in members
+    )
 
 
 def with_positions(
@@ -446,11 +442,6 @@ def delete_positions(
             return k
 
 
-def _has_rows_sidecar(spark: SparkSession, commit_dir: str) -> bool:
-    fs, _, jvm = _fs(spark, commit_dir)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(f"{commit_dir}/_rows.json"))
-
-
 def _chain_vectors(spark: SparkSession, root: str, version: int):
     """Census of every deletion vector visible to a MOR read of
     ``v=version``: ``(eq, pos_paths, legacy_pos_paths, total_rows)``
@@ -469,29 +460,22 @@ def _chain_vectors(spark: SparkSession, root: str, version: int):
     pos_paths: list[str] = []
     legacy_pos_paths: list[str] = []
     total_rows = 0
-    # two parent listings bound the external-vector probes for the
-    # whole chain (r14): members outside these supersets skip their
-    # per-version listings entirely — the common case for merge/append
-    # chains, whose vectors are MERGE-embedded
-    eq_vs = _versions_with_vector_dirs(spark, root, DELETES_DIR)
-    pos_vs = _versions_with_vector_dirs(spark, root, POS_DELETES_DIR)
-    for v in version_chain(spark, root, version):
-        keys_df, kcol = (
-            deleted_keys(spark, root, v) if v in eq_vs else (None, None)
-        )
-        if keys_df is not None:
-            eq.append((v, keys_df, kcol))
-            droot = _deletes_root(root, v)
-            for k in list_delete_commits(spark, root, v):
-                total_rows += _commit_rows(spark, f"{droot}/d={k}")
+    members = version_chain(spark, root, version)
+    external = external_vectors(spark, root, members)
+    for v in members:
+        eq_ids, pos_ids = external.get(v, ([], []))
+        paths = _delete_commit_dirs(root, v, eq_ids)
+        kcol = _delete_key_col(spark, v, paths)
+        if kcol is not None:
+            eq.append((v, spark.read.parquet(*paths), kcol))
+            total_rows += sum(_commit_rows(spark, p)[0] for p in paths)
         proot = _pos_deletes_root(root, v)
-        for k in list_pos_delete_commits(spark, root, v) if v in pos_vs else []:
+        for k in pos_ids:
             p = f"{proot}/d={k}"
-            if _has_rows_sidecar(spark, p):
-                pos_paths.append(p)
-            else:  # pre-r11 commit: bare-basename addresses
-                legacy_pos_paths.append(p)
-            total_rows += _commit_rows(spark, p)
+            rows, has_sidecar = _commit_rows(spark, p)
+            # no sidecar: a pre-r11 commit with bare-basename addresses
+            (pos_paths if has_sidecar else legacy_pos_paths).append(p)
+            total_rows += rows
         emb = _embedded_deletes_dir(spark, root, v)
         if emb is not None:
             # embedded vectors arrived WITH the qualified format —
@@ -499,7 +483,7 @@ def _chain_vectors(spark: SparkSession, root: str, version: int):
             pos_paths.append(emb)
             m = manifest(spark, root, v)
             n = (m or {}).get("pos_delete_rows")
-            total_rows += int(n) if n is not None else _commit_rows(spark, emb)
+            total_rows += int(n) if n is not None else _commit_rows(spark, emb)[0]
     return eq, pos_paths, legacy_pos_paths, total_rows
 
 
@@ -656,16 +640,6 @@ def read_version_mor(
     keep = (FILE_COL, POS_COL) if keep_addresses else ()
     drop = [c for c in added if c not in keep]
     return base.drop(*drop) if drop else base
-
-
-def read_version_mor_pos(
-    spark: SparkSession, root: str, version: int | None = None
-) -> DataFrame:
-    """Merge-on-read through BOTH vector types — kept as a named alias
-    of ``read_version_mor`` (which has applied positional AND equality
-    vectors chain-wide since r11) for the callers that grew up against
-    the split API."""
-    return read_version_mor(spark, root, version)
 
 
 def materialize_deletes(

@@ -57,6 +57,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pyspark_big_data_spark.operators.deletes import vector_dirs
 from pyspark_big_data_spark.operators.versioned import (
     _fs,
     _read_json,
@@ -352,8 +353,8 @@ def expire_group(
                     if age_s < reclaim_older_than:
                         continue  # fresh: could be a live writer's phase 1
                 fs.delete(Path(f"{troot}/v={v}"), True)
-                fs.delete(Path(f"{troot}/_deletes/v={v}"), True)
-                fs.delete(Path(f"{troot}/_pos_deletes/v={v}"), True)
+                for d in vector_dirs(troot, v):
+                    fs.delete(Path(d), True)
                 expired.setdefault(table, []).append(v)
                 from pyspark_big_data_spark.operators.versioned import (
                     invalidate_metadata_cache,

@@ -27,6 +27,7 @@ few hundred bytes regardless of snapshot size.
 
 from __future__ import annotations
 
+import itertools
 import json
 import re
 
@@ -35,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark_big_data_spark.operators.versioned import (
     _fs,
     _read_json,
+    list_numbered_dirs,
     list_versions,
     read_version,
 )
@@ -172,8 +174,6 @@ def read_by_tag(spark: SparkSession, root: str, name: str) -> DataFrame:
 
 _BRANCHES_DIR = "branches"
 
-_S_RE = re.compile(r"^s=(\d+)$")
-
 
 class BranchConflict(RuntimeError):
     """An optimistic branch update lost its race: the head moved after
@@ -186,27 +186,13 @@ def _branch_dir(root: str, name: str) -> str:
     return f"{_refs_root(root)}/{_BRANCHES_DIR}/{name}"
 
 
-def _branch_seqs(fs, jvm, bdir: str) -> list[int]:
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(Path(bdir)):
-        return []
-    out = []
-    for status in fs.listStatus(Path(bdir)):
-        if not status.isDirectory():
-            continue
-        m = _S_RE.match(status.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
 def _branch_state(
     spark: SparkSession, root: str, name: str
 ) -> tuple[int, dict]:
     """``(seq, doc)`` of the branch's newest committed log entry."""
     bdir = _branch_dir(root, name)
     fs, _, jvm = _fs(spark, root)
-    seqs = _branch_seqs(fs, jvm, bdir)
+    seqs = list_numbered_dirs(spark, bdir, "s=")
     if not seqs:
         raise FileNotFoundError(f"no branch {name!r} at {root}")
     seq = seqs[-1]
@@ -248,8 +234,7 @@ def create_branch(
         raise ValueError(
             f"cannot branch from uncommitted version v={version} at {root}"
         )
-    fs, _, jvm = _fs(spark, root)
-    if _branch_seqs(fs, jvm, _branch_dir(root, name)):
+    if list_numbered_dirs(spark, _branch_dir(root, name), "s="):
         raise ValueError(f"branch {name!r} already exists at {root}")
     doc = {"version": int(version), "seq": 0, "writer": uuid.uuid4().hex}
     if not _commit_branch_entry(spark, root, name, 0, doc):
@@ -272,13 +257,11 @@ def list_branches(spark: SparkSession, root: str) -> dict[str, int]:
         name = status.getPath().getName()
         if not status.isDirectory() or name.startswith("."):
             continue
-        seqs = _branch_seqs(fs, jvm, str(status.getPath().toUri().getPath()))
+        bdir = f"{_refs_root(root)}/{_BRANCHES_DIR}/{name}"
+        seqs = list_numbered_dirs(spark, bdir, "s=")
         if not seqs:
             continue  # an empty dir is an uncommitted create: invisible
-        doc = _read_json(
-            fs, jvm,
-            f"{_refs_root(root)}/{_BRANCHES_DIR}/{name}/s={seqs[-1]}/doc.json",
-        )
+        doc = _read_json(fs, jvm, f"{bdir}/s={seqs[-1]}/doc.json")
         out[name] = int(doc["version"])
     return out
 
@@ -353,7 +336,7 @@ def prune_branch_log(
     bdir = _branch_dir(root, name)
     fs, _, jvm = _fs(spark, root)
     Path = jvm.org.apache.hadoop.fs.Path
-    seqs = _branch_seqs(fs, jvm, bdir)
+    seqs = list_numbered_dirs(spark, bdir, "s=")
     if not seqs:
         raise FileNotFoundError(f"no branch {name!r} at {root}")
     pruned = seqs[:-keep_last] if len(seqs) > keep_last else []
@@ -528,12 +511,8 @@ def merge_branch(
     only the source-side delta bytes (the same bill a git-style rebase
     pays), never either snapshot."""
     from pyspark_big_data_spark.operators.deletes import (
-        DELETES_DIR,
-        POS_DELETES_DIR,
         _embedded_deletes_dir,
-        _versions_with_vector_dirs,
-        list_delete_commits,
-        list_pos_delete_commits,
+        external_vectors,
     )
     from pyspark_big_data_spark.operators.versioned import (
         manifest,
@@ -558,16 +537,10 @@ def merge_branch(
 
     base = merge_base(spark, root, head_s, head_t, _cache=mcache, _reach_b=reach_t)
     chain_s = version_chain(spark, root, head_s, _cache=mcache)
-    eq_vs = _versions_with_vector_dirs(spark, root, DELETES_DIR)
-    pos_vs = _versions_with_vector_dirs(spark, root, POS_DELETES_DIR)
-    for v in chain_s:
-        if v == base:
-            break
-        if (
-            (v in eq_vs and list_delete_commits(spark, root, v))
-            or (v in pos_vs and list_pos_delete_commits(spark, root, v))
-            or _embedded_deletes_dir(spark, root, v) is not None
-        ):
+    divergent = list(itertools.takewhile(lambda v: v != base, chain_s))
+    external = external_vectors(spark, root, divergent)
+    for v in divergent:
+        if v in external or _embedded_deletes_dir(spark, root, v) is not None:
             raise ValueError(
                 f"branch {source!r} carries deletion vectors on v={v} "
                 f"(diverged past the merge base v={base}); deletes are "

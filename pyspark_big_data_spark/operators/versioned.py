@@ -84,8 +84,10 @@ _V_RE = re.compile(r"^v=(\d+)$")
 def list_numbered_dirs(spark: SparkSession, root: str, prefix: str) -> list[int]:
     """Committed ``<prefix>N`` directory numbers under ``root``,
     ascending — the one listing every commit-by-rename log uses
-    (versions ``v=``, delete commits ``d=``, branch entries ``s=``,
-    transaction manifests ``t=``). Staging/temp dirs never match."""
+    (versions ``v=``, the per-version deletion-vector trees ``v=`` and
+    their delete commits ``d=``, branch entries ``s=``, transaction
+    manifests ``t=``). Staging/temp dirs never match; a missing
+    ``root`` is an empty log."""
     pat = re.compile(rf"^{re.escape(prefix)}(\d+)$")
     fs, hroot, jvm = _fs(spark, root)
     if not fs.exists(hroot):
@@ -915,13 +917,7 @@ def _validate_append_base(
       explicitly. MERGE-embedded vectors in ancestors do NOT trip the
       guard: they are part of committed versions by construction, and
       every read of such a chain is documented as MOR-only."""
-    from pyspark_big_data_spark.operators.deletes import (
-        DELETES_DIR,
-        POS_DELETES_DIR,
-        _versions_with_vector_dirs,
-        list_delete_commits,
-        list_pos_delete_commits,
-    )
+    from pyspark_big_data_spark.operators.deletes import external_vectors
 
     base_cols = set(read_version(spark, root, base_version).columns)
     if allow_evolution:
@@ -938,24 +934,17 @@ def _validate_append_base(
         )
     if allow_base_tombstones:
         return
-    # two LIVE parent listings bound the per-member probes (r14):
-    # external vectors are mutable post-commit, so this is re-listed on
-    # every validation (per commit retry), never memoized — but a chain
-    # whose root has no _deletes/_pos_deletes tree at all (the common
-    # case) now pays 2 listings instead of 2 per member
-    eq_vs = _versions_with_vector_dirs(spark, root, DELETES_DIR)
-    pos_vs = _versions_with_vector_dirs(spark, root, POS_DELETES_DIR)
-    for v in version_chain(spark, root, base_version):
-        if (v in eq_vs and list_delete_commits(spark, root, v)) or (
-            v in pos_vs and list_pos_delete_commits(spark, root, v)
-        ):
-            raise ValueError(
-                f"v={v} in the base chain of this append carries deletion "
-                "vectors; a chained read through plain read_version would "
-                "resurrect the deleted rows — run materialize_deletes "
-                "first, or pass allow_base_tombstones=True if every "
-                "consumer reads via read_version_mor"
-            )
+    # re-censused on every validation (per commit retry): external
+    # vectors are mutable post-commit
+    external = external_vectors(spark, root, version_chain(spark, root, base_version))
+    if external:
+        raise ValueError(
+            f"v={next(iter(external))} in the base chain of this append "
+            "carries deletion vectors; a chained read through plain "
+            "read_version would resurrect the deleted rows — run "
+            "materialize_deletes first, or pass allow_base_tombstones=True "
+            "if every consumer reads via read_version_mor"
+        )
 
 
 def append_version(
@@ -1418,6 +1407,7 @@ def expire_versions(
     the protected set — the seam transaction groups use so surviving
     txn manifests' table pins are never vacuumed out from under the
     group (operators/multitxn.py::expire_group)."""
+    from pyspark_big_data_spark.operators.deletes import vector_dirs
     from pyspark_big_data_spark.operators.refs import list_branches, list_tags
 
     if keep_last < 1:
@@ -1444,8 +1434,8 @@ def expire_versions(
         fs.delete(Path(f"{root.rstrip('/')}/v={n}"), True)
         # tombstones are pinned to their version: expired data takes
         # its deletion vectors with it (operators/deletes.py)
-        fs.delete(Path(f"{root.rstrip('/')}/_deletes/v={n}"), True)
-        fs.delete(Path(f"{root.rstrip('/')}/_pos_deletes/v={n}"), True)
+        for d in vector_dirs(root, n):
+            fs.delete(Path(d), True)
     if expired:
         # deleted version dirs may have memoized manifests/schemas (and
         # a fully-drained root could even reuse the numbers)
@@ -1781,12 +1771,8 @@ def table_changes(
     rows. Both endpoints must be on the same chain; ``from_version ==
     to_version`` is an empty feed with the correct schema."""
     from pyspark_big_data_spark.operators.deletes import (
-        DELETES_DIR,
-        POS_DELETES_DIR,
         _embedded_deletes_dir,
-        _versions_with_vector_dirs,
-        list_delete_commits,
-        list_pos_delete_commits,
+        external_vectors,
     )
 
     committed = set(list_versions(spark, root))
@@ -1799,11 +1785,7 @@ def table_changes(
         )
     if from_version == to_version:
         return read_version(spark, root, to_version).filter(F.lit(False))
-    # two parent listings bound the per-version external-vector probes
-    # over the whole walk (r14)
-    eq_vs = _versions_with_vector_dirs(spark, root, DELETES_DIR)
-    pos_vs = _versions_with_vector_dirs(spark, root, POS_DELETES_DIR)
-    dirs = []
+    members = []
     v = to_version
     while v != from_version:
         m = manifest(spark, root, v)
@@ -1815,24 +1797,23 @@ def table_changes(
                 f"v={to_version} do not represent the change; use a keyed "
                 "snapshot diff instead"
             )
-        if (
-            (v in eq_vs and list_delete_commits(spark, root, v))
-            or (v in pos_vs and list_pos_delete_commits(spark, root, v))
-            or _embedded_deletes_dir(spark, root, v) is not None
-        ):
-            raise ValueError(
-                f"v={v} under {root} carries deletion vectors — the range "
-                f"(v={from_version}, v={to_version}] is not append-only and "
-                "an adds-only feed would misstate the change; use a keyed "
-                "snapshot diff instead"
-            )
-        dirs.append(f"{root.rstrip('/')}/v={v}")
+        members.append(v)
         v = base
         if v < from_version:
             raise ValueError(
                 f"v={to_version} under {root} does not chain through "
                 f"v={from_version} (chain skips to v={v})"
             )
+    external = external_vectors(spark, root, members)
+    for v in members:
+        if v in external or _embedded_deletes_dir(spark, root, v) is not None:
+            raise ValueError(
+                f"v={v} under {root} carries deletion vectors — the range "
+                f"(v={from_version}, v={to_version}] is not append-only and "
+                "an adds-only feed would misstate the change; use a keyed "
+                "snapshot diff instead"
+            )
+    dirs = [f"{root.rstrip('/')}/v={v}" for v in members]
     for d in dirs:
         spark.catalog.refreshByPath(d)
     reader = spark.read

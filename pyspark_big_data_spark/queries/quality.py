@@ -1618,7 +1618,7 @@ def positional_delete_read_witness(spark: SparkSession, sf_dir: str) -> DataFram
     from pyspark_big_data_spark.operators.deletes import (
         delete_keys,
         delete_positions,
-        read_version_mor_pos,
+        read_version_mor,
         with_positions,
     )
     from pyspark_big_data_spark.operators.versioned import write_version
@@ -1655,7 +1655,7 @@ def positional_delete_read_witness(spark: SparkSession, sf_dir: str) -> DataFram
     )
     untouched = _census() == before
 
-    mor = read_version_mor_pos(spark, root, v0)
+    mor = read_version_mor(spark, root, v0)
     counts = mor.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("c_custkey").alias("nd"),

@@ -229,7 +229,6 @@ def test_positional_delete_lifecycle(spark, tmp_path):
     from pyspark_big_data_spark.operators.deletes import (
         delete_positions,
         list_pos_delete_commits,
-        read_version_mor_pos,
         with_positions,
     )
 
@@ -244,7 +243,7 @@ def test_positional_delete_lifecycle(spark, tmp_path):
     assert sorted(os.listdir(vdir)) == before  # no data file touched
     assert list_pos_delete_commits(spark, root, 0) == [0]
 
-    got = read_version_mor_pos(spark, root, 0)
+    got = read_version_mor(spark, root, 0)
     assert _rows(got) == _rows(
         read_version(spark, root, 0).filter(F.col("k") % 10 != 3)
     )
@@ -256,7 +255,6 @@ def test_positional_deletes_one_of_identical_rows(spark, tmp_path):
     of two bit-identical rows."""
     from pyspark_big_data_spark.operators.deletes import (
         delete_positions,
-        read_version_mor_pos,
         with_positions,
     )
 
@@ -270,7 +268,7 @@ def test_positional_deletes_one_of_identical_rows(spark, tmp_path):
         .limit(1)
     )
     delete_positions(spark, root, one, version=0)
-    got = read_version_mor_pos(spark, root, 0)
+    got = read_version_mor(spark, root, 0)
     assert got.count() == 9
     assert got.filter(F.col("k") == 2).count() == 1  # one copy survives
 
@@ -280,7 +278,6 @@ def test_both_vector_types_compose_and_materialize(spark, tmp_path):
         delete_keys,
         delete_positions,
         materialize_deletes,
-        read_version_mor_pos,
         with_positions,
     )
 
@@ -290,7 +287,7 @@ def test_both_vector_types_compose_and_materialize(spark, tmp_path):
     addr = with_positions(spark, root, 0).filter(F.col("k").isin(50, 60))
     delete_positions(spark, root, addr, version=0)
 
-    got = read_version_mor_pos(spark, root, 0)
+    got = read_version_mor(spark, root, 0)
     assert got.count() == 96
     assert got.filter(F.col("k").isin(1, 2, 50, 60)).count() == 0
 
@@ -551,3 +548,89 @@ def test_table_changes_refuses_vectored_ranges(spark, tmp_path):
     vm = append_version(_df(spark, 2), root3, embedded_pos_deletes=addr)
     with pytest.raises(ValueError, match="not append-only"):
         table_changes(spark, root3, 0, vm)
+
+
+@pytest.mark.parametrize("kind", ["equality", "positional", "embedded"])
+def test_vector_kind_probe_matrix(spark, tmp_path, kind):
+    """Which chain probes refuse which vector kind. Branch ``dev``
+    carries one vector of ``kind`` on its own chain; ``main`` and
+    ``feat`` share only the vector-free base, so the vector is off
+    their chains and must trip nothing there."""
+    from pyspark_big_data_spark.operators.cdf import table_changes_typed
+    from pyspark_big_data_spark.operators.deletes import (
+        delete_positions,
+        has_any_delete_vectors,
+        with_positions,
+    )
+    from pyspark_big_data_spark.operators.merge import merge_to_branch
+    from pyspark_big_data_spark.operators.refs import (
+        branch_head,
+        commit_to_branch,
+        create_branch,
+        merge_branch,
+    )
+    from pyspark_big_data_spark.operators.versioned import table_changes
+
+    root = str(tmp_path / "vds")
+    write_version(_df(spark, 10), root)
+    for name in ("main", "dev", "feat"):
+        create_branch(spark, root, name, 0)
+    v1 = commit_to_branch(_df(spark, 12).filter("k >= 10"), root, "dev", append=True)
+    if kind == "equality":
+        delete_keys(spark, root, _keys(spark, [10]), "k", version=v1)
+    elif kind == "positional":
+        addr = with_positions(spark, root, v1).filter(F.col("k") == 10)
+        delete_positions(spark, root, addr, version=v1)
+    else:
+        upd = spark.createDataFrame([(10, -1.0)], "k long, x double")
+        merge_to_branch(spark, root, "dev", upd, "k")
+    dev = branch_head(spark, root, "dev")
+    main = commit_to_branch(_df(spark, 14).filter("k >= 12"), root, "main", append=True)
+    commit_to_branch(_df(spark, 16).filter("k >= 14"), root, "feat", append=True)
+    external = kind != "embedded"
+
+    assert has_any_delete_vectors(spark, root, dev)
+    assert not has_any_delete_vectors(spark, root, main)
+    with pytest.raises(ValueError, match="deletion vectors"):
+        table_changes(spark, root, 0, dev)
+    assert table_changes(spark, root, 0, main).count() == 2
+    if external:
+        with pytest.raises(ValueError, match="EXTERNAL deletion vectors"):
+            table_changes_typed(spark, root, 0, dev)
+    else:
+        table_changes_typed(spark, root, 0, dev)
+    assert table_changes_typed(spark, root, 0, main).count() == 2
+    with pytest.raises(ValueError, match="deletion vectors"):
+        merge_branch(spark, root, "dev", "main")
+    assert merge_branch(spark, root, "feat", "main")["mode"] == "merge"
+
+    if external:
+        with pytest.raises(ValueError, match="deletion vectors"):
+            commit_to_branch(_df(spark, 1), root, "dev", append=True)
+    else:
+        commit_to_branch(_df(spark, 1), root, "dev", append=True)
+
+
+def test_external_vector_census_lists_only_existing_trees(spark, tmp_path, monkeypatch):
+    """The census costs two parent listings however long the chain is,
+    plus one ``d=`` listing per member that has a vector tree; a tree
+    holding only staging carries no vector."""
+    from pyspark_big_data_spark.operators import deletes
+
+    listed = []
+    real = deletes.list_numbered_dirs
+
+    def counting(spark_, root_, prefix):
+        listed.append(root_)
+        return real(spark_, root_, prefix)
+
+    monkeypatch.setattr(deletes, "list_numbered_dirs", counting)
+    root = str(tmp_path / "vds")
+    assert deletes.external_vectors(spark, root, range(100)) == {}
+    assert len(listed) == 2
+
+    listed.clear()
+    os.makedirs(f"{root}/_deletes/v=3/d=0")
+    os.makedirs(f"{root}/_pos_deletes/v=5/.staging_d0.abc")
+    assert deletes.external_vectors(spark, root, range(100)) == {3: ([0], [])}
+    assert len(listed) == 4
