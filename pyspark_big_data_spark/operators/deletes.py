@@ -37,12 +37,14 @@ them up like any other member vector.
 Layout: external vectors live at ``root/_deletes/v=N/d=K`` (equality)
 and ``root/_pos_deletes/v=N/d=K`` (positional); MERGE-embedded ones at
 ``v=N/_merge_deletes``. No other operator module knows these names.
-``external_vectors`` is the one census of committed external vectors
+``_member_vectors`` is the one census of committed external vectors
 over a set of chain members (two parent listings, then one ``d=``
-listing per member that has a tree); callers that also need embedded
-vectors ask ``_embedded_deletes_dir``, which answers from the memoized
-manifest. ``vector_dirs`` names the external trees that go with a
-version when retention or a rollback deletes it.
+listing per member that has a tree), walked lazily so
+``has_any_delete_vectors`` stops at the first vector-bearing member;
+``external_vectors`` collects it into a dict. Callers that also need
+embedded vectors ask ``_embedded_deletes_dir``, which answers from
+the memoized manifest. ``vector_dirs`` names the external trees that
+go with a version when retention or a rollback deletes it.
 
 Commit protocol: each delete commit stages under
 ``root/_deletes/v=N/.staging_dK`` and publishes by the same verified
@@ -75,7 +77,7 @@ from __future__ import annotations
 
 import json
 import uuid
-from collections.abc import Iterable
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -229,25 +231,6 @@ def _delete_key_col(spark: SparkSession, version: int, paths: list[str]) -> str 
     return next(iter(cols))
 
 
-def deleted_keys(
-    spark: SparkSession, root: str, version: int | None = None
-) -> tuple[DataFrame | None, str | None]:
-    """``(keys_df, key_col)`` — the union of all committed EQUALITY
-    tombstones against ``v=version``; ``(None, None)`` when the version
-    has none. NOT de-duplicated across commits (r14): each commit's
-    file is distinct by construction (``delete_keys`` writes distinct),
-    the only consumer is the MOR anti-join — where duplicates cannot
-    change the result — and the cross-commit distinct was a full
-    shuffle re-paid on every evaluation of every MOR plan."""
-    version = _resolve_version(spark, root, version)
-    commits = list_delete_commits(spark, root, version)
-    paths = _delete_commit_dirs(root, version, commits)
-    key = _delete_key_col(spark, version, paths)
-    if key is None:
-        return None, None
-    return spark.read.parquet(*paths), key
-
-
 # ---------------------------------------------------------------------------
 # POSITIONAL deletes: the other deletion-vector type. An equality
 # delete says "any row whose KEY is k is gone"; a positional delete
@@ -330,31 +313,41 @@ def vector_dirs(root: str, version: int) -> list[str]:
     return [_deletes_root(root, version), _pos_deletes_root(root, version)]
 
 
-def external_vectors(
+def _member_vectors(
     spark: SparkSession, root: str, versions: Iterable[int]
-) -> dict[int, tuple[list[int], list[int]]]:
-    """The census of EXTERNAL deletion vectors (``delete_keys`` /
-    ``delete_positions`` commits) over ``versions``: for each member
-    with at least one committed external vector, its ``(equality,
-    positional)`` commit ids, in the order ``versions`` gives.
+) -> Iterator[tuple[int, list[int], list[int]]]:
+    """``(member, equality ids, positional ids)`` of committed EXTERNAL
+    vectors for each of ``versions`` in order, lazily, so a caller can
+    stop at the first member it cares about.
 
     Two parent listings bound the probes: a member with no ``v=N``
     dir under either tree has nothing to list, which is the common
     case for merge/append chains, whose vectors are MERGE-embedded
     (ask ``_embedded_deletes_dir`` for those). A listed dir may hold
     only staging, so the members inside those sets pay one ``d=``
-    listing each. Always LIVE listings, never memoized: external
-    vectors are mutable post-commit."""
+    listing each, when reached. Always LIVE listings, never memoized:
+    external vectors are mutable post-commit."""
     base = root.rstrip("/")
     eq_vs = set(list_numbered_dirs(spark, f"{base}/{DELETES_DIR}", "v="))
     pos_vs = set(list_numbered_dirs(spark, f"{base}/{POS_DELETES_DIR}", "v="))
-    out: dict[int, tuple[list[int], list[int]]] = {}
     for v in versions:
         eq = list_delete_commits(spark, root, v) if v in eq_vs else []
         pos = list_pos_delete_commits(spark, root, v) if v in pos_vs else []
-        if eq or pos:
-            out[v] = (eq, pos)
-    return out
+        yield v, eq, pos
+
+
+def external_vectors(
+    spark: SparkSession, root: str, versions: Iterable[int]
+) -> dict[int, tuple[list[int], list[int]]]:
+    """The census of EXTERNAL deletion vectors (``delete_keys`` /
+    ``delete_positions`` commits) over ``versions``: for each member
+    with at least one committed external vector, its ``(equality,
+    positional)`` commit ids, in the order ``versions`` gives."""
+    return {
+        v: (eq, pos)
+        for v, eq, pos in _member_vectors(spark, root, versions)
+        if eq or pos
+    }
 
 
 def has_any_delete_vectors(
@@ -363,10 +356,14 @@ def has_any_delete_vectors(
     """True iff ANY chain member of ``v=version`` carries equality,
     positional, or embedded (MERGE) deletion vectors — the question
     every physical-read consumer (compaction, plain appends, CDF)
-    must ask before trusting ``read_version``."""
-    members = version_chain(spark, root, version)
-    return bool(external_vectors(spark, root, members)) or any(
-        _embedded_deletes_dir(spark, root, v) is not None for v in members
+    must ask before trusting ``read_version``. Stops at the first
+    member, newest first, that carries either kind, so the members
+    below it pay no ``d=`` listing."""
+    return any(
+        eq or pos or _embedded_deletes_dir(spark, root, v) is not None
+        for v, eq, pos in _member_vectors(
+            spark, root, version_chain(spark, root, version)
+        )
     )
 
 
@@ -467,6 +464,10 @@ def _chain_vectors(spark: SparkSession, root: str, version: int):
         paths = _delete_commit_dirs(root, v, eq_ids)
         kcol = _delete_key_col(spark, v, paths)
         if kcol is not None:
+            # the union of this member's commits, NOT de-duplicated
+            # (r14): each commit is distinct by construction, the
+            # anti-join ignores duplicates, and a cross-commit distinct
+            # was a shuffle re-paid on every MOR evaluation
             eq.append((v, spark.read.parquet(*paths), kcol))
             total_rows += sum(_commit_rows(spark, p)[0] for p in paths)
         proot = _pos_deletes_root(root, v)

@@ -12,8 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_big_data_spark.operators.deletes import (
+    _chain_vectors,
     delete_keys,
-    deleted_keys,
     list_delete_commits,
     materialize_deletes,
     read_version_mor,
@@ -69,13 +69,14 @@ def test_delete_commits_accumulate_and_distinct(spark, tmp_path):
     write_version(_df(spark), root)
     delete_keys(spark, root, _keys(spark, [1, 2, None]), "k")  # null dropped
     assert delete_keys(spark, root, _keys(spark, [2, 3]), "k") == 1  # overlap ok
-    tomb, key = deleted_keys(spark, root, 0)
-    assert key == "k"
+    eq = _chain_vectors(spark, root, 0)[0]
+    assert [(member, key) for member, _, key in eq] == [(0, "k")]
+    tomb = eq[0][1]
     # distinct WITHIN each commit (delete_keys writes distinct); the
-    # cross-commit union is NOT re-deduplicated (r14: the only consumer
-    # is the MOR anti-join, where duplicates cannot change the result,
-    # and the distinct was a shuffle paid on every MOR evaluation) —
-    # key 2 appears once per commit that tombstoned it
+    # cross-commit union the MOR read anti-joins is NOT re-deduplicated
+    # (r14: duplicates cannot change an anti-join, and the distinct was
+    # a shuffle paid on every MOR evaluation) — key 2 appears once per
+    # commit that tombstoned it
     assert sorted(set(r["k"] for r in tomb.collect())) == [1, 2, 3]
     assert sorted(r["k"] for r in tomb.collect()) == [1, 2, 2, 3]
     # the MOR result is identical with or without the dedup
@@ -614,7 +615,8 @@ def test_vector_kind_probe_matrix(spark, tmp_path, kind):
 def test_external_vector_census_lists_only_existing_trees(spark, tmp_path, monkeypatch):
     """The census costs two parent listings however long the chain is,
     plus one ``d=`` listing per member that has a vector tree; a tree
-    holding only staging carries no vector."""
+    holding only staging carries no vector, and the boolean probe stops
+    at the first member that carries one."""
     from pyspark_big_data_spark.operators import deletes
 
     listed = []
@@ -634,3 +636,12 @@ def test_external_vector_census_lists_only_existing_trees(spark, tmp_path, monke
     os.makedirs(f"{root}/_pos_deletes/v=5/.staging_d0.abc")
     assert deletes.external_vectors(spark, root, range(100)) == {3: ([0], [])}
     assert len(listed) == 4
+
+    # has_any_delete_vectors walks the chain newest first and stops at
+    # v=3, the first member with a committed vector: v=1 is never listed
+    listed.clear()
+    os.makedirs(f"{root}/_deletes/v=1/d=0")
+    monkeypatch.setattr(deletes, "version_chain", lambda *a: [5, 4, 3, 2, 1, 0])
+    monkeypatch.setattr(deletes, "_embedded_deletes_dir", lambda *a: None)
+    assert deletes.has_any_delete_vectors(spark, root, 5)
+    assert listed[2:] == [f"{root}/_pos_deletes/v=5", f"{root}/_deletes/v=3"]
