@@ -46,14 +46,16 @@ embedded vectors ask ``_embedded_deletes_dir``, which answers from
 the memoized manifest. ``vector_dirs`` names the external trees that
 go with a version when retention or a rollback deletes it.
 
-Commit protocol: each delete commit stages under
-``root/_deletes/v=N/.staging_dK`` and publishes by the same verified
+Commit protocol: ``delete_keys`` and ``delete_positions`` publish
+through ``_commit_vector``, which hands the tombstone to
+``versioned.commit_next`` on the ``d=`` log — the same verified
 single-rename as ``write_version`` (rename is the commit; a race loser
 deletes its bytes and retries at K+1), so concurrent deleters can
 never drop each other's tombstones and readers never observe a
 half-written one. Each commit also carries a ``_rows.json`` row-count
-sidecar (from the staged parquet footers — no data pass), which is
-what lets the read path price the anti-join without a job.
+sidecar, counted by an observation on the tombstone write (no extra
+job), which is what lets the read path price the anti-join without a
+job.
 
 100 TB economics: the tombstone side is deleted-keys-sized, so the
 MOR anti-join broadcasts it (plan: BroadcastHashJoin LeftAnti — zero
@@ -75,17 +77,17 @@ full-rewrite variant is operators/upsert.py::erase_keys_parquet).
 
 from __future__ import annotations
 
-import json
-import uuid
 from collections.abc import Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from pyspark_big_data_spark.operators.versioned import (
     EMBEDDED_DELETES_DIR,
     _fs,
+    _read_json,
     _resolve_version,
-    commit_staged,
+    _write_json,
+    commit_next,
     list_numbered_dirs,
     list_versions,
     manifest,
@@ -116,18 +118,22 @@ def list_delete_commits(
     return list_numbered_dirs(spark, _deletes_root(root, version), "d=")
 
 
-def _write_rows_sidecar(spark, fs, jvm, staging: str) -> None:
-    """Stamp ``_rows.json`` (tombstone row count, from the staged
-    parquet footers — Spark's count(*) over parquet is metadata-only)
-    into the staging dir so the read path can price the anti-join
-    without running a job. Underscore-prefixed: invisible to scans."""
-    spark.catalog.refreshByPath(staging)
-    n = spark.read.parquet(staging).count()
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(f"{staging}/_rows.json"), True)
-    try:
-        out.write(bytearray(json.dumps({"rows": int(n)}).encode("utf-8")))
-    finally:
-        out.close()
+def _commit_vector(spark: SparkSession, droot: str, tomb: DataFrame) -> int:
+    """Publish ``tomb`` as the next ``d=K`` commit under ``droot`` and
+    return K. Each commit carries a ``_rows.json`` row-count sidecar
+    (underscore-prefixed: invisible to scans), so the read path prices
+    the anti-join without a job; the count is observed on the write
+    itself, not read back."""
+    fs, _, jvm = _fs(spark, droot)
+
+    def stage(staging: str, _k: int) -> None:
+        obs = Observation()
+        tomb.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(staging)
+        _write_json(fs, jvm, f"{staging}/_rows.json", {"rows": int(obs.get["rows"])})
+
+    return commit_next(spark, droot, "d=", stage)
 
 
 def _commit_rows(spark: SparkSession, commit_dir: str) -> tuple[int, bool]:
@@ -135,13 +141,9 @@ def _commit_rows(spark: SparkSession, commit_dir: str) -> tuple[int, bool]:
     comes from the ``_rows.json`` sidecar when present, else from a
     footer-only count (pre-r11 commits, which predate the sidecar)."""
     fs, _, jvm = _fs(spark, commit_dir)
-    side = jvm.org.apache.hadoop.fs.Path(f"{commit_dir}/_rows.json")
-    if fs.exists(side):
-        stream = fs.open(side)
-        try:
-            return int(json.loads(bytes(stream.readAllBytes()))["rows"]), True
-        finally:
-            stream.close()
+    side = f"{commit_dir}/_rows.json"
+    if fs.exists(jvm.org.apache.hadoop.fs.Path(side)):
+        return int(_read_json(fs, jvm, side)["rows"]), True
     spark.catalog.refreshByPath(commit_dir)
     return spark.read.parquet(commit_dir).count(), False
 
@@ -188,22 +190,7 @@ def delete_keys(
             "ambiguous — materialize first"
         )
     tomb = keys.select(F.col(key)).filter(F.col(key).isNotNull()).distinct()
-
-    droot = _deletes_root(root, version)
-    fs, hroot, jvm = _fs(spark, droot)
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(hroot)
-    while True:
-        commits = list_delete_commits(spark, root, version)
-        k = (commits[-1] + 1) if commits else 0
-        # writer-unique staging (r13, see write_version): racing
-        # delete committers must never sweep each other's bytes
-        staging = f"{droot}/.staging_d{k}.{uuid.uuid4().hex[:12]}"
-        tomb.write.mode("overwrite").parquet(staging)
-        _write_rows_sidecar(spark, fs, jvm, staging)
-        if commit_staged(fs, jvm, droot, staging, k, prefix="d="):
-            return k
-        # lost the race: another deleter took d=K; retry at K+1
+    return _commit_vector(spark, _deletes_root(root, version), tomb)
 
 
 def _delete_commit_dirs(root: str, version: int, commits: list[int]) -> list[str]:
@@ -422,21 +409,7 @@ def delete_positions(
         F.col(FILE_COL).isNull() | F.col(POS_COL).isNull()
     ).limit(1).count():
         raise ValueError("positional delete contains null addresses")
-
-    droot = _pos_deletes_root(root, version)
-    fs, hroot, jvm = _fs(spark, droot)
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(hroot)
-    while True:
-        commits = list_pos_delete_commits(spark, root, version)
-        k = (commits[-1] + 1) if commits else 0
-        # writer-unique staging (r13, see write_version): racing
-        # delete committers must never sweep each other's bytes
-        staging = f"{droot}/.staging_d{k}.{uuid.uuid4().hex[:12]}"
-        tomb.write.mode("overwrite").parquet(staging)
-        _write_rows_sidecar(spark, fs, jvm, staging)
-        if commit_staged(fs, jvm, droot, staging, k, prefix="d="):
-            return k
+    return _commit_vector(spark, _pos_deletes_root(root, version), tomb)
 
 
 def _chain_vectors(spark: SparkSession, root: str, version: int):

@@ -704,26 +704,11 @@ def delete_where(
     cannot match are never rewritten (the vector is O(matches))."""
     version = _resolve_version(spark, root, base_version)
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    target = read_version_mor(spark, root, version, keep_addresses=True)
-    hit = target.filter(cond).persist()
-    try:
-        n = hit.count()
-        if n == 0:
-            return {"version": None, "n_deleted": 0}
-        vector = hit.select(FILE_COL, POS_COL)
-        empty = read_version(spark, root, version).filter(F.lit(False))
-        new_v = append_version(
-            empty,
-            root,
-            allow_base_tombstones=True,
-            expected_base=None if base_version is not None else version,
-            base_override=version if base_version is not None else None,
-            manifest_extra={**(manifest_extra or {}), "row_mutation": "delete"},
-            embedded_pos_deletes=vector,
-        )
-        return {"version": new_v, "n_deleted": int(n)}
-    finally:
-        hit.unpersist()
+    new_v, n = _commit_row_mutation(
+        spark, root, version, base_version, cond, "delete", manifest_extra,
+        lambda target, hit: read_version(spark, root, version).filter(F.lit(False)),
+    )
+    return {"version": new_v, "n_deleted": n}
 
 
 def update_where(
@@ -759,14 +744,9 @@ def update_where(
     cond = F.expr(condition) if isinstance(condition, str) else condition
     if cond is True:
         cond = F.lit(True)
-    target = read_version_mor(spark, root, version, keep_addresses=True)
-    hit = target.filter(cond).persist()
-    try:
-        n = hit.count()
-        if n == 0:
-            return {"version": None, "n_updated": 0}
-        vector = hit.select(FILE_COL, POS_COL)
-        updated = hit.select(
+
+    def recomputed(target: DataFrame, hit: DataFrame) -> DataFrame:
+        return hit.select(
             *[
                 F.expr(set_exprs[c]).cast(target.schema[c].dataType).alias(c)
                 if c in set_exprs
@@ -774,16 +754,45 @@ def update_where(
                 for c in target_cols
             ]
         )
+
+    new_v, n = _commit_row_mutation(
+        spark, root, version, base_version, cond, "update", manifest_extra,
+        recomputed,
+    )
+    return {"version": new_v, "n_updated": n}
+
+
+def _commit_row_mutation(
+    spark: SparkSession,
+    root: str,
+    version: int,
+    base_version: int | None,
+    cond,
+    kind: str,
+    manifest_extra: dict | None,
+    delta,
+) -> tuple[int | None, int]:
+    """The shared body of ``delete_where`` / ``update_where``: persist
+    the rows of ``v=version``'s MOR read matching ``cond``, count them,
+    and commit ``delta(target, hit)`` as an append whose embedded vector
+    retires the hit rows, stamped ``row_mutation: kind``. Returns
+    ``(version, rows hit)``; matching nothing burns no version."""
+    target = read_version_mor(spark, root, version, keep_addresses=True)
+    hit = target.filter(cond).persist()
+    try:
+        n = hit.count()
+        if n == 0:
+            return None, 0
         new_v = append_version(
-            updated,
+            delta(target, hit),
             root,
             allow_base_tombstones=True,
             expected_base=None if base_version is not None else version,
             base_override=version if base_version is not None else None,
-            manifest_extra={**(manifest_extra or {}), "row_mutation": "update"},
-            embedded_pos_deletes=vector,
+            manifest_extra={**(manifest_extra or {}), "row_mutation": kind},
+            embedded_pos_deletes=hit.select(FILE_COL, POS_COL),
         )
-        return {"version": new_v, "n_updated": int(n)}
+        return new_v, int(n)
     finally:
         hit.unpersist()
 

@@ -28,7 +28,6 @@ few hundred bytes regardless of snapshot size.
 from __future__ import annotations
 
 import itertools
-import json
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,9 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark_big_data_spark.operators.versioned import (
     _fs,
     _read_json,
+    _write_json,
+    commit_at,
     list_numbered_dirs,
     list_versions,
     read_version,
+    sweep_dead_staging,
 )
 
 _REFS_DIR = "_refs"
@@ -80,11 +82,7 @@ def create_tag(
     # writer's doc under the other's success — uniqueness confines the
     # race to the rename
     staging = f"{_refs_root(root)}/.staging_{name}.{nonce[:12]}.json"
-    out = fs.create(Path(staging), True)
-    try:
-        out.write(bytearray(json.dumps(doc).encode("utf-8")))
-    finally:
-        out.close()
+    _write_json(fs, jvm, staging, doc)
     # file-onto-file rename: on HDFS/object stores this fails (returns
     # false) if the target appeared — first writer wins. On
     # RawLocalFileSystem, rename delegates to POSIX rename(2), which
@@ -164,7 +162,7 @@ def read_by_tag(spark: SparkSession, root: str, name: str) -> DataFrame:
 #
 # The head is the highest committed sequence entry. Every repoint
 # publishes s=K+1 by the SAME verified dir-rename as write_version
-# (commit_staged), so compare-and-set is arbitrated by an IMMUTABLE
+# (commit_at), so compare-and-set is arbitrated by an IMMUTABLE
 # artifact: at most one writer can ever own s=K+1, and a loser always
 # observes its loss — the r10 advice's lost-update window (two writers
 # passing a check-then-write on a mutable pointer, the second silently
@@ -202,23 +200,16 @@ def _branch_state(
 def _commit_branch_entry(
     spark: SparkSession, root: str, name: str, seq: int, doc: dict
 ) -> bool:
-    """Publish ``doc`` as log entry ``s=seq`` via the verified rename;
-    False when another writer owns that sequence slot (the CAS loss)."""
-    from pyspark_big_data_spark.operators.versioned import commit_staged
-
-    bdir = _branch_dir(root, name)
+    """Publish ``doc`` as log entry ``s=seq`` (``commit_at``, a
+    fixed-slot CAS); False when another writer owns that slot."""
     fs, _, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(Path(bdir))
-    # writer-unique staging: racers must never share staged bytes
-    staging = f"{bdir}/.staging_{doc['writer'][:16]}"
-    fs.delete(Path(staging), True)
-    out = fs.create(Path(f"{staging}/doc.json"), True)
-    try:
-        out.write(bytearray(json.dumps(doc).encode("utf-8")))
-    finally:
-        out.close()
-    return commit_staged(fs, jvm, bdir, staging, seq, prefix="s=")
+    return commit_at(
+        spark,
+        _branch_dir(root, name),
+        "s=",
+        seq,
+        lambda staging, _: _write_json(fs, jvm, f"{staging}/doc.json", doc),
+    )
 
 
 def create_branch(
@@ -325,12 +316,10 @@ def prune_branch_log(
     never pruned (the branch stays resolvable); older entries are
     audit history only, a few hundred bytes each — this exists so a
     hot branch repointed thousands of times a day has a bounded log,
-    like any other metadata retention here. Dead staging = any
-    ``.staging_*`` dir (each is writer-unique; one survives a crash at
-    most until its writer's CAS seq is taken, after which it can never
-    publish — sweeping ALL of them is safe because a LIVE writer's
-    rename has either already happened or will simply lose its CAS and
-    retry from scratch)."""
+    like any other metadata retention here. Dead staging follows the one
+    rule every log uses (``sweep_dead_staging``): a ``.staging_sK`` dir
+    with K <= the head's sequence can never publish, while one for the
+    next slot may belong to a live writer and is kept."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     bdir = _branch_dir(root, name)
@@ -342,11 +331,7 @@ def prune_branch_log(
     pruned = seqs[:-keep_last] if len(seqs) > keep_last else []
     for s in pruned:
         fs.delete(Path(f"{bdir}/s={s}"), True)
-    if fs.exists(Path(bdir)):
-        for status in fs.listStatus(Path(bdir)):
-            n = status.getPath().getName()
-            if status.isDirectory() and n.startswith(".staging_"):
-                fs.delete(status.getPath(), True)
+    sweep_dead_staging(spark, bdir, "s=")
     return pruned
 
 

@@ -32,9 +32,10 @@ snapshots:
   commutative rule the table formats implement at partition/file
   granularity.
 - The physical rename race is handled below the conflict check by the
-  shared ``commit_staged`` seam: a writer that loses the rename deletes
-  its bytes and loops, re-running conflict detection against whatever
-  just landed.
+  shared ``versioned.commit_next`` loop: the conflict scan and splice
+  are its per-attempt stage, so a writer that loses the rename deletes
+  its bytes and re-runs conflict detection against whatever just
+  landed.
 
 At 100 TB the economics are the table formats': conflict detection is
 O(intervening versions) metadata reads (one tiny JSON per version, no
@@ -53,15 +54,13 @@ time travel.
 
 from __future__ import annotations
 
-import json
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyspark_big_data_spark.operators.versioned import (
     _fs,
-    commit_staged,
-    latest_version,
+    _read_json,
+    _write_json,
+    commit_next,
     read_version,
 )
 
@@ -79,15 +78,10 @@ def txn_info(spark: SparkSession, root: str, version: int) -> dict | None:
     snapshot was committed outside the transaction layer — e.g. a plain
     ``write_version`` — and therefore has an UNKNOWN write set)."""
     tpath = f"{root.rstrip('/')}/v={version}/{TXN_NAME}"
-    fs, hp, _ = _fs(spark, tpath)
+    fs, hp, jvm = _fs(spark, tpath)
     if not fs.exists(hp):
         return None
-    stream = fs.open(hp)
-    try:
-        data = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))
+    return _read_json(fs, jvm, tpath)
 
 
 def _canon(values) -> list[str]:
@@ -105,7 +99,6 @@ def commit_replace_where(
     col: str,
     values,
     base_version: int,
-    max_retries: int = 10,
 ) -> int:
     """Commit a replace-slice transaction and return its version number.
 
@@ -119,8 +112,9 @@ def commit_replace_where(
        ``values`` — NULLs are outside every domain and always kept) +
        ``slice_df``;
     3. stages data + ``_txn.json`` and publishes both with the single
-       atomic rename; a lost rename race deletes this writer's bytes and
-       loops from step 1 against the newly-landed version.
+       atomic rename (``versioned.commit_next``); a lost rename race
+       deletes this writer's bytes and loops from step 1 against the
+       newly-landed version, and a failed write leaves no staging.
 
     The domain column should be non-null-keyed (like a partition
     column); a transaction cannot claim NULL in its domain. Raises
@@ -133,10 +127,10 @@ def commit_replace_where(
         raise ValueError("transaction must declare a non-empty domain")
     vals_s = _canon(vals)
     fs, _, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    for _ in range(max_retries):
-        latest = latest_version(spark, root)
-        if latest is None:
+
+    def stage(staging: str, n: int) -> None:
+        latest = n - 1
+        if latest < 0:
             raise ValueError(
                 f"versioned dataset at {root} has no versions: seed v=0 "
                 "with write_version first"
@@ -165,12 +159,9 @@ def commit_replace_where(
                 )
         base = read_version(spark, root, latest)
         keep = base.filter(F.col(col).isNull() | ~F.col(col).isin(vals))
-        merged = keep.unionByName(slice_df.select(*base.columns))
-        n = latest + 1
-        # writer-unique staging (r13): concurrent writers must never
-        # share or sweep each other's staging bytes
-        staging = f"{root.rstrip('/')}/.staging_v{n}.{uuid.uuid4().hex[:12]}"
-        merged.write.mode("overwrite").parquet(staging)
+        keep.unionByName(slice_df.select(*base.columns)).write.mode(
+            "overwrite"
+        ).parquet(staging)
         doc = {
             "txn_version": 1,
             "base_version": base_version,
@@ -178,15 +169,8 @@ def commit_replace_where(
             "col": col,
             "values": vals_s,
         }
-        out = fs.create(Path(f"{staging}/{TXN_NAME}"), True)
-        try:
-            out.write(bytearray(json.dumps(doc).encode("utf-8")))
-        finally:
-            out.close()
-        if commit_staged(fs, jvm, root, staging, n):
-            return n
-        # Rename race lost: loop re-runs conflict detection against the
-        # version that just landed before trying again.
-    raise SnapshotConflictError(
-        f"lost the commit race {max_retries} times at {root}"
-    )
+        _write_json(fs, jvm, f"{staging}/{TXN_NAME}", doc)
+
+    # a lost rename race re-runs the conflict scan against the version
+    # that just landed before trying again
+    return commit_next(spark, root, "v=", stage)

@@ -7,12 +7,19 @@ A versioned dataset is a directory of immutable full snapshots::
     root/v=2/ ...
 
 ``write_version`` stages the new snapshot in a temp dir and RENAMES it
-into ``v=N`` (N = latest + 1) — a crash-safe single-rename commit
-(``commit_staged``), so readers never observe a half-written
-version: an interrupted write leaves only a stale temp dir that the
-next writer sweeps. ``read_version`` pins any historical version;
-``latest_version`` resolves the newest COMMITTED one (rename is the
-commit — a directory only counts once it sits at ``v=N``).
+into ``v=N`` (N = latest + 1) — a crash-safe single-rename commit, so
+readers never observe a half-written version. ``read_version`` pins
+any historical version; ``latest_version`` resolves the newest
+COMMITTED one (rename is the commit — a directory only counts once it
+sits at ``v=N``).
+
+One commit protocol serves every numbered log in the repo (versions
+``v=``, delete commits ``d=``, transaction manifests ``t=``, branch
+entries ``s=``): ``commit_at`` stages one slot under a writer-unique
+``.staging_{p}N.{token}`` dir, deletes it if staging fails, and
+publishes it by one verified rename; ``commit_next`` retries it at
+the next free number until it wins; ``sweep_dead_staging`` removes
+staging dirs whose slot is already taken (crash debris).
 
 Each snapshot may carry a ``_manifest.json`` committed ATOMICALLY with
 its data by the same rename: per-file [min, max] footer stats
@@ -118,7 +125,7 @@ MANIFEST_NAME = "_manifest.json"
 
 # Process-level memo of IMMUTABLE per-version metadata: committed
 # manifests and chain schemas. A committed ``v=N`` dir is write-once by
-# the race-verified rename (commit_staged) — its manifest JSON and the
+# the race-verified rename (commit_at) — its manifest JSON and the
 # chain's merged schema never change after publication, so re-reading
 # them per operation is pure py4j/JSON/schema-inference overhead (a
 # branch-merge witness pays hundreds of such round-trips). The ONLY
@@ -352,12 +359,8 @@ def _file_footer_entry(path: str, cols: set[str]):
 
 
 # Commits of at most this many files read their footers on the driver;
-# larger snapshots distribute the footer pass. Env-tunable so a
-# deployment with slow per-RPC storage can force distribution (0) or a
-# fat coordinator can raise it.
-_DRIVER_STATS_MAX_FILES = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_STATS_MAX_FILES", "64")
-)
+# larger snapshots (and remote roots) distribute the footer pass.
+_DRIVER_STATS_MAX_FILES = 64
 
 
 def _driver_readable(path: str) -> bool:
@@ -390,9 +393,9 @@ def _collect_file_stats(
     Returns ``(per_file_stats, per_file_num_rows)`` — row counts come
     free from the same footers and feed metadata-only COUNT answers.
 
-    Small commits (<= ``SPARK_GRAFT_DRIVER_STATS_MAX_FILES`` files,
-    default 64) read the footers ON THE DRIVER — metadata-only work at
-    manifest cardinality with zero job-scheduling constant (the
+    Small commits (<= ``_DRIVER_STATS_MAX_FILES`` files) on a
+    driver-readable root read the footers ON THE DRIVER — metadata-only
+    work at manifest cardinality with zero job-scheduling constant (the
     Iceberg-coordinator shape; a full Spark job costs ~0.5-3 s per
     commit, measured in OPTIMIZATION_r13.md, which dominated small
     MERGE commits); larger snapshots keep the distributed pass."""
@@ -459,6 +462,14 @@ def _read_json(fs, jvm, path: str) -> dict:
     finally:
         stream.close()
     return json.loads(data.decode("utf-8"))
+
+
+def _write_json(fs, jvm, path: str, doc: dict) -> None:
+    out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
+    try:
+        out.write(bytearray(json.dumps(doc).encode("utf-8")))
+    finally:
+        out.close()
 
 
 def manifest(
@@ -576,21 +587,12 @@ def write_version(
     snapshot; readers are shard-agnostic (``manifest`` merges), and
     the shards stage with the data so the commit stays one rename.
 
-    Stage-then-rename: the snapshot is fully written under a
-    WRITER-UNIQUE ``root/.staging_vN.<token>`` first (unique so
-    concurrent writers racing on the same N can never touch each
-    other's staging bytes — r13), then a single atomic rename
-    publishes it as ``root/v=N``. Concurrent writers race on the
-    rename, and the rename's return value alone is NOT a reliable
-    verdict: HDFS rename fails when the destination exists, but
-    Hadoop's LocalFileSystem rename onto an existing ``v=N`` returns
-    true and moves the staging
-    dir INSIDE it (``v=N/.staging_vN.<token>`` — dot-prefixed, invisible to
-    parquet readers: a silent lost write). So the commit is verified
-    after the rename: the writer owns ``v=N`` only if no nested staging
-    dir appeared under it. A race loser on either filesystem deletes
-    its bytes (including the nested copy) and retries at N+1, so
-    committed versions are never overwritten or silently dropped.
+    Stage-then-rename through ``commit_next``: the snapshot (data,
+    embedded vectors, manifest) is written under a writer-unique
+    staging dir and published as ``root/v=N`` by one verified rename;
+    a race loser deletes its bytes and retries at N+1, so committed
+    versions are never overwritten or silently dropped, and a failed
+    write leaves no staging behind.
 
     With ``audit`` (the write-audit-publish hook), the callback runs
     on a DataFrame over the STAGED BYTES — what will actually publish,
@@ -636,19 +638,17 @@ def write_version(
                 f"columns ['_file', '_pos']; got {sorted(embedded_pos_deletes.columns)}"
             )
     spark = df.sparkSession
-    fs, hroot, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(hroot)
-    while True:
-        latest = latest_version(spark, root)
-        n = 0 if latest is None else latest + 1
+    fs, _, jvm = _fs(spark, root)
+
+    def stage(staging: str, n: int) -> None:
+        latest = n - 1 if n else None
         if _append and latest is None:
             raise ValueError(
                 f"append needs a base version under {root}; commit the "
                 "initial snapshot with write_version first"
             )
         # An append bases on whatever it DIRECTLY follows — recomputed
-        # per retry, so a lost race re-bases on the interloper and the
+        # per attempt, so a lost race re-bases on the interloper and the
         # chain never silently skips a committed version. A RESTORE
         # (_base_override) pins its base explicitly instead: rolling
         # back to v means v regardless of interlopers.
@@ -668,13 +668,13 @@ def write_version(
                 "the new head and retry"
             )
         if _append:
-            # Re-validated on EVERY retry against the recomputed base:
+            # Re-validated on EVERY attempt against the recomputed base:
             # a lost commit race re-bases on the interloper, and the
             # interloper may have a different schema or carry deletion
-            # vectors — validating only once (pre-loop) would let a
-            # racing writer publish a chain member that violates the
-            # exact-match/additive contract or resurrects deleted rows
-            # (r10 advice items).
+            # vectors — validating only once would let a racing writer
+            # publish a chain member that violates the exact-match/
+            # additive contract or resurrects deleted rows (r10 advice
+            # items).
             _validate_append_base(
                 spark,
                 root,
@@ -683,16 +683,6 @@ def write_version(
                 allow_evolution=_append_evolution,
                 allow_base_tombstones=_allow_base_tombstones,
             )
-        # WRITER-UNIQUE staging name (r13): concurrent writers racing
-        # on the same v=N must never share a staging dir — with a
-        # deterministic name, writer B's pre-write sweep deletes
-        # writer A's in-flight bytes, and A could then publish B's
-        # HALF-WRITTEN files under the verified rename (the multi-
-        # writer model test caught exactly this). Unique names make
-        # every staging dir single-writer; the rename race stays the
-        # one commit arbiter. Crashed writers' dead staging dirs are
-        # swept by expire_versions (N <= latest is provably dead).
-        staging = f"{root.rstrip('/')}/.staging_v{n}.{uuid.uuid4().hex[:12]}"
         df.write.mode("overwrite").parquet(staging)
         pos_delete_rows = None
         if embedded_pos_deletes is not None:
@@ -721,19 +711,21 @@ def write_version(
                 if bloom_cols
                 else None
             )
-            ndv = (
-                _build_file_ndv(spark, staging, list(ndv_cols))
-                if ndv_cols
-                else None
-            )
-
-            def _write_json(name: str, doc: dict) -> None:
-                out = fs.create(Path(f"{staging}/{name}"), True)
-                try:
-                    out.write(bytearray(json.dumps(doc).encode("utf-8")))
-                finally:
-                    out.close()
-
+            ndv = _build_file_ndv(spark, staging, list(ndv_cols)) if ndv_cols else None
+            doc = {"stats_cols": list(stats_cols or []), "committed_at": time.time()}
+            if bloom_cols:
+                doc["bloom_cols"] = list(bloom_cols)
+            if ndv_cols:
+                # NDV sketches stay in the ROOT doc even when the
+                # per-file entries shard: one ~4 KB sketch per (col,
+                # file) is manifest-list-scale metadata, and keeping
+                # them together makes snapshot_ndv one read
+                doc["ndv_cols"] = list(ndv_cols)
+                doc["ndv"] = ndv
+            if base_version is not None:
+                doc["base_version"] = base_version
+            if pos_delete_rows is not None:
+                doc["pos_delete_rows"] = pos_delete_rows
             fnames = sorted(stats)
             if manifest_shard_files and len(fnames) > manifest_shard_files:
                 # Manifest LIST: the root _manifest.json names per-shard
@@ -741,10 +733,9 @@ def write_version(
                 # entries — no single metadata file grows with the
                 # snapshot. The shards stage WITH the data, so the one
                 # commit rename still publishes everything atomically.
-                shard_names = []
+                shards = []
                 for si in range(0, len(fnames), manifest_shard_files):
                     chunk = fnames[si : si + manifest_shard_files]
-                    sname = f"_manifest-{si // manifest_shard_files:05d}.json"
                     sdoc = {
                         "files": {f: stats[f] for f in chunk},
                         "file_nulls": {f: file_nulls[f] for f in chunk},
@@ -755,90 +746,100 @@ def write_version(
                             c: {f: per[f] for f in chunk if f in per}
                             for c, per in blooms.items()
                         }
-                    _write_json(sname, sdoc)
-                    shard_names.append(sname)
-                doc = {
-                    "manifest_version": 3,
-                    "sharded": True,
-                    "shards": shard_names,
-                    "stats_cols": list(stats_cols or []),
-                    "committed_at": time.time(),
-                }
-                if bloom_cols:
-                    doc["bloom_cols"] = list(bloom_cols)
-                if ndv is not None:
-                    # NDV sketches stay in the ROOT doc even when the
-                    # per-file entries shard: one ~4 KB sketch per
-                    # (col, file) is manifest-list-scale metadata, and
-                    # keeping them together makes snapshot_ndv one read
-                    doc["ndv_cols"] = list(ndv_cols)
-                    doc["ndv"] = ndv
-                if base_version is not None:
-                    doc["base_version"] = base_version
-                if pos_delete_rows is not None:
-                    doc["pos_delete_rows"] = pos_delete_rows
-                if manifest_extra:
-                    doc.update(manifest_extra)
-                _write_json(MANIFEST_NAME, doc)
+                    shards.append(f"_manifest-{si // manifest_shard_files:05d}.json")
+                    _write_json(fs, jvm, f"{staging}/{shards[-1]}", sdoc)
+                doc.update(manifest_version=3, sharded=True, shards=shards)
             else:
-                doc = {
-                    "manifest_version": 2,
-                    "stats_cols": list(stats_cols or []),
-                    "files": stats,
-                    "file_nulls": file_nulls,
-                    "file_rows": file_rows,
-                    "committed_at": time.time(),
-                }
-                if bloom_cols:
-                    doc["bloom_cols"] = list(bloom_cols)
+                doc.update(
+                    manifest_version=2,
+                    files=stats,
+                    file_nulls=file_nulls,
+                    file_rows=file_rows,
+                )
+                if blooms is not None:
                     doc["blooms"] = blooms
-                if ndv is not None:
-                    doc["ndv_cols"] = list(ndv_cols)
-                    doc["ndv"] = ndv
-                if base_version is not None:
-                    doc["base_version"] = base_version
-                if pos_delete_rows is not None:
-                    doc["pos_delete_rows"] = pos_delete_rows
-                if manifest_extra:
-                    doc.update(manifest_extra)
-                _write_json(MANIFEST_NAME, doc)
+            doc.update(manifest_extra or {})
+            _write_json(fs, jvm, f"{staging}/{MANIFEST_NAME}", doc)
         if audit is not None:
             spark.catalog.refreshByPath(staging)
             if not audit(spark.read.parquet(staging)):
-                fs.delete(Path(staging), True)
                 raise AuditFailed(
                     f"audit refused snapshot targeting v={n} at {root}; "
                     "staging deleted, nothing published"
                 )
-        if commit_staged(fs, jvm, root, staging, n):
-            return n
-        # Lost the race: someone committed v=N between our latest_version
-        # read and our rename; commit_staged already removed our bytes.
-        # Retry at N+1. The winner's files are untouched.
+
+    return commit_next(spark, root, "v=", stage)
 
 
-def commit_staged(fs, jvm, root: str, staging: str, n: int, prefix: str = "v=") -> bool:
-    """Atomically publish a fully-staged snapshot dir as ``<prefix>N``
-    (``v=N`` by default); the shared commit seam for ``write_version``,
-    the optimistic transaction layer (operators/transactions.py), and
-    delete-vector commits (operators/deletes.py, ``prefix="d="``).
-    Returns True iff THIS writer owns the target afterwards. The
-    rename's return value alone is not a reliable verdict (see
-    ``write_version``: LocalFileSystem nests the staging dir inside an
-    existing destination and returns true), so the commit is verified
-    by the absence of a nested staging dir. On a lost race the writer's
-    bytes are deleted wherever they landed (nested under the winner's
-    target on local FS, still at ``staging`` on HDFS) — the winner's
+def commit_at(spark: SparkSession, log_root: str, prefix: str, n: int, stage) -> bool:
+    """One attempt to publish slot ``<prefix>n`` of the numbered log at
+    ``log_root`` (``v=`` versions, ``d=`` delete commits, ``t=``
+    transaction manifests, ``s=`` branch entries); True iff THIS writer
+    owns the slot afterwards. The module's one commit protocol.
+
+    ``stage(staging, n)`` writes everything the slot publishes (data,
+    manifest, JSON) into a writer-unique staging dir
+    ``log_root/.staging_{p}{n}.{token}`` (``p`` = the prefix letter),
+    so concurrent writers racing on the same slot never share or sweep
+    each other's bytes (r13). If ``stage`` raises, the staging dir is
+    deleted and the error propagates: nothing publishes.
+
+    Then one rename publishes it. The rename's return value alone is
+    not a reliable verdict: HDFS rename fails when the destination
+    exists, but Hadoop's LocalFileSystem rename onto an existing dir
+    returns true and moves the staging dir INSIDE it (dot-prefixed,
+    invisible to parquet readers: a silent lost write). So the commit
+    is verified by the absence of a nested staging dir. On a lost race
+    the writer's bytes are deleted wherever they landed — the winner's
     files are never touched."""
+    fs, hroot, jvm = _fs(spark, log_root)
     Path = jvm.org.apache.hadoop.fs.Path
-    target = f"{root.rstrip('/')}/{prefix}{n}"
-    nested = f"{target}/{os.path.basename(staging.rstrip('/'))}"
-    renamed = fs.rename(Path(staging), Path(target))
-    if renamed and not fs.exists(Path(nested)):
+    fs.mkdirs(hroot)
+    base = log_root.rstrip("/")
+    name = f".staging_{prefix[:-1]}{n}.{uuid.uuid4().hex[:12]}"
+    staging = Path(f"{base}/{name}")
+    try:
+        stage(f"{base}/{name}", n)
+    except BaseException:
+        fs.delete(staging, True)
+        raise
+    nested = Path(f"{base}/{prefix}{n}/{name}")
+    if fs.rename(staging, Path(f"{base}/{prefix}{n}")) and not fs.exists(nested):
         return True
-    fs.delete(Path(nested), True)
-    fs.delete(Path(staging), True)
+    fs.delete(nested, True)
+    fs.delete(staging, True)
     return False
+
+
+def commit_next(spark: SparkSession, log_root: str, prefix: str, stage) -> int:
+    """Publish ``stage`` at the next free number of the log at
+    ``log_root`` and return that number: list the log, ``commit_at``
+    the next slot, and on a lost race list again and retry. ``stage``
+    re-runs per attempt, so any precondition it checks (an append's
+    base validation, a transaction's conflict scan) sees the base
+    actually committed below ``n`` — that is, ``n - 1``."""
+    while True:
+        done = list_numbered_dirs(spark, log_root, prefix)
+        n = done[-1] + 1 if done else 0
+        if commit_at(spark, log_root, prefix, n, stage):
+            return n
+
+
+def sweep_dead_staging(spark: SparkSession, log_root: str, prefix: str) -> None:
+    """Delete the staging dirs of the log at ``log_root`` that can never
+    publish: a ``.staging_{p}N`` dir (any token, or none — the pre-r13
+    shape) with N <= the newest committed number targets a taken slot.
+    A live writer's staging targets a free slot and is left alone, so
+    the sweep never races a writer."""
+    done = list_numbered_dirs(spark, log_root, prefix)
+    if not done:
+        return
+    pat = re.compile(rf"^\.staging_{re.escape(prefix[:-1])}(\d+)(\..*)?$")
+    fs, hroot, _ = _fs(spark, log_root)
+    for status in fs.listStatus(hroot):
+        m = pat.match(status.getPath().getName())
+        if status.isDirectory() and m and int(m.group(1)) <= done[-1]:
+            fs.delete(status.getPath(), True)
 
 
 def replace_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
@@ -1388,10 +1389,10 @@ def expire_versions(
     leaves a clean prefix-trimmed history.
 
     Concurrency: only staging dirs whose target version is ALREADY
-    committed are swept — ``.staging_vN`` with N <= latest can never
-    commit (its rename target exists), so it is guaranteed dead, while
-    a live writer's staging dir always targets latest+1 and is left
-    alone. Vacuum therefore never races a writer.
+    committed are swept (``sweep_dead_staging``: ``.staging_vN`` with
+    N <= latest can never commit), while a live writer's staging dir
+    always targets latest+1 and is left alone. Vacuum therefore never
+    races a writer.
 
     TAGGED versions are never expired (operators/refs.py): a named pin
     protects its snapshot from retention, like ref-based retention in
@@ -1412,7 +1413,7 @@ def expire_versions(
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    fs, hroot, jvm = _fs(spark, root)
+    fs, _, jvm = _fs(spark, root)
     Path = jvm.org.apache.hadoop.fs.Path
     versions = list_versions(spark, root)
     # tags AND branch heads protect their targets (and, via the chain
@@ -1440,20 +1441,7 @@ def expire_versions(
         # deleted version dirs may have memoized manifests/schemas (and
         # a fully-drained root could even reuse the numbers)
         invalidate_metadata_cache(root)
-    latest = versions[-1] if versions else -1
-    if fs.exists(hroot):
-        for status in fs.listStatus(hroot):
-            name = status.getPath().getName()
-            if not (status.isDirectory() and name.startswith(".staging_v")):
-                continue
-            try:
-                # both shapes: ".staging_v7" (pre-r13) and the
-                # writer-unique ".staging_v7.<token>"
-                n = int(name[len(".staging_v"):].split(".")[0])
-            except ValueError:
-                continue
-            if n <= latest:
-                fs.delete(status.getPath(), True)
+    sweep_dead_staging(spark, root, "v=")
     return expired
 
 

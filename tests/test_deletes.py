@@ -645,3 +645,33 @@ def test_external_vector_census_lists_only_existing_trees(spark, tmp_path, monke
     monkeypatch.setattr(deletes, "_embedded_deletes_dir", lambda *a: None)
     assert deletes.has_any_delete_vectors(spark, root, 5)
     assert listed[2:] == [f"{root}/_pos_deletes/v=5", f"{root}/_deletes/v=3"]
+
+
+def test_vector_row_sidecar_matches_committed_tombstone(spark, tmp_path):
+    """``_rows.json`` (observed on the tombstone write) equals the row
+    count of the committed tombstone: duplicate and NULL keys collapse
+    before the count, an empty key frame stamps 0, and a positional
+    commit counts its addresses."""
+    import json
+
+    from pyspark_big_data_spark.operators.deletes import (
+        delete_positions,
+        with_positions,
+    )
+
+    root = str(tmp_path / "t")
+    write_version(spark.range(20).selectExpr("id AS k"), root)
+    keys = spark.createDataFrame([(1,), (1,), (None,), (2,)], "k long")
+    k_dups = delete_keys(spark, root, keys, "k")
+    k_empty = delete_keys(spark, root, spark.createDataFrame([], "k long"), "k")
+    addrs = with_positions(spark, root, 0).filter("k >= 15").select("_file", "_pos")
+    p = delete_positions(spark, root, addrs)
+    for commit_dir, expect in [
+        (f"{root}/_deletes/v=0/d={k_dups}", 2),
+        (f"{root}/_deletes/v=0/d={k_empty}", 0),
+        (f"{root}/_pos_deletes/v=0/d={p}", 5),
+    ]:
+        with open(f"{commit_dir}/_rows.json") as f:
+            rows = json.load(f)["rows"]
+        spark.catalog.refreshByPath(commit_dir)
+        assert rows == spark.read.parquet(commit_dir).count() == expect, commit_dir

@@ -245,12 +245,17 @@ def test_branch_cas_is_arbitrated_not_checked(spark, tmp_path):
     import uuid
 
     from pyspark_big_data_spark.operators.refs import (
+        _branch_dir,
         _branch_state,
-        _commit_branch_entry,
         branch_head,
         create_branch,
     )
-    from pyspark_big_data_spark.operators.versioned import write_version
+    from pyspark_big_data_spark.operators.versioned import (
+        _fs,
+        _write_json,
+        commit_at,
+        write_version,
+    )
 
     root = str(tmp_path / "vds")
     write_version(_bdf(spark, 0, 100), root)
@@ -263,8 +268,14 @@ def test_branch_cas_is_arbitrated_not_checked(spark, tmp_path):
     seq, doc = _branch_state(spark, root, "main")
     a = {"version": 1, "seq": seq + 1, "writer": uuid.uuid4().hex}
     b = {"version": 2, "seq": seq + 1, "writer": uuid.uuid4().hex}
-    won_a = _commit_branch_entry(spark, root, "main", seq + 1, a)
-    won_b = _commit_branch_entry(spark, root, "main", seq + 1, b)
+    fs, _, jvm = _fs(spark, root)
+
+    def entry(doc):
+        return lambda staging, _: _write_json(fs, jvm, f"{staging}/doc.json", doc)
+
+    bdir = _branch_dir(root, "main")
+    won_a = commit_at(spark, bdir, "s=", seq + 1, entry(a))
+    won_b = commit_at(spark, bdir, "s=", seq + 1, entry(b))
     assert won_a and not won_b  # the second writer OBSERVES its loss
     assert branch_head(spark, root, "main") == 1  # winner never buried
 
@@ -628,6 +639,32 @@ def test_prune_branch_log(spark, tmp_path):
     assert branch_head(spark, root, "main") == 0
     with pytest.raises(ValueError, match=">= 1"):
         prune_branch_log(spark, root, "main", keep_last=0)
+
+
+def test_prune_branch_log_sweeps_only_dead_staging(spark, tmp_path):
+    """A crashed repoint's staging dir for a taken slot (K <= head) can
+    never publish and is swept; one for the next slot may belong to a
+    live writer and survives."""
+    import os
+
+    from pyspark_big_data_spark.operators.refs import (
+        _branch_dir,
+        create_branch,
+        prune_branch_log,
+        update_branch,
+    )
+    from pyspark_big_data_spark.operators.versioned import write_version
+
+    root = str(tmp_path / "vds")
+    write_version(_bdf(spark, 0, 10), root)
+    write_version(_bdf(spark, 0, 5), root)
+    create_branch(spark, root, "main", 0)
+    update_branch(spark, root, "main", 1, expected_head=0)  # head is s=1
+    bdir = _branch_dir(root, "main")
+    for name in (".staging_s0.aaa", ".staging_s1.bbb", ".staging_s2.ccc"):
+        os.makedirs(f"{bdir}/{name}")
+    assert prune_branch_log(spark, root, "main", keep_last=10) == []
+    assert sorted(n for n in os.listdir(bdir) if n.startswith(".")) == [".staging_s2.ccc"]
 
 
 @pytest.mark.parametrize("seed", [7, 21, 42, 99])

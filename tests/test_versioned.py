@@ -255,25 +255,26 @@ def test_lost_race_retries_instead_of_nesting(spark, tmp_path, monkeypatch):
     existing ``v=N`` returns TRUE and moves the staging dir INSIDE it —
     without post-rename verification the loser would 'commit' its
     snapshot as an invisible ``v=N/.staging_vN`` (a silent lost write).
-    Simulate the race with a stale latest_version read: the loser must
-    detect the nesting, leave the winner's v=1 byte-identical, and land
-    its own snapshot at v=2."""
+    Simulate the race with a stale read of the log listing that
+    ``commit_next`` picks the next number from: the loser must detect
+    the nesting, leave the winner's v=1 byte-identical, and land its
+    own snapshot at v=2."""
     from pyspark_big_data_spark.operators import versioned
 
     root = str(tmp_path / "vds")
     write_version(_df(spark, [(1, 1.0), (2, 2.0)]), root)  # v=0
     write_version(_df(spark, [(3, 3.0)]), root)  # v=1 (the race winner)
 
-    real = versioned.latest_version
+    real = versioned.list_numbered_dirs
     calls = {"n": 0}
 
-    def stale_once(spark_, root_):
+    def stale_once(spark_, root_, prefix):
         calls["n"] += 1
-        # first read returns the pre-race latest (0), so the writer
+        # first read returns the pre-race log ([0]), so the writer
         # attempts v=1, which already exists
-        return 0 if calls["n"] == 1 else real(spark_, root_)
+        return [0] if calls["n"] == 1 else real(spark_, root_, prefix)
 
-    monkeypatch.setattr(versioned, "latest_version", stale_once)
+    monkeypatch.setattr(versioned, "list_numbered_dirs", stale_once)
     assert write_version(_df(spark, [(4, 4.0)]), root) == 2
     assert calls["n"] >= 2  # the retry actually happened
 
@@ -285,6 +286,115 @@ def test_lost_race_retries_instead_of_nesting(spark, tmp_path, monkeypatch):
         d for d in os.listdir(f"{root}/v=1") if d.startswith(".staging_v1")
     ]
     assert {(r["k"], r["x"]) for r in read_version(spark, root, 2).collect()} == {(4, 4.0)}
+
+
+def _boom_commit(kind):
+    """One commit of ``kind``; every frame but ``vector_sidecar``'s
+    fails its write job on row 3."""
+    from pyspark_big_data_spark.operators.deletes import delete_keys, delete_positions
+    from pyspark_big_data_spark.operators.transactions import commit_replace_where
+    from pyspark_big_data_spark.operators.versioned import append_version
+
+    def boom(spark):
+        return spark.range(5).selectExpr(
+            "if(id = 3, raise_error('boom'), id) AS k", "CAST(id AS DOUBLE) AS x"
+        )
+
+    return {
+        "write_version": lambda spark, root: write_version(boom(spark), root),
+        "append_version": lambda spark, root: append_version(boom(spark), root),
+        "delete_keys": lambda spark, root: delete_keys(spark, root, boom(spark), "k"),
+        # non-nullable addresses: the null-address pre-check folds away,
+        # so the failure happens in the tombstone write's job
+        "delete_positions": lambda spark, root: delete_positions(
+            spark,
+            root,
+            spark.range(5).selectExpr(
+                "'v=0/part-0.parquet' AS _file",
+                "coalesce(if(id = 3, raise_error('boom'), id), 0L) AS _pos",
+            ),
+        ),
+        "commit_replace_where": lambda spark, root: commit_replace_where(
+            spark, root, boom(spark), "k", [3], 0
+        ),
+        # a good frame: the test fails the sidecar stamp instead
+        "vector_sidecar": lambda spark, root: delete_keys(
+            spark, root, spark.range(2).toDF("k"), "k"
+        ),
+    }[kind]
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["write_version", "append_version", "delete_keys", "delete_positions",
+     "commit_replace_where", "vector_sidecar"],
+)
+def test_failed_commit_leaves_no_staging(spark, tmp_path, monkeypatch, kind):
+    """A commit whose stage fails propagates the error, publishes
+    nothing and leaves no ``.staging_*`` debris anywhere under the
+    table root. A vector commit's failing frame fails in the shuffle
+    before its write starts, so ``vector_sidecar`` also fails one after
+    the tombstone bytes are written (at the ``_rows.json`` stamp)."""
+    from pyspark_big_data_spark.operators import deletes
+
+    root = str(tmp_path / "vds")
+    write_version(_df(spark, [(1, 1.0), (2, 2.0)]), root)
+    if kind == "vector_sidecar":
+        def boom(*_):
+            raise RuntimeError("boom")
+
+        monkeypatch.setattr(deletes, "_write_json", boom)
+    with pytest.raises(Exception, match="boom"):
+        _boom_commit(kind)(spark, root)
+    debris = [
+        os.path.join(d, n)
+        for d, dirs, files in os.walk(root)
+        for n in dirs + files
+        if n.startswith(".staging_")
+    ]
+    assert debris == []
+    assert list_versions(spark, root) == [0]
+    assert deletes.list_delete_commits(spark, root, 0) == []
+    assert deletes.list_pos_delete_commits(spark, root, 0) == []
+
+
+def test_distributed_footer_stats_match_driver_path(spark, tmp_path, monkeypatch):
+    """The distributed footer pass (taken above ``_DRIVER_STATS_MAX_FILES``
+    files, and on remote roots) must stamp exactly the per-file stats,
+    null counts and row counts the driver-side pass derives from the
+    same files."""
+    from pyspark_big_data_spark.operators import versioned
+
+    driver_calls = []
+    real_entry = versioned._file_footer_entry
+
+    def spy(path, cols):
+        driver_calls.append(path)
+        return real_entry(path, cols)
+
+    root = str(tmp_path / "vds")
+    df = spark.range(0, 60).selectExpr(
+        "id AS k",
+        "concat('s', CAST(id % 7 AS STRING)) AS s",
+        "if(id % 5 = 0, NULL, id * 1.5) AS x",
+    ).repartitionByRange(4, "k")
+    cols = ["k", "s", "x"]
+    monkeypatch.setattr(versioned, "_DRIVER_STATS_MAX_FILES", 0)
+    monkeypatch.setattr(versioned, "_file_footer_entry", spy)
+    write_version(df, root, stats_cols=cols)
+    assert driver_calls == []  # the footers were read on executors
+    monkeypatch.undo()
+
+    m = manifest(spark, root, 0)
+    fs, _, jvm = versioned._fs(spark, root)
+    files = versioned._list_parquet_files(fs, jvm, f"{root}/v=0")
+    assert len(files) > 1
+    stats, nulls, rows = versioned._collect_file_stats(spark, files, cols)
+    assert m["files"] == stats
+    assert m["file_nulls"] == nulls
+    assert m["file_rows"] == rows
+    assert sum(rows.values()) == 60
+    assert sum(n["x"] for n in nulls.values()) == 12
 
 
 def test_derived_chain_reads_pinned_snapshots(spark, tmp_path):
