@@ -30,10 +30,6 @@ def hash48(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
 
 
-def hash48_sql_spark(expr: str) -> str:
-    return f"CAST(conv(substr(md5({expr}), 1, 12), 16, 10) AS BIGINT)"
-
-
 def hash48_sql_duckdb(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 12))::BIGINT)"
 
@@ -48,10 +44,6 @@ def hash60(col: Column) -> Column:
     differential oracles.
     """
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def hash60_sql_duckdb(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
 
 # ---------------------------------------------------------------------------

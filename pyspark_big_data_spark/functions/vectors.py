@@ -76,22 +76,6 @@ def dot_flat(prefix_a: str, prefix_b: str, dim: int) -> Column:
     return acc
 
 
-def norm_unrolled(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_unrolled(a, a, dim))
-
-
-def cosine_unrolled(
-    a: Column,
-    b: Column,
-    dim: int,
-    norm_a: Column | None = None,
-    norm_b: Column | None = None,
-) -> Column:
-    na = norm_unrolled(a, dim) if norm_a is None else norm_a
-    nb = norm_unrolled(b, dim) if norm_b is None else norm_b
-    return dot_unrolled(a, b, dim) / (na * nb)
-
-
 def cosine(a: Column, b: Column, norm_a: Column | None = None, norm_b: Column | None = None) -> Column:
     na = norm(a) if norm_a is None else norm_a
     nb = norm(b) if norm_b is None else norm_b

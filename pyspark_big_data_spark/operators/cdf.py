@@ -56,8 +56,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyspark_big_data_spark.operators import deletes
 from pyspark_big_data_spark.operators.deletes import (
-    BROADCAST_THRESHOLD_ROWS,
     FILE_COL,
     POS_COL,
     _embedded_deletes_dir,
@@ -150,7 +150,6 @@ def _preimage_rows(
     root: str,
     v: int,
     head: DataFrame,
-    broadcast_threshold_rows: int,
 ) -> DataFrame | None:
     """The rows retired by ``v``'s embedded vector, read back from the
     ancestor files the vector addresses — None when ``v`` carries no
@@ -205,7 +204,7 @@ def _preimage_rows(
     m = manifest(spark, root, v)
     n = (m or {}).get("pos_delete_rows")
     side = vec
-    if n is None or int(n) <= broadcast_threshold_rows:
+    if n is None or int(n) <= deletes.BROADCAST_THRESHOLD_ROWS:
         side = F.broadcast(vec)
     pre = addressed.join(side, [FILE_COL, POS_COL], "inner").drop(FILE_COL, POS_COL)
     return _aligned_to(pre, head)
@@ -227,13 +226,12 @@ def _typed_version(
     v: int,
     head: DataFrame,
     merge_keys,
-    broadcast_threshold_rows: int,
 ) -> DataFrame:
     """One commit's typed change rows (head columns + _change_type +
     _commit_version)."""
     cols = head.columns
     delta = _delta_rows(spark, root, v, head)
-    pre = _preimage_rows(spark, root, v, head, broadcast_threshold_rows)
+    pre = _preimage_rows(spark, root, v, head)
     mutation = (manifest(spark, root, v) or {}).get("row_mutation")
     if pre is None:
         typed = delta.withColumn(CHANGE_TYPE_COL, F.lit(INSERT))
@@ -288,7 +286,6 @@ def table_changes_typed(
     from_version: int,
     to_version: int,
     merge_keys=None,
-    broadcast_threshold_rows: int = BROADCAST_THRESHOLD_ROWS,
 ) -> DataFrame:
     """The typed change rows between two chain versions: head columns
     plus ``_change_type`` (insert / delete / update_preimage /
@@ -314,9 +311,7 @@ def table_changes_typed(
         )
     out = None
     for v in commits:
-        t = _typed_version(
-            spark, root, v, head, merge_keys, broadcast_threshold_rows
-        )
+        t = _typed_version(spark, root, v, head, merge_keys)
         out = t if out is None else out.unionByName(t)
     return out
 

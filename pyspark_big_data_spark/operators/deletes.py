@@ -62,7 +62,7 @@ MOR anti-join broadcasts it (plan: BroadcastHashJoin LeftAnti — zero
 shuffle of the data side, the only acceptable cost model when the
 snapshot is 100 TB and the delete is a few million keys). The
 broadcast hint is ENFORCED by a threshold, not assumed: above
-``broadcast_threshold_rows`` total tombstones (priced from the
+``BROADCAST_THRESHOLD_ROWS`` total tombstones (priced from the
 row-count sidecars, zero jobs) the hint is dropped and the planner
 falls back to a shuffle join — a billion-row erasure vector degrades
 to a slower plan instead of a driver OOM. That is also the signal to
@@ -85,6 +85,7 @@ from pyspark_big_data_spark.operators.versioned import (
     EMBEDDED_DELETES_DIR,
     _fs,
     _read_json,
+    _read_planned,
     _resolve_version,
     _write_json,
     commit_next,
@@ -92,16 +93,19 @@ from pyspark_big_data_spark.operators.versioned import (
     list_versions,
     manifest,
     read_version,
-    read_version_pruned,
     version_chain,
     write_version,
 )
 
 DELETES_DIR = "_deletes"
 
-# Default ceiling for broadcasting the tombstone side of the MOR
-# anti-join: ~10M keys (~100-200 MB serialized) is the upper edge of a
-# sane driver/executor broadcast budget. Above it the hint is dropped.
+# Ceiling for broadcasting a priced join side: the tombstones of the MOR
+# anti-join here, a MERGE source (merge.py), a typed-feed commit's
+# retired rows (cdf.py) and the keyed branch-merge extracts (refs.py).
+# ~10M keys (~100-200 MB serialized) is the upper edge of a sane
+# driver/executor broadcast budget; above it the hint is dropped. Every
+# caller reads this name at call time (never a bound default), so one
+# setting moves them all.
 BROADCAST_THRESHOLD_ROWS = 10_000_000
 
 
@@ -180,12 +184,12 @@ def delete_keys(
             f"(schema: {sorted(snap_cols)})"
         )
     commits = list_delete_commits(spark, root, version)
-    existing_key = _delete_key_col(
+    existing = _equality_tombstones(
         spark, version, _delete_commit_dirs(root, version, commits)
     )
-    if existing_key is not None and existing_key != key:
+    if existing is not None and existing.columns != [key]:
         raise ValueError(
-            f"v={version} already has tombstones keyed by {existing_key!r}; "
+            f"v={version} already has tombstones keyed by {existing.columns[0]!r}; "
             f"a second key column ({key!r}) would make merge-on-read "
             "ambiguous — materialize first"
         )
@@ -198,24 +202,29 @@ def _delete_commit_dirs(root: str, version: int, commits: list[int]) -> list[str
     return [f"{droot}/d={k}" for k in commits]
 
 
-def _delete_key_col(spark: SparkSession, version: int, paths: list[str]) -> str | None:
-    """The single key column of the equality tombstones committed at
-    ``paths`` for ``v=version`` (None when there are none). Enforces
-    the one-key contract on read, so a foreign file dropped into the
-    deletes tree fails loudly instead of silently skewing the
-    anti-join."""
-    cols = set()
+def _equality_tombstones(
+    spark: SparkSession, version: int, paths: list[str]
+) -> DataFrame | None:
+    """The union of the equality tombstones committed at ``paths`` for
+    ``v=version`` (None when there are none), read once with merged
+    schemas: one schema job for the whole member, which the MOR
+    anti-join then reuses. Enforces the one-key contract on that read:
+    a foreign file with another column in the deletes tree widens the
+    merged schema and fails loudly instead of silently skewing the
+    anti-join. Not de-duplicated: each commit is distinct by
+    construction, the anti-join ignores duplicates, and a cross-commit
+    distinct would be a shuffle re-paid on every MOR evaluation."""
+    if not paths:
+        return None
     for p in paths:
         spark.catalog.refreshByPath(p)
-        cols.update(spark.read.parquet(p).columns)
-    if not cols:
-        return None
-    if len(cols) != 1:
+    keys = spark.read.option("mergeSchema", "true").parquet(*paths)
+    if len(keys.columns) != 1:
         raise ValueError(
             f"tombstones of v={version} carry mixed key columns "
-            f"{sorted(cols)}; merge-on-read needs exactly one"
+            f"{sorted(keys.columns)}; merge-on-read needs exactly one"
         )
-    return next(iter(cols))
+    return keys
 
 
 # ---------------------------------------------------------------------------
@@ -435,13 +444,9 @@ def _chain_vectors(spark: SparkSession, root: str, version: int):
     for v in members:
         eq_ids, pos_ids = external.get(v, ([], []))
         paths = _delete_commit_dirs(root, v, eq_ids)
-        kcol = _delete_key_col(spark, v, paths)
-        if kcol is not None:
-            # the union of this member's commits, NOT de-duplicated
-            # (r14): each commit is distinct by construction, the
-            # anti-join ignores duplicates, and a cross-commit distinct
-            # was a shuffle re-paid on every MOR evaluation
-            eq.append((v, spark.read.parquet(*paths), kcol))
+        keys = _equality_tombstones(spark, v, paths)
+        if keys is not None:
+            eq.append((v, keys, keys.columns[0]))
             total_rows += sum(_commit_rows(spark, p)[0] for p in paths)
         proot = _pos_deletes_root(root, v)
         for k in pos_ids:
@@ -465,10 +470,6 @@ def read_version_mor(
     spark: SparkSession,
     root: str,
     version: int | None = None,
-    pruned_col: str | None = None,
-    lower=None,
-    upper=None,
-    broadcast_threshold_rows: int = BROADCAST_THRESHOLD_ROWS,
     keep_addresses: bool = False,
     selected_files: list[str] | None = None,
 ) -> DataFrame:
@@ -490,40 +491,25 @@ def read_version_mor(
 
     The tombstone side is broadcast while the total vector rows
     (priced from commit sidecars, zero jobs) stay at or under
-    ``broadcast_threshold_rows``; above it the hint is dropped and the
+    ``BROADCAST_THRESHOLD_ROWS``; above it the hint is dropped and the
     planner picks a shuffle join — slower, but never a driver OOM.
     That is the cue to ``materialize_deletes``.
-
-    With ``pruned_col``, the data side goes through
-    ``read_version_pruned`` first — footer-stats file pruning COMPOSES
-    with merge-on-read (prune, then anti-join the survivors), which is
-    the plan a 100 TB range query over a deleted-from snapshot needs:
-    file skip first, tombstone mask second, both before any wide op.
 
     ``keep_addresses=True`` retains the ``(_file, _pos)`` address
     columns of the SURVIVING rows — the planner scan a MERGE runs to
     decide which live rows its own positional vectors retire
     (operators/merge.py).
 
-    ``selected_files`` (a caller-computed pruning plan, e.g.
-    ``bloom_file_plan_multi``'s) reads only that file subset — a
-    SUPERSET pre-cut contract like every pruning here: the caller's
-    own predicate/join provides exactness. An empty list is the
+    ``selected_files`` (a caller-computed file plan, e.g.
+    ``pruned_file_plan``'s or ``bloom_file_plan``'s) reads only that
+    file subset, so file pruning COMPOSES with merge-on-read (skip
+    files first, mask tombstones second, both before any wide op). It
+    is a SUPERSET pre-cut like every plan here: the caller's own
+    predicate/join provides exactness. An empty list is the
     provably-no-file case (empty frame, correct schema)."""
     version = _resolve_version(spark, root, version)
     if selected_files is not None:
-        if pruned_col is not None:
-            raise ValueError("pass pruned_col OR selected_files, not both")
-        if selected_files:
-            from pyspark_big_data_spark.operators.versioned import (
-                _read_selected_aligned,
-            )
-
-            base = _read_selected_aligned(spark, root, version, selected_files)
-        else:
-            base = read_version(spark, root, version).filter(F.lit(False))
-    elif pruned_col is not None:
-        base = read_version_pruned(spark, root, pruned_col, lower, upper, version)
+        base = _read_planned(spark, root, version, selected_files)
     else:
         base = read_version(spark, root, version)
     eq, pos_paths, legacy_pos, total_rows = _chain_vectors(spark, root, version)
@@ -537,7 +523,7 @@ def read_version_mor(
             "*",
         )
 
-    hint = total_rows <= broadcast_threshold_rows
+    hint = total_rows <= BROADCAST_THRESHOLD_ROWS
     members = version_chain(spark, root, version)
     # vectors against the head mask the whole chain; only INTERIOR
     # vectors need the per-row member sequence

@@ -1,4 +1,4 @@
-"""Join operators: hint passthrough, broadcast, and skew salting.
+"""Join operators: broadcast and skew salting.
 
 The reference hand-rolls broadcast and repartition joins as RDD code
 (``src/query4.py:104-173``); on the engine those are one-liners around
@@ -12,24 +12,6 @@ works for shuffled-hash joins and extreme key concentration.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-
-JOIN_HINTS = ("broadcast", "merge", "shuffle_hash", "shuffle_replicate_nl")
-
-
-def hinted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str] | Column,
-    how: str = "inner",
-    hint: str | None = None,
-) -> DataFrame:
-    """Equi join with an optional per-join strategy hint (J5,
-    == ``src/query3.py:117-126``; None lets Catalyst/AQE choose)."""
-    if hint is not None:
-        if hint not in JOIN_HINTS:
-            raise ValueError(f"unknown join hint {hint!r}; expected one of {JOIN_HINTS}")
-        right = right.hint(hint)
-    return left.join(right, on, how)
 
 
 def broadcast_join(

@@ -18,7 +18,7 @@ Execution shape (the 100 TB plan):
    vectors already resolved, so sequential MERGEs compose). It joins
    the source INNER on the key — broadcast while the source's exact
    row count (already paid for by the uniqueness aggregate) stays at
-   or under ``broadcast_threshold_rows``, so the target streams
+   or under ``deletes.BROADCAST_THRESHOLD_ROWS``, so the target streams
    through a BroadcastHashJoin with no shuffle of the big side; a
    larger source drops the hint and AQE plans a shuffle join (slower,
    never a driver OOM). The matched set (O(|source|)) is cached once
@@ -64,17 +64,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyspark_big_data_spark.operators import deletes
 from pyspark_big_data_spark.operators.deletes import (
-    BROADCAST_THRESHOLD_ROWS,
     FILE_COL,
     POS_COL,
     read_version_mor,
 )
 from pyspark_big_data_spark.operators.versioned import (
+    _chain_manifests,
     _resolve_version,
     append_version,
+    bloom_file_plan,
+    pruned_file_plan,
     read_version,
 )
+
+# Largest source (in keys) whose keys are collected to the driver to
+# probe the target's per-file Bloom filters.
+_BLOOM_PRUNE_MAX_KEYS = 100_000
 
 
 def _clause_cond(clause):
@@ -96,11 +103,8 @@ def merge_into(
     when_matched_delete=None,
     when_not_matched_insert=True,
     stats_cols: list[str] | None = None,
-    prune_with_stats: bool = True,
-    bloom_prune_max_keys: int = 100_000,
     manifest_extra: dict | None = None,
     base_version: int | None = None,
-    broadcast_threshold_rows: int = BROADCAST_THRESHOLD_ROWS,
     update_set: dict[str, str] | None = None,
     insert_values: dict[str, str] | None = None,
     when_not_matched_by_source_update=None,
@@ -153,10 +157,10 @@ def merge_into(
     over the target — the same bill every engine pays for these
     clauses.
 
-    ``prune_with_stats`` (default on): when every chain member's
-    manifest carries footer stats for the merge key, the target scan is
-    FILE-PRUNED to the source's [min(key), max(key)] range before the
-    join — the Iceberg merge-on-read file-skipping move. A MERGE whose
+    File pruning: when every chain member's manifest carries footer
+    stats for the merge key, the target scan is FILE-PRUNED to the
+    source's [min(key), max(key)] range before the join — the Iceberg
+    merge-on-read file-skipping move. A MERGE whose
     source touches one day of a year-partitioned-by-key table then
     reads ~1/365th of the files; rows outside the pruned range are
     untouched by definition (they cannot match), so the result is
@@ -165,7 +169,7 @@ def merge_into(
     When the stats range cuts NOTHING (hash-scattered keys span every
     file's [min, max]) or stats are absent, the ladder falls to
     per-file BLOOM probing — for a source of at most
-    ``bloom_prune_max_keys`` keys (collected to the driver, bounded),
+    ``_BLOOM_PRUNE_MAX_KEYS`` keys (collected to the driver, bounded),
     every file whose filter rejects ALL source keys is skipped: the
     CDC-upsert-on-UUID file-skipping shape, where min/max can never
     help but the Blooms pin each key to ~1 file. Both cuts are
@@ -330,53 +334,36 @@ def merge_into(
         # source keys can live in".
         target = None
         by_source = by_upd is not None or by_del is not None
-        if by_source:
-            # an unmatched target row can live in ANY file: the
-            # source-keyed pruning ladder would silently hide rows
-            # from the by-source clauses
-            prune_with_stats = False
-        if prune_with_stats:
-            from pyspark_big_data_spark.operators.versioned import (
-                bloom_file_plan_multi,
-                pruned_file_plan,
-            )
-
-            bounds = counts  # [min, max] rode the uniqueness aggregate
+        # an unmatched target row can live in ANY file: the by-source
+        # clauses must not see the source-keyed pruning ladder's cut
+        if not by_source:
             selected = None
             try:
+                # [min, max] rode the uniqueness aggregate
                 sel, n_sel, n_total = pruned_file_plan(
-                    spark, root, keys[0], bounds["lo"], bounds["hi"], version
+                    spark, root, keys[0], counts["lo"], counts["hi"], version
                 )
                 if n_sel < n_total:
                     selected = sel
             except ValueError:
                 pass  # no/partial manifest stats for the key
-            if selected is None and counts["n"] <= bloom_prune_max_keys:
+            if selected is None and counts["n"] <= _BLOOM_PRUNE_MAX_KEYS:
                 # the stats range cut nothing (or could not run): probe the
                 # per-file Blooms with the source's keys — bounded collect.
                 # Coverage is pre-checked on the (memoized) manifests so a
                 # bloom-less chain never pays the probe-collect job only
-                # to have bloom_file_plan_multi refuse (r14: this was one
+                # to have bloom_file_plan refuse (r14: this was one
                 # wasted source-sized collect per MERGE on every
                 # manifest-less witness table).
-                from pyspark_big_data_spark.operators.versioned import (
-                    manifest,
-                    version_chain,
-                )
-
                 try:
-                    covered = all(
-                        (mf := manifest(spark, root, v)) is not None
-                        and keys[0] in mf.get("bloom_cols", [])
-                        for v in version_chain(spark, root, version)
-                    )
+                    _chain_manifests(spark, root, version, "bloom_cols", keys[0])
                 except ValueError:
-                    covered = False
-                if covered:
+                    pass  # a member without a Bloom filter on the key
+                else:
                     probes = [
                         r[keys[0]] for r in source.select(keys[0]).collect()
                     ]
-                    sel, n_sel, n_total = bloom_file_plan_multi(
+                    sel, n_sel, n_total = bloom_file_plan(
                         spark, root, keys[0], probes, version
                     )
                     if n_sel < n_total:
@@ -401,7 +388,7 @@ def merge_into(
         # is enforced, not assumed — a 500M-row backfill source drops
         # the hint and lets AQE plan a shuffle join instead of OOMing
         # the driver.
-        small_source = counts["n"] <= broadcast_threshold_rows
+        small_source = counts["n"] <= deletes.BROADCAST_THRESHOLD_ROWS
         src_side = source.alias("source")
         if small_source:
             src_side = F.broadcast(src_side)

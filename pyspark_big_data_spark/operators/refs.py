@@ -744,55 +744,6 @@ def _keyed_extracts(old, new, j, keys, n_up: int, n_del: int):
     return upserts, deleted, changed
 
 
-def _keyed_changes(
-    spark: SparkSession,
-    root: str,
-    base_v: int,
-    head_v: int,
-    keys: list[str],
-    _base_proj=None,
-):
-    """Key-level change extract between the MERGE-ON-READ states of two
-    chain-related versions: ``(upserts, deleted, changed_keys, j)``
-    where ``upserts`` are the head's rows for inserted-or-updated keys,
-    ``deleted`` the base's rows for keys gone at the head,
-    ``changed_keys`` the union of both key sets, and ``j`` the
-    PERSISTED narrow diff frame backing all three (the caller
-    unpersists it when done). One co-partitioned full-outer join on
-    the key over NARROW ``(keys, payload-hash)`` projections — the
-    wide rows never cross the exchange (guide: project before the
-    shuffle); unchanged keys (the vast majority at 100 TB) never leave
-    their joined partition. The NULL-key refusals ride the same
-    persisted pass instead of two extra full-scan probe jobs.
-
-    ``_base_proj``: the base side's already-persisted ``(keys, __oh,
-    __o)`` projection — ``merge_branch_keyed`` diffs BOTH branch heads
-    against the same merge base, so it computes/persists that
-    projection once (hash-partitioned by the keys, so both sides' diff
-    joins reuse ONE exchange of the base) and passes it to both
-    extracts.
-
-    Returns ``(upserts, deleted, changed_keys, j, n_changed_rows)``
-    where ``n_changed_rows`` is the diff's changed ROW count
-    (upserts + deletes; equals the changed KEY count whenever keys are
-    unique per snapshot) — priced by the same aggregate as the NULL
-    guard, it sizes the extract broadcasts and lets the caller prove a
-    changeset empty without another job. (merge_branch_keyed uses the
-    split halves — _keyed_diff / _keyed_extracts — directly, fusing
-    both sides' guard aggregates and the overlap census into ONE
-    action; this composition keeps the one-sided contract for tests
-    and tools.)"""
-    old, new, j, stats = _keyed_diff(
-        spark, root, base_v, head_v, keys, _base_proj=_base_proj
-    )
-    row = stats.collect()[0]
-    _guard_null_keys(j, keys, root, row["base_nulls"], row["head_nulls"])
-    upserts, deleted, changed = _keyed_extracts(
-        old, new, j, keys, int(row["n_up"]), int(row["n_del"])
-    )
-    return upserts, deleted, changed, j, int(row["n_up"] + row["n_del"])
-
-
 def merge_branch_keyed(
     spark: SparkSession, root: str, source: str, into: str, key
 ) -> dict:

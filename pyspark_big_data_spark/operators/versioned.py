@@ -26,18 +26,25 @@ its data by the same rename: per-file [min, max] footer stats
 (``read_version_pruned`` skips files by range predicate before Spark
 lists them), per-file row counts (``snapshot_row_count`` answers
 COUNT(*) with zero data pages), and optional per-file Bloom filters
-(``read_version_point`` pins an equality probe to ~1 file on
-hash-scattered keys where min/max can't help). ``expire_versions`` is
-the retention vacuum; ``snapshot_min_max`` answers MIN/MAX from the
-same stats. ``manifest_shard_files`` shards the manifest into a
-manifest list (per-shard JSON files) so no single metadata file grows
-with the snapshot; multi-writer snapshot isolation lives in
-operators/transactions.py, merge-on-read deletes (deletion-vector
-sidecars + broadcast anti-join reads) in operators/deletes.py,
-small-file compaction is ``compact_version`` below, and file-level
-APPEND deltas are ``append_version`` (O(delta) commits whose reads
-resolve a base-version chain) — every named format seam now has a
-working in-repo shape. Unversioned plain-parquet datasets (upsert,
+(``bloom_file_plan`` pins probe values — one for
+``read_version_point``, a MERGE source's keys in operators/merge.py —
+to ~1 file each on hash-scattered keys where min/max can't help).
+``expire_versions`` is the retention vacuum; ``snapshot_min_max``
+answers MIN/MAX from the same stats. Every file plan and metadata
+answer walks the chain's manifests through ``_chain_manifests``, which
+refuses a member whose manifest is missing or does not cover the
+column; the three file plans (stats range, Bloom probes, all-null
+files) are per-file keep rules over one loop, ``_file_plan``; and
+``_read_planned`` is the one place a plan becomes a DataFrame, bound
+to the memoized chain schema. ``manifest_shard_files`` shards the
+manifest into a manifest list (per-shard JSON files) so no single
+metadata file grows with the snapshot; multi-writer snapshot
+isolation lives in operators/transactions.py, merge-on-read deletes
+(deletion-vector sidecars + broadcast anti-join reads) in
+operators/deletes.py, small-file compaction is ``compact_version``
+below, and file-level APPEND deltas are ``append_version`` (O(delta)
+commits whose reads resolve a base-version chain) — every named
+format seam now has a working in-repo shape. Unversioned plain-parquet datasets (upsert,
 erasure, CDC apply, the streaming maintainers, index compaction) are
 rewritten in place by ``replace_parquet``, the module's one
 replace-by-rename seam.
@@ -241,16 +248,11 @@ def snapshot_ndv(
     Raises when any chain member's manifest lacks a sketch for ``col``
     — silently mixing sketched and unsketched members would understate
     the census."""
-    version = _resolve_version(spark, root, version)
-    b64s: list[str] = []
-    for v in version_chain(spark, root, version):
-        m = manifest(spark, root, v)
-        if m is None or col not in m.get("ndv_cols", []):
-            raise ValueError(
-                f"v={v} under {root} has no NDV sketch for {col!r}: commit "
-                "with write_version(df, root, ndv_cols=[...])"
-            )
-        b64s.extend(m["ndv"][col].values())
+    b64s = [
+        b
+        for _, _, m in _chain_manifests(spark, root, version, "ndv_cols", col)
+        for b in m["ndv"][col].values()
+    ]
     if not b64s:
         return 0
     sk = spark.createDataFrame([(b,) for b in b64s], "s string")
@@ -1135,6 +1137,92 @@ def read_version(
     return df
 
 
+# what each manifest column list is called in a coverage refusal
+_COVERAGE_NAMES = {
+    "stats_cols": "stats",
+    "bloom_cols": "bloom",
+    "ndv_cols": "NDV sketch",
+}
+
+
+def _chain_manifests(
+    spark: SparkSession,
+    root: str,
+    version: int | None,
+    need: str,
+    col: str | None = None,
+) -> list[tuple[int, str, dict]]:
+    """The one manifest walk behind every file plan and metadata
+    answer: ``[(v, vdir, manifest)]`` over the chain of ``version``
+    (default latest), newest first. ``need`` names what every member's
+    manifest must carry: a column list (``stats_cols``, ``bloom_cols``,
+    ``ndv_cols``) that covers ``col``, or a per-file map (``file_rows``,
+    ``file_nulls``; with ``col``, ``stats_cols`` must cover it too).
+
+    Raises ``ValueError`` on the first member that falls short, because
+    each manifest covers only its own files: skipping an uncovered
+    member would make a "pruned" read quietly stop pruning, or a
+    metadata answer quietly wrong, after a writer config drift."""
+    per_file = need in ("file_rows", "file_nulls")
+    option = "stats_cols" if per_file else need
+    fix = f"commit it with write_version(df, root, {option}=[...])"
+    out = []
+    for v in version_chain(spark, root, version):
+        m = manifest(spark, root, v)
+        if per_file and (m is None or need not in m):
+            what = "row counts" if need == "file_rows" else "null counts"
+            raise ValueError(f"v={v} under {root} has no manifest {what}: {fix}")
+        if m is None:
+            raise ValueError(f"v={v} under {root} has no {MANIFEST_NAME}: {fix}")
+        if col is not None and col not in m.get(option, []):
+            raise ValueError(
+                f"manifest of v={v} has no {_COVERAGE_NAMES[option]} for "
+                f"{col!r}: {fix}"
+            )
+        out.append((v, f"{root.rstrip('/')}/v={v}", m))
+    return out
+
+
+def _file_plan(
+    spark: SparkSession,
+    root: str,
+    version: int | None,
+    need: str,
+    col: str,
+    keep,
+) -> tuple[list[str], int, int]:
+    """The one file-plan loop: ``(selected_paths, n_selected, n_total)``
+    over every chain member's files, selecting each file for which
+    ``keep(manifest, fname)`` holds. A member's files are listed once,
+    from ``file_rows`` (``files`` for manifests that predate it). Each
+    rule drops only files its metadata PROVES irrelevant and keeps any
+    file whose stats or filter are missing, so a plan is a superset
+    pre-cut (partition pruning one level down) and the reader's
+    residual predicate keeps results exact."""
+    selected: list[str] = []
+    n_total = 0
+    for _, vdir, m in _chain_manifests(spark, root, version, need, col):
+        names = sorted(m.get("file_rows") or m["files"])
+        n_total += len(names)
+        selected += [f"{vdir}/{f}" for f in names if keep(m, f)]
+    return selected, len(selected), n_total
+
+
+def _read_planned(
+    spark: SparkSession, root: str, version: int, selected: list[str]
+) -> DataFrame:
+    """A file plan as a DataFrame, the one place a plan becomes a read.
+    The subset binds ``read_version``'s memoized chain schema: which
+    files survive pruning must not decide the result schema (on an
+    evolved chain, pre-evolution survivors still carry the evolved
+    columns, null-filled, in chain order), and a warm read infers no
+    schema at all. An empty plan is an empty frame with that schema."""
+    full = read_version(spark, root, version)
+    if not selected:
+        return full.filter(F.lit(False))
+    return spark.read.schema(full.schema).parquet(*selected)
+
+
 def pruned_file_plan(
     spark: SparkSession,
     root: str,
@@ -1146,67 +1234,18 @@ def pruned_file_plan(
     """File-level pruning plan for a range predicate on ``col``:
     ``(selected_file_paths, n_selected, n_total)``. A file is selected
     unless its manifest [min, max] for ``col`` proves it cannot contain
-    a row with ``lower <= col <= upper``; files with missing stats are
-    always selected (pruning may only ever skip provably-empty files —
-    a superset pre-cut, exactly like partition pruning one level down).
+    a row with ``lower <= col <= upper`` (a file without stats is always
+    selected). Chain-aware; raises when a chain member has no manifest
+    or its manifest does not cover ``col``."""
 
-    Raises when the snapshot has no manifest or the manifest does not
-    cover ``col`` — silently falling back to a full read would make
-    "pruned" reads quietly stop pruning after a writer config drift.
-    An append chain prunes over EVERY member's per-version manifest
-    (each covers its own files), with the same strictness per member."""
-    version = _resolve_version(spark, root, version)
-    selected: list[str] = []
-    n_total = 0
-    for v in version_chain(spark, root, version):
-        m = manifest(spark, root, v)
-        if m is None:
-            raise ValueError(
-                f"v={v} under {root} has no {MANIFEST_NAME}: "
-                "commit it with write_version(df, root, stats_cols=[...])"
-            )
-        if col not in m["stats_cols"]:
-            raise ValueError(f"manifest of v={v} has no stats for {col!r}")
-        vdir = f"{root.rstrip('/')}/v={v}"
-        n_total += len(m["files"])
-        for fname, stats in sorted(m["files"].items()):
-            rng = (stats or {}).get(col)
-            if rng is not None:
-                mn, mx = rng
-                if lower is not None and mx < lower:
-                    continue
-                if upper is not None and mn > upper:
-                    continue
-            selected.append(f"{vdir}/{fname}")
-    return selected, len(selected), n_total
+    def keep(m: dict, fname: str) -> bool:
+        rng = (m["files"].get(fname) or {}).get(col)
+        return rng is None or not (
+            (lower is not None and rng[1] < lower)
+            or (upper is not None and rng[0] > upper)
+        )
 
-
-def _read_selected_aligned(
-    spark: SparkSession, root: str, version: int, selected: list[str]
-) -> DataFrame:
-    """Read a pruned file subset with a PRUNING-INDEPENDENT schema.
-
-    On an evolved append chain, which files survive pruning decides
-    what ``mergeSchema`` can see: a predicate whose survivors all live
-    in pre-evolution members would return a frame MISSING the evolved
-    column(s), breaking the documented 'bit-identical to full read +
-    filter' equivalence (r10 advice, medium). So chain reads always
-    merge schemas and then reconcile to ``read_version``'s full chain
-    schema — null-filling any column absent from the selected subset
-    and fixing column order — regardless of which files survive. The
-    reconciliation is metadata-only (the full read is planned for its
-    schema, never executed)."""
-    for d in sorted({os.path.dirname(p) for p in selected}):
-        spark.catalog.refreshByPath(d)
-    if len(version_chain(spark, root, version)) == 1:
-        return spark.read.parquet(*selected)
-    df = spark.read.option("mergeSchema", "true").parquet(*selected)
-    full = read_version(spark, root, version).schema
-    have = set(df.columns)
-    for field in full.fields:
-        if field.name not in have:
-            df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
-    return df.select(*[field.name for field in full.fields])
+    return _file_plan(spark, root, version, "stats_cols", col, keep)
 
 
 def read_version_pruned(
@@ -1227,11 +1266,7 @@ def read_version_pruned(
     layout answers a narrow range predicate from a handful of files."""
     version = _resolve_version(spark, root, version)
     selected, _, _ = pruned_file_plan(spark, root, col, lower, upper, version)
-    if not selected:
-        # predicate excludes every file: empty frame, correct schema
-        base = read_version(spark, root, version)
-        return base.filter(F.lit(False))
-    df = _read_selected_aligned(spark, root, version, selected)
+    df = _read_planned(spark, root, version, selected)
     if lower is not None:
         df = df.filter(F.col(col) >= F.lit(lower))
     if upper is not None:
@@ -1251,103 +1286,35 @@ def bloom_file_plan(
     spark: SparkSession,
     root: str,
     col: str,
-    value,
-    version: int | None = None,
-) -> tuple[list[str], int, int]:
-    """Point-lookup pruning plan: the files whose Bloom filter for
-    ``col`` MIGHT contain ``value`` (plus any file missing a bloom —
-    like stats, a missing filter degrades to reading the file, never
-    to skipping a match). False positives only ever cost an extra file
-    read; the residual equality filter keeps results exact. This is
-    the min/max complement: a hash-scattered key spans every file's
-    [min, max], but its Bloom filters pin the point to ~1 file. An
-    append chain probes EVERY member's per-version blooms."""
-    import base64
-
-    version = _resolve_version(spark, root, version)
-    probe = str(value)
-    selected: list[str] = []
-    n_total = 0
-    for v in version_chain(spark, root, version):
-        m = manifest(spark, root, v)
-        if m is None:
-            raise ValueError(
-                f"v={v} under {root} has no {MANIFEST_NAME}: "
-                "commit it with write_version(df, root, bloom_cols=[...])"
-            )
-        if col not in m.get("bloom_cols", []):
-            raise ValueError(f"manifest of v={v} has no bloom for {col!r}")
-        vdir = f"{root.rstrip('/')}/v={v}"
-        col_blooms = m["blooms"][col]
-        all_files = (
-            sorted(m["file_rows"]) if m.get("file_rows") else sorted(col_blooms)
-        )
-        n_total += len(all_files)
-        for fname in all_files:
-            entry = col_blooms.get(fname)
-            if entry is not None:
-                bits = int(entry["bits"])
-                arr = base64.b64decode(entry["b64"])
-                if not all(
-                    arr[pos >> 3] & (1 << (pos & 7))
-                    for pos in _bloom_positions(probe, bits)
-                ):
-                    continue
-            selected.append(f"{vdir}/{fname}")
-    return selected, len(selected), n_total
-
-
-def bloom_file_plan_multi(
-    spark: SparkSession,
-    root: str,
-    col: str,
     values,
     version: int | None = None,
 ) -> tuple[list[str], int, int]:
-    """Multi-probe Bloom pruning plan: the files whose filter for
-    ``col`` MIGHT contain ANY of ``values`` (plus files missing a
-    bloom — degrade to reading, never to skipping a match). This is
-    the MERGE/CDC file-skipping shape for HASH-SCATTERED keys, where
-    every file spans the whole [min, max] range and stats prune
-    nothing but each file's Bloom pins which of the source's keys
-    could live there. Probing is driver-side bit math: O(|values| ×
-    files × k) with early exit on first hit per file."""
+    """Bloom pruning plan: the files whose filter for ``col`` MIGHT
+    contain ANY of ``values`` (plus any file missing a filter, which
+    degrades to reading the file, never to skipping a match). False
+    positives only ever cost an extra file read; the caller's residual
+    equality filter or join keeps results exact. This is the min/max
+    complement: a hash-scattered key spans every file's [min, max],
+    but its Bloom filters pin it to ~1 file — the point-lookup shape
+    with one value, the MERGE/CDC file-skipping shape with a source's
+    keys. Probing is driver-side bit math, O(|values| x files x k)
+    with an early exit on the first hit per file."""
     import base64
 
-    version = _resolve_version(spark, root, version)
     probes = [str(v) for v in values]
-    selected: list[str] = []
-    n_total = 0
-    for v in version_chain(spark, root, version):
-        m = manifest(spark, root, v)
-        if m is None:
-            raise ValueError(
-                f"v={v} under {root} has no {MANIFEST_NAME}: "
-                "commit it with write_version(df, root, bloom_cols=[...])"
-            )
-        if col not in m.get("bloom_cols", []):
-            raise ValueError(f"manifest of v={v} has no bloom for {col!r}")
-        vdir = f"{root.rstrip('/')}/v={v}"
-        col_blooms = m["blooms"][col]
-        all_files = (
-            sorted(m["file_rows"]) if m.get("file_rows") else sorted(col_blooms)
+
+    def keep(m: dict, fname: str) -> bool:
+        entry = m["blooms"][col].get(fname)
+        if entry is None:
+            return True
+        bits = int(entry["bits"])
+        arr = base64.b64decode(entry["b64"])
+        return any(
+            all(arr[pos >> 3] & (1 << (pos & 7)) for pos in _bloom_positions(p, bits))
+            for p in probes
         )
-        n_total += len(all_files)
-        for fname in all_files:
-            entry = col_blooms.get(fname)
-            if entry is None:
-                selected.append(f"{vdir}/{fname}")
-                continue
-            bits = int(entry["bits"])
-            arr = base64.b64decode(entry["b64"])
-            for probe in probes:
-                if all(
-                    arr[pos >> 3] & (1 << (pos & 7))
-                    for pos in _bloom_positions(probe, bits)
-                ):
-                    selected.append(f"{vdir}/{fname}")
-                    break
-    return selected, len(selected), n_total
+
+    return _file_plan(spark, root, version, "bloom_cols", col, keep)
 
 
 def read_version_point(
@@ -1362,11 +1329,10 @@ def read_version_point(
     applies the exact equality predicate (superset pre-cut — results
     are bit-identical to ``read_version(...).filter(col == value)``)."""
     version = _resolve_version(spark, root, version)
-    selected, _, _ = bloom_file_plan(spark, root, col, value, version)
-    if not selected:
-        return read_version(spark, root, version).filter(F.lit(False))
-    df = _read_selected_aligned(spark, root, version, selected)
-    return df.filter(F.col(col) == F.lit(value))
+    selected, _, _ = bloom_file_plan(spark, root, col, [value], version)
+    return _read_planned(spark, root, version, selected).filter(
+        F.col(col) == F.lit(value)
+    )
 
 
 def expire_versions(
@@ -1454,17 +1420,11 @@ def snapshot_row_count(
     manifests). Raises when the snapshot has no manifest row counts:
     silently falling back to a scan would hide a broken manifest.
     An append chain sums every member's counts — still zero jobs."""
-    version = _resolve_version(spark, root, version)
-    total = 0
-    for v in version_chain(spark, root, version):
-        m = manifest(spark, root, v)
-        if m is None or "file_rows" not in m:
-            raise ValueError(
-                f"v={v} under {root} has no manifest row counts: "
-                "commit it with write_version(df, root, stats_cols=[...])"
-            )
-        total += sum(int(n) for n in m["file_rows"].values())
-    return total
+    return sum(
+        int(n)
+        for _, _, m in _chain_manifests(spark, root, version, "file_rows")
+        for n in m["file_rows"].values()
+    )
 
 
 def snapshot_min_max(
@@ -1481,24 +1441,13 @@ def snapshot_min_max(
     slow. Raises likewise for an uncovered column or an empty
     snapshot. An append chain merges every member's stats."""
     version = _resolve_version(spark, root, version)
-    chain = version_chain(spark, root, version)
-    docs = []
-    for v in chain:
-        m = manifest(spark, root, v)
-        if m is None:
-            raise ValueError(
-                f"v={v} under {root} has no {MANIFEST_NAME}: "
-                "commit it with write_version(df, root, stats_cols=[...])"
-            )
-        docs.append((v, m))
     out: dict[str, tuple] = {}
     for col in cols:
-        if not any(m["files"] for _, m in docs):
+        members = _chain_manifests(spark, root, version, "stats_cols", col)
+        if not any(m["files"] for _, _, m in members):
             raise ValueError(f"v={version} under {root} has no files")
         lo = hi = None
-        for v, m in docs:
-            if col not in m["stats_cols"]:
-                raise ValueError(f"manifest of v={v} has no stats for {col!r}")
+        for v, _, m in members:
             for fname, stats in m["files"].items():
                 rng = (stats or {}).get(col)
                 if rng is None:
@@ -1869,16 +1818,8 @@ def snapshot_null_counts(
     same never-guess contract as snapshot_min_max. Chain-aware."""
     version = _resolve_version(spark, root, version)
     out: dict[str, int] = {c: 0 for c in cols}
-    for v in version_chain(spark, root, version):
-        m = manifest(spark, root, v)
-        if m is None or "file_nulls" not in m:
-            raise ValueError(
-                f"v={v} under {root} has no manifest null counts: "
-                "commit it with write_version(df, root, stats_cols=[...])"
-            )
-        for col in cols:
-            if col not in m["stats_cols"]:
-                raise ValueError(f"manifest of v={v} has no stats for {col!r}")
+    for col in cols:
+        for v, _, m in _chain_manifests(spark, root, version, "file_nulls", col):
             for fname, per in m["file_nulls"].items():
                 n = (per or {}).get(col)
                 if n is None:
@@ -1899,30 +1840,13 @@ def not_null_file_plan(
     optional column is populated in one ingest era reads only that
     era's files). Files with missing null stats are always selected
     (superset pre-cut, never wrong). Chain-aware."""
-    version = _resolve_version(spark, root, version)
-    selected: list[str] = []
-    n_total = 0
-    for v in version_chain(spark, root, version):
-        m = manifest(spark, root, v)
-        if m is None:
-            raise ValueError(
-                f"v={v} under {root} has no {MANIFEST_NAME}: "
-                "commit it with write_version(df, root, stats_cols=[...])"
-            )
-        if col not in m["stats_cols"]:
-            raise ValueError(f"manifest of v={v} has no stats for {col!r}")
-        vdir = f"{root.rstrip('/')}/v={v}"
-        rows = m.get("file_rows", {})
-        nulls = m.get("file_nulls", {})
-        names = sorted(rows) if rows else sorted(m["files"])
-        n_total += len(names)
-        for fname in names:
-            nc = (nulls.get(fname) or {}).get(col)
-            nr = rows.get(fname)
-            if nc is not None and nr is not None and int(nc) == int(nr):
-                continue  # provably all-null: skip the file
-            selected.append(f"{vdir}/{fname}")
-    return selected, len(selected), n_total
+
+    def keep(m: dict, fname: str) -> bool:
+        nc = (m.get("file_nulls", {}).get(fname) or {}).get(col)
+        nr = m.get("file_rows", {}).get(fname)
+        return nc is None or nr is None or int(nc) != int(nr)
+
+    return _file_plan(spark, root, version, "stats_cols", col, keep)
 
 
 def read_version_not_null(
@@ -1933,7 +1857,6 @@ def read_version_not_null(
     full read + filter)."""
     version = _resolve_version(spark, root, version)
     selected, _, _ = not_null_file_plan(spark, root, col, version)
-    if not selected:
-        return read_version(spark, root, version).filter(F.lit(False))
-    df = _read_selected_aligned(spark, root, version, selected)
-    return df.filter(F.col(col).isNotNull())
+    return _read_planned(spark, root, version, selected).filter(
+        F.col(col).isNotNull()
+    )

@@ -699,7 +699,7 @@ def bloom_point_lookup_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_cols=["c_custkey"],
     )
     _, n_range, total = pruned_file_plan(spark, root, "c_custkey", k, k, version=v)
-    _, n_bloom, _ = bloom_file_plan(spark, root, "c_custkey", k, version=v)
+    _, n_bloom, _ = bloom_file_plan(spark, root, "c_custkey", [k], version=v)
     meta_count = snapshot_row_count(spark, root, v)
     return read_version_point(spark, root, "c_custkey", k, version=v).select(
         "c_custkey",

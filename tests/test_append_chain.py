@@ -116,7 +116,7 @@ def test_chain_aware_bloom_point_lookup(spark, tmp_path):
     append_version(
         _df(spark, 500, 1000).repartition(4, "k"), root, bloom_cols=["k"]
     )
-    sel, n_sel, n_total = bloom_file_plan(spark, root, "k", 777, version=1)
+    sel, n_sel, n_total = bloom_file_plan(spark, root, "k", [777], version=1)
     assert n_total == 8 and n_sel < n_total
     got = read_version_point(spark, root, "k", 777, version=1)
     assert _rows(got) == [(777, 1554.0)]

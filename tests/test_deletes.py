@@ -11,6 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from pyspark_big_data_spark.operators import deletes
 from pyspark_big_data_spark.operators.deletes import (
     _chain_vectors,
     delete_keys,
@@ -126,7 +127,10 @@ def test_pruned_mor_composition(spark, tmp_path):
     df = _df(spark, 1000)
     write_version(df.repartitionByRange(8, "k"), root, stats_cols=["k"])
     delete_keys(spark, root, _keys(spark, [110, 120, 900]), "k")
-    got = read_version_mor(spark, root, 0, pruned_col="k", lower=100, upper=150)
+    plan = pruned_file_plan(spark, root, "k", 100, 150, version=0)[0]
+    got = read_version_mor(spark, root, 0, selected_files=plan).filter(
+        (F.col("k") >= 100) & (F.col("k") <= 150)
+    )
     want = (
         read_version(spark, root, 0)
         .filter((F.col("k") >= 100) & (F.col("k") <= 150))
@@ -142,6 +146,30 @@ def test_pruned_mor_composition(spark, tmp_path):
         if "/v=0/" in p and "/_deletes/" not in p
     }
     assert touched <= {os.path.basename(p) for p in sel}
+
+
+def test_mor_build_reads_equality_tombstones_once(spark, tmp_path, count_jobs):
+    """A member's equality tombstones are read once, with merged
+    schemas, and that frame feeds both the one-key check and the
+    anti-join: a MOR build over three delete_keys commits starts one
+    Spark job (a schema read per commit plus the union read was four).
+    A foreign file with another column in the deletes tree still
+    widens the merged schema and is refused."""
+    root = str(tmp_path / "vds")
+    write_version(_df(spark, 20), root)
+    for k in (1, 2, 3):
+        delete_keys(spark, root, _keys(spark, [k]), "k")
+    for _ in range(2):
+        assert count_jobs(lambda: read_version_mor(spark, root, 0)) == 1
+    assert read_version_mor(spark, root, 0).count() == 17
+
+    spark.createDataFrame([(9,)], "other long").write.parquet(
+        f"{root}/_deletes/v=0/d=3"
+    )
+    with pytest.raises(ValueError, match="mixed key columns"):
+        read_version_mor(spark, root, 0)
+    with pytest.raises(ValueError, match="mixed key columns"):
+        delete_keys(spark, root, _keys(spark, [4]), "k")
 
 
 def test_materialize_deletes(spark, tmp_path):
@@ -445,7 +473,7 @@ def test_chain_mor_resolves_ancestor_positional(spark, tmp_path):
     assert got.filter(F.col("k").isin(7, 8)).count() == 0
 
 
-def test_broadcast_threshold_drops_hint(spark, tmp_path):
+def test_broadcast_threshold_drops_hint(spark, tmp_path, monkeypatch):
     """Above the tombstone-row threshold the broadcast hint is dropped:
     with auto-broadcast disabled, the anti-join plans as a shuffle join
     instead of OOM-ing the driver on a giant vector."""
@@ -459,9 +487,8 @@ def test_broadcast_threshold_drops_hint(spark, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        unhinted = read_version_mor(
-            spark, root, 0, broadcast_threshold_rows=0
-        )
+        monkeypatch.setattr(deletes, "BROADCAST_THRESHOLD_ROWS", 0)
+        unhinted = read_version_mor(spark, root, 0)
         plan2 = unhinted._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan2
         assert "LeftAnti" in plan2

@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from pyspark_big_data_spark.operators import deletes
 from pyspark_big_data_spark.operators.deletes import read_version_mor
 from pyspark_big_data_spark.operators.merge import merge_into
 from pyspark_big_data_spark.operators.versioned import (
@@ -197,9 +198,9 @@ def _sql_exec_count(spark) -> int:
     return max(lst.apply(i).executionId() for i in range(lst.size()))
 
 
-def test_merge_broadcast_is_priced(spark, tmp_path):
+def test_merge_broadcast_is_priced(spark, tmp_path, monkeypatch):
     """The source broadcast is enforced, not assumed: a source above
-    broadcast_threshold_rows (priced by the uniqueness aggregate's
+    deletes.BROADCAST_THRESHOLD_ROWS (priced by the uniqueness aggregate's
     exact count — zero extra jobs) drops both broadcast hints, so with
     auto-broadcast disabled the merge plans shuffle joins instead of
     OOM-ing the driver on an unbounded backfill source. Semantics are
@@ -212,7 +213,9 @@ def test_merge_broadcast_is_priced(spark, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         mark = _sql_exec_count(spark)
-        res = merge_into(spark, root, src, "k", broadcast_threshold_rows=10)
+        with monkeypatch.context() as m:
+            m.setattr(deletes, "BROADCAST_THRESHOLD_ROWS", 10)
+            res = merge_into(spark, root, src, "k")
         plans = _sql_plans_since(spark, mark)
         assert plans and not any("BroadcastHashJoin" in p for p in plans)
     finally:
@@ -430,7 +433,7 @@ def test_merge_bloom_prunes_hash_scattered_target(spark, tmp_path):
     the MERGE ladder falls through to bloom probing, reads a strict
     file subset, and the result equals the full-scan merge."""
     from pyspark_big_data_spark.operators.versioned import (
-        bloom_file_plan_multi,
+        bloom_file_plan,
         pruned_file_plan,
     )
 
@@ -445,7 +448,7 @@ def test_merge_bloom_prunes_hash_scattered_target(spark, tmp_path):
     # stats are blind on this layout; blooms cut
     _, n_stats, n_total = pruned_file_plan(spark, root, "k", 100, 102, version=0)
     assert n_stats == n_total
-    _, n_bloom, _ = bloom_file_plan_multi(spark, root, "k", [100, 101, 102], 0)
+    _, n_bloom, _ = bloom_file_plan(spark, root, "k", [100, 101, 102], 0)
     assert 0 < n_bloom < n_total
 
     res = merge_into(spark, root, src, "k")
@@ -455,10 +458,10 @@ def test_merge_bloom_prunes_hash_scattered_target(spark, tmp_path):
         assert got.filter(F.col("k") == k).collect()[0]["x"] == k * 2.0 + 1
     assert got.filter(F.col("k") == 50).collect()[0]["x"] == 100.0
 
-    # twin without pruning: identical result
+    # twin without stats or Blooms, so a full-scan merge: identical result
     root2 = str(tmp_path / "vds2")
     write_version(_df(spark, 0, 2000).repartition(8, "k"), root2)
-    res2 = merge_into(spark, root2, src, "k", prune_with_stats=False)
+    res2 = merge_into(spark, root2, src, "k")
     assert _rows(got) == _rows(read_version_mor(spark, root2, res2["version"]))
 
 

@@ -10,14 +10,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_big_data_spark.operators.versioned import (
+    append_version,
     bloom_file_plan,
     latest_version,
     list_versions,
     manifest,
+    not_null_file_plan,
     pruned_file_plan,
     read_version,
+    read_version_not_null,
     read_version_point,
     read_version_pruned,
+    snapshot_min_max,
+    snapshot_ndv,
+    snapshot_null_counts,
     snapshot_row_count,
     write_version,
 )
@@ -212,7 +218,7 @@ def test_bloom_point_lookup_prunes_hash_scattered_files(spark, tmp_path):
     _, n_range, total = pruned_file_plan(spark, root, "k", 777, 777, version=v)
     assert n_range == total
     # ...but the bloom plan pins it to a strict subset (expected ~1 file)
-    sel, n_bloom, total_b = bloom_file_plan(spark, root, "k", 777, version=v)
+    sel, n_bloom, total_b = bloom_file_plan(spark, root, "k", [777], version=v)
     assert 0 < n_bloom < total_b == total
 
     got = read_version_point(spark, root, "k", 777, version=v).collect()
@@ -248,6 +254,146 @@ def test_pruned_read_refuses_silent_fallback(spark, tmp_path):
         pruned_file_plan(spark, root, "k", 0, 10, version=1)
     with pytest.raises(ValueError, match="no stats for"):
         pruned_file_plan(spark, root, "x", 0, 10, version=0)
+
+
+@pytest.fixture(scope="module")
+def uncovered_chains(spark, tmp_path_factory):
+    """Two-member chains whose manifests fall short on ``k``. In
+    ``no_manifest`` the base has no manifest (an appended head always
+    has one: its chain link lives in it); in ``no_column`` the head's
+    manifest covers only ``j``."""
+    base = tmp_path_factory.mktemp("uncovered")
+    rows = lambda lo: spark.range(lo, lo + 10).select(
+        F.col("id").alias("k"), F.col("id").alias("j")
+    )
+    on_k = dict(stats_cols=["k"], bloom_cols=["k"], ndv_cols=["k"])
+    on_j = dict(stats_cols=["j"], bloom_cols=["j"], ndv_cols=["j"])
+    no_manifest, no_column = str(base / "no_manifest"), str(base / "no_column")
+    write_version(rows(0), no_manifest)
+    append_version(rows(10), no_manifest, **on_k)
+    write_version(rows(0), no_column, **on_k)
+    append_version(rows(10), no_column, **on_j)
+    return {"no_manifest": no_manifest, "no_column": no_column}
+
+
+# entry point -> (call, refusal without a manifest, refusal without k)
+_MANIFEST_ENTRY_POINTS = {
+    "pruned_file_plan": (
+        lambda s, r: pruned_file_plan(s, r, "k", 0, 5),
+        "no _manifest",
+        "no stats for 'k'",
+    ),
+    "bloom_file_plan": (
+        lambda s, r: bloom_file_plan(s, r, "k", [3]),
+        "no _manifest",
+        "no bloom for 'k'",
+    ),
+    "bloom_file_plan_many": (
+        lambda s, r: bloom_file_plan(s, r, "k", [3, 4, 15]),
+        "no _manifest",
+        "no bloom for 'k'",
+    ),
+    "not_null_file_plan": (
+        lambda s, r: not_null_file_plan(s, r, "k"),
+        "no _manifest",
+        "no stats for 'k'",
+    ),
+    "snapshot_row_count": (
+        lambda s, r: snapshot_row_count(s, r),
+        "no manifest row counts",
+        None,  # no column to cover
+    ),
+    "snapshot_min_max": (
+        lambda s, r: snapshot_min_max(s, r, ["k"]),
+        "no _manifest",
+        "no stats for 'k'",
+    ),
+    "snapshot_null_counts": (
+        lambda s, r: snapshot_null_counts(s, r, ["k"]),
+        "no manifest null counts",
+        "no stats for 'k'",
+    ),
+    "snapshot_ndv": (
+        lambda s, r: snapshot_ndv(s, r, "k"),
+        "no _manifest",
+        "no NDV sketch for 'k'",
+    ),
+    "read_version_pruned": (
+        lambda s, r: read_version_pruned(s, r, "k", 0, 5),
+        "no _manifest",
+        "no stats for 'k'",
+    ),
+    "read_version_point": (
+        lambda s, r: read_version_point(s, r, "k", 3),
+        "no _manifest",
+        "no bloom for 'k'",
+    ),
+    "read_version_not_null": (
+        lambda s, r: read_version_not_null(s, r, "k"),
+        "no _manifest",
+        "no stats for 'k'",
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "entry,case",
+    [
+        (entry, case)
+        for entry, (_, _, no_col) in _MANIFEST_ENTRY_POINTS.items()
+        for case in ("no_manifest", "no_column")
+        if case == "no_manifest" or no_col is not None
+    ],
+)
+def test_manifest_walk_refuses_uncovered_member(
+    spark, uncovered_chains, entry, case
+):
+    """Every file plan, planned read and metadata answer refuses a
+    chain member whose manifest is missing or does not cover the
+    column, naming the member and the write_version option that fixes
+    it — never a silent full read or a partial answer."""
+    call, no_manifest, no_column = _MANIFEST_ENTRY_POINTS[entry]
+    want = no_manifest if case == "no_manifest" else no_column
+    with pytest.raises(ValueError, match=want) as err:
+        call(spark, uncovered_chains[case])
+    member = "v=0" if case == "no_manifest" else "v=1"
+    assert member in str(err.value)
+    assert "commit it with write_version(df, root, " in str(err.value)
+
+
+def test_warm_planned_reads_run_no_jobs(spark, tmp_path, count_jobs):
+    """With the manifest and chain schema memoized, building a planned
+    read binds the chain schema to the file subset and infers nothing:
+    read_version_pruned, read_version_point and read_version_not_null
+    start zero Spark jobs on a warm single-member table."""
+    root = str(tmp_path / "vds")
+    rows = [(i, None if i < 200 else float(i)) for i in range(400)]
+    write_version(
+        _df(spark, rows).repartitionByRange(4, "k"),
+        root,
+        stats_cols=["k", "x"],
+        bloom_cols=["k"],
+    )
+
+    def build():
+        return (
+            read_version_pruned(spark, root, "k", 0, 50),
+            read_version_point(spark, root, "k", 7),
+            read_version_not_null(spark, root, "x"),
+        )
+
+    for plan in (
+        pruned_file_plan(spark, root, "k", 0, 50),
+        bloom_file_plan(spark, root, "k", [7]),
+        not_null_file_plan(spark, root, "x"),
+    ):
+        assert 0 < plan[1] < plan[2]  # a strict, non-empty file subset
+    build()  # warm: memoizes the chain schema
+    assert count_jobs(build) == 0
+    pruned, point, not_null = build()
+    assert pruned.count() == 51
+    assert [r["k"] for r in point.collect()] == [7]
+    assert not_null.count() == 200
 
 
 def test_lost_race_retries_instead_of_nesting(spark, tmp_path, monkeypatch):
@@ -475,7 +621,7 @@ def test_sharded_blooms_roundtrip(spark, tmp_path):
         df.repartition(5, "grp"), root, stats_cols=["k"], bloom_cols=["k"],
         manifest_shard_files=2,
     )
-    _, n_sel, n_total = bloom_file_plan(spark, root, "k", 123)
+    _, n_sel, n_total = bloom_file_plan(spark, root, "k", [123])
     assert n_sel < n_total
     rows = read_version_point(spark, root, "k", 123).collect()
     assert [(r["k"], r["grp"]) for r in rows] == [(123, 123 % 7)]
