@@ -31,30 +31,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """``dot`` unrolled to a fixed-width arithmetic expression:
-    ``0.0 + a[0]*b[0] + a[1]*b[1] + …``.
-
-    Bit-identical to ``dot`` (and so to DuckDB's list_dot_product): the
-    leading 0.0 literal and left-associative ``+`` reproduce the HOF
-    fold's exact accumulation order. Requires the ACTUAL array length ==
-    ``dim`` (shorter arrays yield NULL via out-of-range getItem — the
-    caller owns the fixed-dim contract, e.g. the embeddings table).
-
-    CAUTION — measured JIT cliff (native sf1, 26M pairs, 64-dim): array
-    getItem generates enough bytecode per term that past ~32 terms the
-    whole generated method exceeds the JVM JIT's huge-method limit and
-    silently runs in the BYTECODE INTERPRETER: 64 terms → 52 s where 16
-    terms extrapolate to ~6 s, WORSE than the interpreted HOF fold
-    (14 s). Only use this form for dim <= 32; for wider vectors use
-    ``flatten_vec`` + ``dot_flat`` (7.9 s on the same workload) or the
-    HOF ``dot``."""
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + a[i] * b[i]
-    return acc
-
-
 def flatten_vec(df, vec_col: str, dim: int, prefix: str, keep: list[str]):
     """Explode an array column into ``dim`` flat double columns
     ``{prefix}0..{prefix}{dim-1}`` (plus ``keep`` passthrough columns).
@@ -63,13 +39,21 @@ def flatten_vec(df, vec_col: str, dim: int, prefix: str, keep: list[str]):
     splits them into small JIT-able methods; a later ``dot_flat`` over
     the flat columns then reads plain doubles with no per-term bounds
     checks — the combination that keeps a 64-term dot inside the JIT
-    (see dot_unrolled's cliff note)."""
+    (see dot_flat's cliff note)."""
     return df.select(*keep, *[df[vec_col][i].alias(f"{prefix}{i}") for i in range(dim)])
 
 
 def dot_flat(prefix_a: str, prefix_b: str, dim: int) -> Column:
     """Sequential-fold dot over two flat column families — the exact
-    accumulation order of ``dot``/list_dot_product, at codegen speed."""
+    accumulation order of ``dot``/list_dot_product, at codegen speed.
+
+    Measured JIT cliff (native sf1, 26M pairs, 64-dim): unrolling the
+    dot over the ARRAY form (``0.0 + a[0]*b[0] + …``) generates enough
+    bytecode per getItem term that past ~32 terms the generated method
+    exceeds the JVM JIT's huge-method limit and silently runs in the
+    bytecode interpreter — 52 s, worse than the HOF ``dot`` (14 s).
+    ``flatten_vec`` + this fold over plain double columns stays inside
+    the JIT: 7.9 s on the same workload."""
     acc: Column = F.lit(0.0)
     for i in range(dim):
         acc = acc + F.col(f"{prefix_a}{i}") * F.col(f"{prefix_b}{i}")

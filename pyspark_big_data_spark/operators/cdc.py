@@ -104,6 +104,7 @@ def apply_changes(
     touched = winners.select(key)
 
     spark.catalog.refreshByPath(path)
+    # plain parquet with no manifest: its schema is only known by inference
     existing = spark.read.parquet(path)
     if set(existing.columns) != set(upserts.columns):
         raise ValueError(

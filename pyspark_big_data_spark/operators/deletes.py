@@ -80,18 +80,19 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from pyspark_big_data_spark.operators.versioned import (
     EMBEDDED_DELETES_DIR,
     _fs,
     _read_json,
-    _read_planned,
     _resolve_version,
     _write_json,
     commit_next,
     list_numbered_dirs,
     list_versions,
     manifest,
+    read_chain_files,
     read_version,
     version_chain,
     write_version,
@@ -149,6 +150,7 @@ def _commit_rows(spark: SparkSession, commit_dir: str) -> tuple[int, bool]:
     if fs.exists(jvm.org.apache.hadoop.fs.Path(side)):
         return int(_read_json(fs, jvm, side)["rows"]), True
     spark.catalog.refreshByPath(commit_dir)
+    # schema-less: a pre-r11 commit may be equality (any key) or positional
     return spark.read.parquet(commit_dir).count(), False
 
 
@@ -218,6 +220,7 @@ def _equality_tombstones(
         return None
     for p in paths:
         spark.catalog.refreshByPath(p)
+    # merged, not bound: a foreign column widens it and the one-key check fails
     keys = spark.read.option("mergeSchema", "true").parquet(*paths)
     if len(keys.columns) != 1:
         raise ValueError(
@@ -246,6 +249,20 @@ POS_DELETES_DIR = "_pos_deletes"
 FILE_COL = "_file"
 POS_COL = "_pos"
 _MEMBER_COL = "_member_version"
+
+# Every positional vector, external or MERGE-embedded, is written as
+# exactly this schema (``as_vector``), so every vector read binds it
+# instead of inferring it.
+VECTOR_SCHEMA = StructType(
+    [StructField(FILE_COL, StringType()), StructField(POS_COL, LongType())]
+)
+
+
+def as_vector(addresses: DataFrame) -> DataFrame:
+    """``addresses`` projected and cast to ``VECTOR_SCHEMA``."""
+    return addresses.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in VECTOR_SCHEMA]
+    )
 
 
 def _qualified_file_expr():
@@ -413,7 +430,7 @@ def delete_positions(
             f"positional delete needs columns {sorted((FILE_COL, POS_COL))}; "
             f"missing {sorted(missing)} (build with with_positions)"
         )
-    tomb = positions.select(FILE_COL, POS_COL).distinct()
+    tomb = as_vector(positions).distinct()
     if tomb.filter(
         F.col(FILE_COL).isNull() | F.col(POS_COL).isNull()
     ).limit(1).count():
@@ -509,7 +526,7 @@ def read_version_mor(
     provably-no-file case (empty frame, correct schema)."""
     version = _resolve_version(spark, root, version)
     if selected_files is not None:
-        base = _read_planned(spark, root, version, selected_files)
+        base = read_chain_files(spark, root, version, selected_files)
     else:
         base = read_version(spark, root, version)
     eq, pos_paths, legacy_pos, total_rows = _chain_vectors(spark, root, version)
@@ -554,7 +571,7 @@ def read_version_mor(
         # within itself by construction (a retired row is invisible to
         # later merges, delete_keys writes distinct). The distinct was
         # a full shuffle re-paid on EVERY evaluation of every MOR plan.
-        tomb = spark.read.parquet(*pos_paths).select(FILE_COL, POS_COL)
+        tomb = spark.read.schema(VECTOR_SCHEMA).parquet(*pos_paths)
         if hint:
             tomb = F.broadcast(tomb)
         base = base.join(tomb, [FILE_COL, POS_COL], "left_anti")
@@ -565,7 +582,7 @@ def read_version_mor(
         # so the basename is unambiguous within a chain)
         for p in legacy_pos:
             spark.catalog.refreshByPath(p)
-        ltomb = spark.read.parquet(*legacy_pos).select(
+        ltomb = spark.read.schema(VECTOR_SCHEMA).parquet(*legacy_pos).select(
             F.col(FILE_COL).alias("__legacy_file"),
             F.col(POS_COL).alias("__legacy_pos"),
         )  # no distinct: anti-join semantics (see the pos_paths note)

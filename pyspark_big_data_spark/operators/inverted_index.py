@@ -160,6 +160,7 @@ def read_term_postings(
     for b in buckets:
         path = f"{index_root.rstrip('/')}/bucket={b}"
         if path_exists(spark, path):
+            # a plain parquet bucket with no manifest: infer its schema
             parts.append(spark.read.parquet(path))
     if not parts:
         return None, len(buckets)
@@ -169,6 +170,7 @@ def read_term_postings(
 
 def read_doclen(spark: SparkSession, index_root: str) -> DataFrame:
     """The ``(doc_id, dl)`` sidecar (build with ``with_doclen=True``)."""
+    # a plain parquet sidecar with no manifest: infer its schema
     return spark.read.parquet(f"{index_root.rstrip('/')}/{DOCLEN_DIR}")
 
 

@@ -130,6 +130,7 @@ def refresh_incremental(spark: SparkSession, mv_dir: str, delta: DataFrame) -> d
     group_cols = desc["group_cols"]
     measures = [(a, c) for a, c in desc["measures"]]
 
+    # the view's plain parquet data has no manifest: infer its schema
     old = spark.read.parquet(_data_dir(mv_dir, desc))
     new = delta.groupBy(*group_cols).agg(*_measure_exprs(measures))
 
@@ -232,6 +233,7 @@ def rewrite_aggregate(
         else:
             return None  # not derivable — must fall back, never approximate
 
+    # the view's plain parquet data has no manifest: infer its schema
     mv = spark.read.parquet(_data_dir(mv_dir, desc))
     return mv.groupBy(*group_cols).agg(*exprs)
 

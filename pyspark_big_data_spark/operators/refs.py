@@ -501,7 +501,7 @@ def merge_branch(
     )
     from pyspark_big_data_spark.operators.versioned import (
         manifest,
-        table_changes,
+        read_chain_files,
         version_chain,
     )
 
@@ -578,14 +578,11 @@ def merge_branch(
         # the TARGET head's schema (the base's may predate additive
         # evolution on the target, and the append guard would refuse
         # a delta missing the evolved columns)
-        delta = table_changes(spark, root, head_t, head_t)
+        delta = read_chain_files(spark, root, head_t, [])
     else:
-        for d in ship_dirs:
-            spark.catalog.refreshByPath(d)
-        reader = spark.read
-        if len(ship_dirs) > 1:
-            reader = reader.option("mergeSchema", "true")  # evolved chains
-        delta = reader.parquet(*ship_dirs)
+        # ship dirs are members of the source chain: its bound schema
+        # null-fills pre-evolution deltas
+        delta = read_chain_files(spark, root, head_s, ship_dirs)
     new_v = commit_to_branch(
         delta,
         root,

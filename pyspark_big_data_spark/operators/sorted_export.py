@@ -49,6 +49,7 @@ def verify_sorted_export(
     # _metadata.row_index gives the PHYSICAL position inside each file —
     # the window must order by position and test key monotonicity, not
     # order by the key (which would vacuously report sorted).
+    # any plain parquet path, with no manifest: infer its schema
     data = spark.read.parquet(path).select(
         F.input_file_name().alias("_file"),
         F.col("_metadata.row_index").alias("_pos"),

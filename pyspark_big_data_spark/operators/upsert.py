@@ -60,6 +60,7 @@ def upsert_parquet(
     # a prior swap on this path leaves a stale cached file listing in
     # the session; drop it so repeated merges in one session work
     spark.catalog.refreshByPath(path)
+    # plain parquet with no manifest: its schema is only known by inference
     existing = spark.read.parquet(path)
     if set(existing.columns) != set(updates.columns):
         raise ValueError(
@@ -104,6 +105,7 @@ def erase_keys_parquet(
     keys derived from ``path`` are fine (fully consumed before the
     swap)."""
     spark.catalog.refreshByPath(path)
+    # plain parquet with no manifest: its schema is only known by inference
     existing = spark.read.parquet(path)
     survivors, seen = _drop_keys(existing, keys.select(key).distinct(), key)
     kept = replace_parquet(survivors, path, partition_by)

@@ -35,10 +35,12 @@ answer walks the chain's manifests through ``_chain_manifests``, which
 refuses a member whose manifest is missing or does not cover the
 column; the three file plans (stats range, Bloom probes, all-null
 files) are per-file keep rules over one loop, ``_file_plan``; and
-``_read_planned`` is the one place a plan becomes a DataFrame, bound
-to the memoized chain schema. ``manifest_shard_files`` shards the
-manifest into a manifest list (per-shard JSON files) so no single
-metadata file grows with the snapshot; multi-writer snapshot
+``read_chain_files`` is the one place any subset of a version's chain
+dirs or files (a file plan, a change feed's delta dirs, a branch
+merge's shipped deltas) becomes a DataFrame, bound to the memoized
+chain schema. ``manifest_shard_files`` shards the manifest into a
+manifest list (per-shard JSON files) so no single metadata file
+grows with the snapshot; multi-writer snapshot
 isolation lives in operators/transactions.py, merge-on-read deletes
 (deletion-vector sidecars + broadcast anti-join reads) in
 operators/deletes.py, small-file compaction is ``compact_version``
@@ -222,6 +224,7 @@ def _build_file_ndv(
     the fourth metadata-only query shape next to COUNT / MIN-MAX /
     NULLS). Returns {col: {file: b64(sketch)}}."""
     spark.catalog.refreshByPath(staging)
+    # this commit's staged files: no chain schema is memoized yet
     df = spark.read.parquet(staging).select(
         F.col("_metadata.file_name").alias("__file"), *ndv_cols
     )
@@ -279,6 +282,7 @@ def _build_file_blooms(
     import pandas as pd
 
     cols = list(bloom_cols)
+    # this commit's staged files: no chain schema is memoized yet
     df = spark.read.parquet(staging).select(
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias("_file"),
         *[F.col(c).cast("string").alias(c) for c in cols],
@@ -612,8 +616,9 @@ def write_version(
     stages a positional deletion vector under the version's own
     ``_merge_deletes/`` dir, so delta data files AND the vectors that
     retire the rows they replace publish in the SAME atomic rename —
-    the single-commit MERGE shape. The vector schema must be exactly
-    ``(_file string, _pos long)`` (operators/deletes.py addresses).
+    the single-commit MERGE shape. Its columns must be exactly the
+    address columns of ``deletes.VECTOR_SCHEMA``, and it is written
+    cast to that schema.
 
     Every manifest carries ``committed_at`` (epoch seconds at commit
     build time) for AS-OF-TIMESTAMP resolution (``version_as_of``)."""
@@ -629,15 +634,21 @@ def write_version(
                 f"manifest_extra may not override reserved keys: {sorted(reserved)}"
             )
     if embedded_pos_deletes is not None:
+        from pyspark_big_data_spark.operators.deletes import (
+            VECTOR_SCHEMA,
+            as_vector,
+        )
+
         if not _append:
             raise ValueError(
                 "embedded_pos_deletes is a MERGE-commit feature and "
                 "requires an append commit (_append=True)"
             )
-        if set(embedded_pos_deletes.columns) != {"_file", "_pos"}:
+        if set(embedded_pos_deletes.columns) != set(VECTOR_SCHEMA.fieldNames()):
             raise ValueError(
                 "embedded_pos_deletes must have exactly the address "
-                f"columns ['_file', '_pos']; got {sorted(embedded_pos_deletes.columns)}"
+                f"columns {sorted(VECTOR_SCHEMA.fieldNames())}; "
+                f"got {sorted(embedded_pos_deletes.columns)}"
             )
     spark = df.sparkSession
     fs, _, jvm = _fs(spark, root)
@@ -689,7 +700,7 @@ def write_version(
         pos_delete_rows = None
         if embedded_pos_deletes is not None:
             emb = f"{staging}/{EMBEDDED_DELETES_DIR}"
-            embedded_pos_deletes.write.mode("overwrite").parquet(emb)
+            as_vector(embedded_pos_deletes).write.mode("overwrite").parquet(emb)
             if _driver_readable(emb):
                 # footer-only count on the DRIVER: prices the MOR
                 # anti-join with zero Spark jobs (was a
@@ -702,7 +713,7 @@ def write_version(
                 )
             else:  # remote root: Spark's parquet count is footer-only too
                 spark.catalog.refreshByPath(emb)
-                pos_delete_rows = spark.read.parquet(emb).count()
+                pos_delete_rows = spark.read.schema(VECTOR_SCHEMA).parquet(emb).count()
         if stats_cols or bloom_cols or ndv_cols or _append or manifest_extra:
             files = _list_parquet_files(fs, jvm, staging)
             stats, file_nulls, file_rows = _collect_file_stats(
@@ -764,6 +775,7 @@ def write_version(
             _write_json(fs, jvm, f"{staging}/{MANIFEST_NAME}", doc)
         if audit is not None:
             spark.catalog.refreshByPath(staging)
+            # the audit sees the staged bytes as a fresh reader would
             if not audit(spark.read.parquet(staging)):
                 raise AuditFailed(
                     f"audit refused snapshot targeting v={n} at {root}; "
@@ -1005,9 +1017,9 @@ def append_version(
     a chain read could not distinguish them from data loss). The chain
     read then merges schemas across members and null-fills the new
     columns for pre-evolution rows — the add-column evolution contract
-    every table format ships. Reads of a mixed-schema chain pay the
-    per-member footer union (``mergeSchema``), which is O(files) like
-    the listing itself.
+    every table format ships. The first read of a mixed-schema chain
+    pays the per-member footer union (``mergeSchema``), which is
+    O(files) like the listing itself; later reads bind its result.
 
     Deletion-vector interaction (r11): appending onto a chain that
     carries EXTERNAL tombstones is refused unless
@@ -1125,6 +1137,7 @@ def read_version(
     cached = _meta_cache_get("chain_schema", root, version)
     if cached is not None:
         return spark.read.schema(cached).parquet(*dirs)
+    # a chain's first read: nothing memoized yet, so infer
     if len(dirs) == 1:
         df = spark.read.parquet(dirs[0])
     else:
@@ -1208,19 +1221,21 @@ def _file_plan(
     return selected, len(selected), n_total
 
 
-def _read_planned(
-    spark: SparkSession, root: str, version: int, selected: list[str]
+def read_chain_files(
+    spark: SparkSession, root: str, version: int, paths: list[str]
 ) -> DataFrame:
-    """A file plan as a DataFrame, the one place a plan becomes a read.
-    The subset binds ``read_version``'s memoized chain schema: which
-    files survive pruning must not decide the result schema (on an
-    evolved chain, pre-evolution survivors still carry the evolved
-    columns, null-filled, in chain order), and a warm read infers no
-    schema at all. An empty plan is an empty frame with that schema."""
+    """Any subset of ``v=version``'s chain dirs or files as a
+    DataFrame: a file plan, a change feed's delta dirs, the ancestor
+    files a vector addresses, a branch merge's shipped deltas. The
+    subset binds ``read_version``'s memoized chain schema: which paths
+    are read must not decide the result schema (a pre-evolution
+    member still carries the evolved columns, null-filled, in chain
+    order), and a warm read infers no schema at all. An empty subset
+    is an empty frame with that schema."""
     full = read_version(spark, root, version)
-    if not selected:
+    if not paths:
         return full.filter(F.lit(False))
-    return spark.read.schema(full.schema).parquet(*selected)
+    return spark.read.schema(full.schema).parquet(*paths)
 
 
 def pruned_file_plan(
@@ -1266,7 +1281,7 @@ def read_version_pruned(
     layout answers a narrow range predicate from a handful of files."""
     version = _resolve_version(spark, root, version)
     selected, _, _ = pruned_file_plan(spark, root, col, lower, upper, version)
-    df = _read_planned(spark, root, version, selected)
+    df = read_chain_files(spark, root, version, selected)
     if lower is not None:
         df = df.filter(F.col(col) >= F.lit(lower))
     if upper is not None:
@@ -1330,7 +1345,7 @@ def read_version_point(
     are bit-identical to ``read_version(...).filter(col == value)``)."""
     version = _resolve_version(spark, root, version)
     selected, _, _ = bloom_file_plan(spark, root, col, [value], version)
-    return _read_planned(spark, root, version, selected).filter(
+    return read_chain_files(spark, root, version, selected).filter(
         F.col(col) == F.lit(value)
     )
 
@@ -1705,42 +1720,16 @@ def table_changes(
     ``delete_positions``, or a MERGE commit's embedded vectors) means
     the change includes REMOVALS an adds-only feed cannot express — so
     both raise (ask snapshot_diff instead) rather than returning wrong
-    rows. Both endpoints must be on the same chain; ``from_version ==
-    to_version`` is an empty feed with the correct schema."""
+    rows. Both endpoints must be on the same chain. The feed carries
+    ``v=to_version``'s chain schema (a pre-evolution delta's rows
+    null-fill the late columns); ``from_version == to_version`` is an
+    empty feed with that schema."""
     from pyspark_big_data_spark.operators.deletes import (
         _embedded_deletes_dir,
         external_vectors,
     )
 
-    committed = set(list_versions(spark, root))
-    for v in (from_version, to_version):
-        if v not in committed:
-            raise ValueError(f"version {v} does not exist under {root}")
-    if from_version > to_version:
-        raise ValueError(
-            f"from_version {from_version} is newer than to_version {to_version}"
-        )
-    if from_version == to_version:
-        return read_version(spark, root, to_version).filter(F.lit(False))
-    members = []
-    v = to_version
-    while v != from_version:
-        m = manifest(spark, root, v)
-        base = m.get("base_version") if m else None
-        if base is None:
-            raise ValueError(
-                f"v={v} under {root} is a full rewrite, not an append — "
-                f"the delta files between v={from_version} and "
-                f"v={to_version} do not represent the change; use a keyed "
-                "snapshot diff instead"
-            )
-        members.append(v)
-        v = base
-        if v < from_version:
-            raise ValueError(
-                f"v={to_version} under {root} does not chain through "
-                f"v={from_version} (chain skips to v={v})"
-            )
+    members = range_members(spark, root, from_version, to_version)
     external = external_vectors(spark, root, members)
     for v in members:
         if v in external or _embedded_deletes_dir(spark, root, v) is not None:
@@ -1750,13 +1739,50 @@ def table_changes(
                 "an adds-only feed would misstate the change; use a keyed "
                 "snapshot diff instead"
             )
-    dirs = [f"{root.rstrip('/')}/v={v}" for v in members]
-    for d in dirs:
-        spark.catalog.refreshByPath(d)
-    reader = spark.read
-    if len(dirs) > 1:
-        reader = reader.option("mergeSchema", "true")  # evolved chains
-    return reader.parquet(*dirs)
+    return read_chain_files(
+        spark, root, to_version, [f"{root.rstrip('/')}/v={v}" for v in members]
+    )
+
+
+def range_members(
+    spark: SparkSession, root: str, from_version: int, to_version: int
+) -> list[int]:
+    """The chain members in ``(from_version, to_version]``, ascending:
+    the versions whose delta dirs carry the change between the two —
+    the one range walk behind both change feeds (``table_changes``
+    and operators/cdf.py). Raises when an endpoint does not exist,
+    when ``from_version`` is newer than ``to_version``, when a member
+    is a full rewrite (its files do not represent the change), and
+    when ``to_version``'s chain does not pass through
+    ``from_version``. Deletion vectors are each caller's rule."""
+    committed = set(list_versions(spark, root))
+    for v in (from_version, to_version):
+        if v not in committed:
+            raise ValueError(f"version {v} does not exist under {root}")
+    if from_version > to_version:
+        raise ValueError(
+            f"from_version {from_version} is newer than to_version {to_version}"
+        )
+    members = []
+    v = to_version
+    while v != from_version:
+        m = manifest(spark, root, v)
+        base = m.get("base_version") if m else None
+        if base is None:
+            raise ValueError(
+                f"v={v} under {root} is a full rewrite, not an append — "
+                f"its files do not represent the change between "
+                f"v={from_version} and v={to_version}; use a keyed "
+                "snapshot diff instead"
+            )
+        members.append(v)
+        v = int(base)
+        if v < from_version:
+            raise ValueError(
+                f"v={to_version} under {root} does not chain through "
+                f"v={from_version} (chain skips to v={v})"
+            )
+    return members[::-1]
 
 
 def restore_version(
@@ -1857,6 +1883,6 @@ def read_version_not_null(
     full read + filter)."""
     version = _resolve_version(spark, root, version)
     selected, _, _ = not_null_file_plan(spark, root, col, version)
-    return _read_planned(spark, root, version, selected).filter(
+    return read_chain_files(spark, root, version, selected).filter(
         F.col(col).isNotNull()
     )

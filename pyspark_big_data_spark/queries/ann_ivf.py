@@ -132,7 +132,7 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # flat-column sides keep the per-candidate dot inside JIT-able
-    # codegen (functions/vectors.py::dot_unrolled cliff note); norms
+    # codegen (functions/vectors.py::dot_flat cliff note); norms
     # hoisted per row — identical doubles to the per-pair spelling
     dim_row = emb.select(F.size("e").alias("d")).first()
     dim = dim_row["d"] if dim_row else 0

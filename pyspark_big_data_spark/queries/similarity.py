@@ -104,7 +104,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim_row = emb.select(F.size("e").alias("d")).first()
     dim = dim_row["d"] if dim_row else 0
     # flat columns keep the per-pair dot inside JIT-able codegen (see
-    # functions/vectors.py::dot_unrolled's cliff note); norms computed
+    # functions/vectors.py::dot_flat's cliff note); norms computed
     # once per row on the array form — identical doubles either way
     with_norm = V.flatten_vec(
         emb.withColumn("nrm", V.norm(F.col("e"))), "e", dim, "_x", ["vec_id", "nrm"]

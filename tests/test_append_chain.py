@@ -276,6 +276,28 @@ def test_additive_schema_evolution(spark, tmp_path):
     feed = table_changes(spark, root, 0, 1)
     assert feed.filter(F.col("tag") == "late").count() == 20
 
+    # a range whose first delta predates the added column: both feeds
+    # carry the head's columns in the head's order, null-filled
+    from pyspark_big_data_spark.operators.cdf import table_changes_typed
+
+    root2 = str(tmp_path / "vds2")
+    write_version(_df(spark, 0, 10), root2)
+    append_version(_df(spark, 10, 20), root2)
+    append_version(
+        _df(spark, 20, 25).select(F.lit("late").alias("tag"), "k", "x"),
+        root2,
+        allow_evolution=True,
+    )
+    head_cols = read_version(spark, root2, 2).columns
+    typed_cols = ["_change_type", "_commit_version"]
+    for feed, extra in (
+        (table_changes(spark, root2, 0, 2), []),
+        (table_changes_typed(spark, root2, 0, 2), typed_cols),
+    ):
+        assert feed.columns == head_cols + extra
+        assert feed.filter(F.col("tag").isNull()).count() == 10
+        assert feed.filter(F.col("tag") == "late").count() == 5
+
 
 def test_evolution_refuses_drops(spark, tmp_path):
     root = str(tmp_path / "vds")

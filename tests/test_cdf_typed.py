@@ -14,6 +14,9 @@ from pyspark.sql import functions as F
 from pyspark_big_data_spark.operators.cdf import (
     CHANGE_TYPE_COL,
     COMMIT_VERSION_COL,
+    INSERT,
+    UPDATE_POST,
+    UPDATE_PRE,
     fold_changes,
     table_changes_typed,
 )
@@ -29,6 +32,7 @@ from pyspark_big_data_spark.operators.merge import (
 from pyspark_big_data_spark.operators.versioned import (
     append_version,
     read_version,
+    table_changes,
     write_version,
 )
 
@@ -245,6 +249,41 @@ def test_schema_evolution_null_fills_preimages(spark, tmp_path):
     dels = ch.filter(F.col(CHANGE_TYPE_COL) == "delete").collect()
     assert len(dels) == 1 and dels[0]["extra"] is None
     _assert_fold_equals_head(spark, root, 0, v2)
+
+
+def test_warm_feed_and_mor_builds_run_no_jobs(spark, tmp_path, count_jobs):
+    """Every vector, delta and preimage read binds a known schema, so
+    on a warm 200-row table with three merge_into commits building the
+    typed feed or the MOR read starts no Spark job, and neither does
+    building the adds-only feed over three appends."""
+    root = str(tmp_path / "t")
+    write_version(_base(spark, 200), root)
+    for i in range(3):
+        src = spark.createDataFrame(
+            [(i * 10 + j, f"m{i}", 1.0) for j in range(4)] + [(300 + i, "n", 0.0)],
+            "k int, name string, val double",
+        )
+        merge_into(spark, root, src, "k")
+    appends = str(tmp_path / "a")
+    write_version(_base(spark, 200), appends)
+    for i in range(3):
+        added = _base(spark, 5).withColumn("k", F.col("k") + 200 + 5 * i)
+        append_version(added, appends)
+
+    builds = {
+        "table_changes_typed": lambda: table_changes_typed(spark, root, 0, 3, "k"),
+        "read_version_mor": lambda: read_version_mor(spark, root, 3),
+        "table_changes": lambda: table_changes(spark, appends, 0, 3),
+    }
+    for build in builds.values():
+        build()  # warm: memoizes manifests and chain schemas
+    jobs = {name: count_jobs(build) for name, build in builds.items()}
+    assert jobs == dict.fromkeys(builds, 0)
+    assert builds["table_changes"]().count() == 15
+    per_commit = {UPDATE_PRE: 4, UPDATE_POST: 4, INSERT: 1}
+    assert _counts(builds["table_changes_typed"]()) == {
+        (v, t): n for v in (1, 2, 3) for t, n in per_commit.items()
+    }
 
 
 def test_delete_where_noop_and_update_where_noop(spark, tmp_path):

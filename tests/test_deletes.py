@@ -326,7 +326,10 @@ def test_both_vector_types_compose_and_materialize(spark, tmp_path):
 
 
 def test_positional_delete_contracts(spark, tmp_path):
-    from pyspark_big_data_spark.operators.deletes import delete_positions
+    from pyspark_big_data_spark.operators.deletes import (
+        VECTOR_SCHEMA,
+        delete_positions,
+    )
     from pyspark_big_data_spark.operators.versioned import compact_version
 
     root = str(tmp_path / "vds")
@@ -338,6 +341,12 @@ def test_positional_delete_contracts(spark, tmp_path):
         delete_positions(spark, root, bad, version=0)
     ok = spark.createDataFrame([("nope.parquet", 0)], "_file string, _pos long")
     delete_positions(spark, root, ok, version=0)
+    # an int address is cast on write: every vector is VECTOR_SCHEMA
+    narrow = spark.createDataFrame([("nope.parquet", 1)], "_file string, _pos int")
+    k = delete_positions(spark, root, narrow, version=0)
+    written = spark.read.parquet(f"{root}/_pos_deletes/v=0/d={k}")
+    assert written.schema == VECTOR_SCHEMA
+    assert read_version_mor(spark, root, 0).count() == 10
     with pytest.raises(ValueError, match="deletion vectors"):
         compact_version(spark, root, target_files=1)
 

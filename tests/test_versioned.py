@@ -396,6 +396,31 @@ def test_warm_planned_reads_run_no_jobs(spark, tmp_path, count_jobs):
     assert not_null.count() == 200
 
 
+def test_merge_schema_reads_only_at_known_sites():
+    """A merged-schema read infers by a Spark job, so operators/ keeps
+    exactly the two whose schema is not known up front: a chain's
+    first read, and the equality-tombstone union whose widened schema
+    is how a foreign key column gets refused."""
+    import pathlib
+    import re
+
+    import pyspark_big_data_spark.operators as ops
+
+    sites = []
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        fn = None
+        for line in path.read_text().splitlines():
+            top_level_def = re.match(r"def (\w+)", line)
+            if top_level_def:
+                fn = top_level_def.group(1)
+            if 'option("mergeSchema"' in line:
+                sites.append((path.name, fn))
+    assert sites == [
+        ("deletes.py", "_equality_tombstones"),
+        ("versioned.py", "read_version"),
+    ]
+
+
 def test_lost_race_retries_instead_of_nesting(spark, tmp_path, monkeypatch):
     """Local-FS race seam: Hadoop's LocalFileSystem rename onto an
     existing ``v=N`` returns TRUE and moves the staging dir INSIDE it —
