@@ -43,8 +43,8 @@ listing per member that has a tree), walked lazily so
 ``has_any_delete_vectors`` stops at the first vector-bearing member;
 ``external_vectors`` collects it into a dict. Callers that also need
 embedded vectors ask ``_embedded_deletes_dir``, which answers from
-the memoized manifest. ``vector_dirs`` names the external trees that
-go with a version when retention or a rollback deletes it.
+the chain snapshot's manifests. ``vector_dirs`` names the external
+trees that go with a version when retention or a rollback deletes it.
 
 Commit protocol: ``delete_keys`` and ``delete_positions`` publish
 through ``_commit_vector``, which hands the tombstone to
@@ -84,17 +84,15 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from pyspark_big_data_spark.operators.versioned import (
     EMBEDDED_DELETES_DIR,
+    Snapshot,
     _fs,
     _read_json,
-    _resolve_version,
     _write_json,
     commit_next,
     list_numbered_dirs,
-    list_versions,
-    manifest,
     read_chain_files,
     read_version,
-    version_chain,
+    snapshot,
     write_version,
 )
 
@@ -159,7 +157,7 @@ def delete_keys(
     root: str,
     keys: DataFrame,
     key: str,
-    version: int | None = None,
+    version: int | Snapshot | None = None,
 ) -> int:
     """Commit an EQUALITY deletion vector against snapshot ``v=version``
     (default latest) and return the delete-commit id. No data file is
@@ -176,10 +174,9 @@ def delete_keys(
     Sequence semantics on chains: the vector masks rows living in chain
     members <= ``version`` for every MOR read at or above ``version`` —
     rows appended AFTER the delete (same key or not) are never masked."""
-    version = _resolve_version(spark, root, version)
-    if version not in list_versions(spark, root):
-        raise ValueError(f"version {version} does not exist under {root}")
-    snap_cols = read_version(spark, root, version).columns
+    snap = snapshot(spark, root, version)
+    version = snap.version
+    snap_cols = snap.schema.fieldNames()
     if key not in snap_cols:
         raise ValueError(
             f"delete key {key!r} is not a column of v={version} "
@@ -286,13 +283,11 @@ def _pos_deletes_root(root: str, version: int) -> str:
     return f"{root.rstrip('/')}/{POS_DELETES_DIR}/v={version}"
 
 
-def _embedded_deletes_dir(
-    spark: SparkSession, root: str, version: int
-) -> str | None:
+def _embedded_deletes_dir(snap: Snapshot, version: int) -> str | None:
     """The embedded positional-vector dir a MERGE commit staged inside
-    ``v=version`` (None when absent). Underscore-prefixed, so data
-    scans never see it; committed atomically with the version's data
-    files by the one rename.
+    ``v=version``, a member of ``snap``'s chain (None when absent).
+    Underscore-prefixed, so data scans never see it; committed
+    atomically with the version's data files by the one rename.
 
     Answered from the version's MANIFEST when one exists (r14):
     ``write_version`` is the only committer that stages embedded
@@ -303,11 +298,11 @@ def _embedded_deletes_dir(
     write_version, txn commits) can never carry embedded vectors by
     construction, but keep the conservative fs probe for them — a
     foreign/hand-built version dir must still be seen."""
-    d = f"{root.rstrip('/')}/v={version}/{EMBEDDED_DELETES_DIR}"
-    m = manifest(spark, root, version)
+    d = f"{snap.dir(version)}/{EMBEDDED_DELETES_DIR}"
+    m = snap.manifests[version]
     if m is not None:
         return d if "pos_delete_rows" in m else None
-    fs, hp, _ = _fs(spark, d)
+    fs, hp, _ = _fs(snap.spark, d)
     return d if fs.exists(hp) else None
 
 
@@ -364,7 +359,7 @@ def external_vectors(
 
 
 def has_any_delete_vectors(
-    spark: SparkSession, root: str, version: int
+    spark: SparkSession, root: str, version: int | Snapshot
 ) -> bool:
     """True iff ANY chain member of ``v=version`` carries equality,
     positional, or embedded (MERGE) deletion vectors — the question
@@ -372,16 +367,15 @@ def has_any_delete_vectors(
     must ask before trusting ``read_version``. Stops at the first
     member, newest first, that carries either kind, so the members
     below it pay no ``d=`` listing."""
+    snap = snapshot(spark, root, version)
     return any(
-        eq or pos or _embedded_deletes_dir(spark, root, v) is not None
-        for v, eq, pos in _member_vectors(
-            spark, root, version_chain(spark, root, version)
-        )
+        eq or pos or _embedded_deletes_dir(snap, v) is not None
+        for v, eq, pos in _member_vectors(spark, root, snap.chain)
     )
 
 
 def with_positions(
-    spark: SparkSession, root: str, version: int | None = None
+    spark: SparkSession, root: str, version: int | Snapshot | None = None
 ) -> DataFrame:
     """The pinned snapshot with its physical addresses attached:
     ``_file`` (version-qualified relative path) and ``_pos`` (row index
@@ -391,9 +385,14 @@ def with_positions(
     scan costs the same as the plain read. Raises if the data schema
     already uses the reserved address names — a silent duplicate column
     would corrupt the anti-join."""
-    base = read_version(spark, root, version)
-    _guard_reserved_address_cols(base)
-    return base.select(
+    return _addressed(read_version(spark, root, version))
+
+
+def _addressed(df: DataFrame) -> DataFrame:
+    """``df``, a read of chain files, with its ``(_file, _pos)`` row
+    addresses in front."""
+    _guard_reserved_address_cols(df)
+    return df.select(
         _qualified_file_expr().alias(FILE_COL),
         F.col("_metadata.row_index").alias(POS_COL),
         "*",
@@ -414,16 +413,14 @@ def delete_positions(
     spark: SparkSession,
     root: str,
     positions: DataFrame,
-    version: int | None = None,
+    version: int | Snapshot | None = None,
 ) -> int:
     """Commit a POSITIONAL deletion vector against ``v=version``: a
     parquet of distinct ``(_file, _pos)`` addresses (build them with
     ``with_positions``), published by the verified rename. No data
     file is touched; nulls in either address column are refused (a
     null address is a planner bug, not a deletable row)."""
-    version = _resolve_version(spark, root, version)
-    if version not in list_versions(spark, root):
-        raise ValueError(f"version {version} does not exist under {root}")
+    version = snapshot(spark, root, version).version
     missing = {FILE_COL, POS_COL} - set(positions.columns)
     if missing:
         raise ValueError(
@@ -438,7 +435,7 @@ def delete_positions(
     return _commit_vector(spark, _pos_deletes_root(root, version), tomb)
 
 
-def _chain_vectors(spark: SparkSession, root: str, version: int):
+def _chain_vectors(spark: SparkSession, root: str, version: int | Snapshot):
     """Census of every deletion vector visible to a MOR read of
     ``v=version``: ``(eq, pos_paths, legacy_pos_paths, total_rows)``
     where ``eq`` is ``[(member, keys_df, key_col)]`` newest-first and
@@ -456,9 +453,9 @@ def _chain_vectors(spark: SparkSession, root: str, version: int):
     pos_paths: list[str] = []
     legacy_pos_paths: list[str] = []
     total_rows = 0
-    members = version_chain(spark, root, version)
-    external = external_vectors(spark, root, members)
-    for v in members:
+    snap = snapshot(spark, root, version)
+    external = external_vectors(spark, root, snap.chain)
+    for v in snap.chain:
         eq_ids, pos_ids = external.get(v, ([], []))
         paths = _delete_commit_dirs(root, v, eq_ids)
         keys = _equality_tombstones(spark, v, paths)
@@ -472,13 +469,12 @@ def _chain_vectors(spark: SparkSession, root: str, version: int):
             # no sidecar: a pre-r11 commit with bare-basename addresses
             (pos_paths if has_sidecar else legacy_pos_paths).append(p)
             total_rows += rows
-        emb = _embedded_deletes_dir(spark, root, v)
+        emb = _embedded_deletes_dir(snap, v)
         if emb is not None:
             # embedded vectors arrived WITH the qualified format —
             # never legacy
             pos_paths.append(emb)
-            m = manifest(spark, root, v)
-            n = (m or {}).get("pos_delete_rows")
+            n = (snap.manifests[v] or {}).get("pos_delete_rows")
             total_rows += int(n) if n is not None else _commit_rows(spark, emb)[0]
     return eq, pos_paths, legacy_pos_paths, total_rows
 
@@ -486,7 +482,7 @@ def _chain_vectors(spark: SparkSession, root: str, version: int):
 def read_version_mor(
     spark: SparkSession,
     root: str,
-    version: int | None = None,
+    version: int | Snapshot | None = None,
     keep_addresses: bool = False,
     selected_files: list[str] | None = None,
 ) -> DataFrame:
@@ -524,27 +520,20 @@ def read_version_mor(
     is a SUPERSET pre-cut like every plan here: the caller's own
     predicate/join provides exactness. An empty list is the
     provably-no-file case (empty frame, correct schema)."""
-    version = _resolve_version(spark, root, version)
+    snap = snapshot(spark, root, version)
+    version = snap.version
     if selected_files is not None:
-        base = read_chain_files(spark, root, version, selected_files)
+        base = read_chain_files(spark, root, snap, selected_files)
     else:
-        base = read_version(spark, root, version)
-    eq, pos_paths, legacy_pos, total_rows = _chain_vectors(spark, root, version)
+        base = read_version(spark, root, snap)
+    eq, pos_paths, legacy_pos, total_rows = _chain_vectors(spark, root, snap)
     if not eq and not pos_paths and not legacy_pos:
-        if not keep_addresses:
-            return base
-        _guard_reserved_address_cols(base)
-        return base.select(
-            _qualified_file_expr().alias(FILE_COL),
-            F.col("_metadata.row_index").alias(POS_COL),
-            "*",
-        )
+        return _addressed(base) if keep_addresses else base
 
     hint = total_rows <= BROADCAST_THRESHOLD_ROWS
-    members = version_chain(spark, root, version)
     # vectors against the head mask the whole chain; only INTERIOR
     # vectors need the per-row member sequence
-    need_member = any(m != version for m, _, _ in eq) and len(members) > 1
+    need_member = any(m != version for m, _, _ in eq) and len(snap.chain) > 1
     need_pos = bool(pos_paths) or bool(legacy_pos) or keep_addresses
 
     proj = []
@@ -622,7 +611,7 @@ def read_version_mor(
 def materialize_deletes(
     spark: SparkSession,
     root: str,
-    version: int | None = None,
+    version: int | Snapshot | None = None,
     target_files: int | None = None,
     manifest_extra: dict | None = None,
 ) -> int:
@@ -651,20 +640,20 @@ def materialize_deletes(
         chain_writer_markers,
     )
 
-    version = _resolve_version(spark, root, version)
-    if not has_any_delete_vectors(spark, root, version):
+    snap = snapshot(spark, root, version)
+    if not has_any_delete_vectors(spark, root, snap):
         raise ValueError(
-            f"v={version} under {root} has no tombstones to materialize"
+            f"v={snap.version} under {root} has no tombstones to materialize"
         )
-    m = manifest(spark, root, version)
+    m = snap.manifest
     stats_cols = list(m["stats_cols"]) if m and m.get("stats_cols") else None
     bloom_cols = list(m["bloom_cols"]) if m and m.get("bloom_cols") else None
     extra = dict(manifest_extra or {})
     if "writer_batch_ids" not in extra:
-        markers = chain_writer_markers(spark, root, version)
+        markers = chain_writer_markers(spark, root, snap)
         if markers:
             extra["writer_batch_ids"] = sorted(markers)
-    df = read_version_mor(spark, root, version)
+    df = read_version_mor(spark, root, snap)
     if target_files is not None:
         df = df.coalesce(target_files)
     return write_version(

@@ -71,12 +71,13 @@ from pyspark_big_data_spark.operators.deletes import (
     read_version_mor,
 )
 from pyspark_big_data_spark.operators.versioned import (
+    Snapshot,
     _chain_manifests,
-    _resolve_version,
     append_version,
     bloom_file_plan,
     pruned_file_plan,
-    read_version,
+    read_chain_files,
+    snapshot,
 )
 
 # Largest source (in keys) whose keys are collected to the driver to
@@ -185,8 +186,10 @@ def merge_into(
     is then the branch CAS's job, not the global counter's). Default:
     the global latest, with WriteConflict protection."""
     keys = [key] if isinstance(key, str) else list(key)
-    version = _resolve_version(spark, root, base_version)
-    target_schema = read_version(spark, root, version).schema
+    # one snapshot plans the file cut, the Bloom pre-check and the MOR
+    # read; the commit re-resolves its base per attempt (write_version)
+    snap = snapshot(spark, root, base_version)
+    target_schema = snap.schema
     target_cols = [f.name for f in target_schema.fields]
     for k in keys:
         if k not in target_cols:
@@ -341,7 +344,7 @@ def merge_into(
             try:
                 # [min, max] rode the uniqueness aggregate
                 sel, n_sel, n_total = pruned_file_plan(
-                    spark, root, keys[0], counts["lo"], counts["hi"], version
+                    spark, root, keys[0], counts["lo"], counts["hi"], snap
                 )
                 if n_sel < n_total:
                     selected = sel
@@ -356,7 +359,7 @@ def merge_into(
                 # wasted source-sized collect per MERGE on every
                 # manifest-less witness table).
                 try:
-                    _chain_manifests(spark, root, version, "bloom_cols", keys[0])
+                    _chain_manifests(spark, root, snap, "bloom_cols", keys[0])
                 except ValueError:
                     pass  # a member without a Bloom filter on the key
                 else:
@@ -364,7 +367,7 @@ def merge_into(
                         r[keys[0]] for r in source.select(keys[0]).collect()
                     ]
                     sel, n_sel, n_total = bloom_file_plan(
-                        spark, root, keys[0], probes, version
+                        spark, root, keys[0], probes, snap
                     )
                     if n_sel < n_total:
                         selected = sel
@@ -372,12 +375,12 @@ def merge_into(
                 target = read_version_mor(
                     spark,
                     root,
-                    version,
+                    snap,
                     keep_addresses=True,
                     selected_files=selected,
                 )
         if target is None:
-            target = read_version_mor(spark, root, version, keep_addresses=True)
+            target = read_version_mor(spark, root, snap, keep_addresses=True)
         on = None
         for k in keys:
             c = F.col(f"target.{k}") == F.col(f"source.{k}")
@@ -649,8 +652,8 @@ def merge_into(
                 allow_base_tombstones=True,  # MERGE lives on the MOR read path
                 # pinned-base merges (branch heads) commit onto their base
                 # explicitly; global merges pin via conflict detection
-                expected_base=None if base_version is not None else version,
-                base_override=version if base_version is not None else None,
+                expected_base=None if base_version is not None else snap.version,
+                base_override=snap.version if base_version is not None else None,
                 manifest_extra=extra,
                 embedded_pos_deletes=vector if n_retired else None,
             )
@@ -689,11 +692,11 @@ def delete_where(
     Column). Returns ``{"version", "n_deleted"}``; matching nothing
     burns no version number. One target pass; rows the condition
     cannot match are never rewritten (the vector is O(matches))."""
-    version = _resolve_version(spark, root, base_version)
+    snap = snapshot(spark, root, base_version)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     new_v, n = _commit_row_mutation(
-        spark, root, version, base_version, cond, "delete", manifest_extra,
-        lambda target, hit: read_version(spark, root, version).filter(F.lit(False)),
+        spark, root, snap, base_version, cond, "delete", manifest_extra,
+        lambda target, hit: read_chain_files(spark, root, snap, []),
     )
     return {"version": new_v, "n_deleted": n}
 
@@ -718,8 +721,8 @@ def update_where(
     feed types this commit's rows update_preimage/update_postimage
     without needing merge keys. Returns ``{"version", "n_updated"}``;
     matching nothing burns no version number."""
-    version = _resolve_version(spark, root, base_version)
-    target_cols = read_version(spark, root, version).columns
+    snap = snapshot(spark, root, base_version)
+    target_cols = snap.schema.fieldNames()
     bad = set(set_exprs) - set(target_cols)
     if bad:
         raise ValueError(
@@ -743,7 +746,7 @@ def update_where(
         )
 
     new_v, n = _commit_row_mutation(
-        spark, root, version, base_version, cond, "update", manifest_extra,
+        spark, root, snap, base_version, cond, "update", manifest_extra,
         recomputed,
     )
     return {"version": new_v, "n_updated": n}
@@ -752,7 +755,7 @@ def update_where(
 def _commit_row_mutation(
     spark: SparkSession,
     root: str,
-    version: int,
+    snap: Snapshot,
     base_version: int | None,
     cond,
     kind: str,
@@ -760,11 +763,11 @@ def _commit_row_mutation(
     delta,
 ) -> tuple[int | None, int]:
     """The shared body of ``delete_where`` / ``update_where``: persist
-    the rows of ``v=version``'s MOR read matching ``cond``, count them,
+    the rows of ``snap``'s MOR read matching ``cond``, count them,
     and commit ``delta(target, hit)`` as an append whose embedded vector
     retires the hit rows, stamped ``row_mutation: kind``. Returns
     ``(version, rows hit)``; matching nothing burns no version."""
-    target = read_version_mor(spark, root, version, keep_addresses=True)
+    target = read_version_mor(spark, root, snap, keep_addresses=True)
     hit = target.filter(cond).persist()
     try:
         n = hit.count()
@@ -774,8 +777,8 @@ def _commit_row_mutation(
             delta(target, hit),
             root,
             allow_base_tombstones=True,
-            expected_base=None if base_version is not None else version,
-            base_override=version if base_version is not None else None,
+            expected_base=None if base_version is not None else snap.version,
+            base_override=snap.version if base_version is not None else None,
             manifest_extra={**(manifest_extra or {}), "row_mutation": kind},
             embedded_pos_deletes=hit.select(FILE_COL, POS_COL),
         )

@@ -33,13 +33,16 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark_big_data_spark.operators.versioned import (
+    Snapshot,
     _fs,
     _read_json,
     _write_json,
     commit_at,
     list_numbered_dirs,
     list_versions,
+    read_chain_files,
     read_version,
+    snapshot,
     sweep_dead_staging,
 )
 
@@ -386,61 +389,48 @@ def commit_to_branch(
     return new_v
 
 
-def _merge_reachable(
-    spark: SparkSession, root: str, version: int, _cache: dict | None = None
-) -> set[int]:
-    """Every version whose ROWS are incorporated in ``version``: its
-    own append chain plus, recursively, the chains of every merge
-    commit's recorded ``merged_from`` head. This is the DAG ancestry a
-    git commit gets from its two parents — the chain link is parent 1,
-    the manifest's ``merged_from`` is parent 2 — and it is what lets a
+def _merge_reachable(snap: Snapshot) -> set[int]:
+    """Every version whose ROWS are incorporated in ``snap``: its own
+    append chain plus, recursively, the chains of every merge commit's
+    recorded ``merged_from`` head. This is the DAG ancestry a git
+    commit gets from its two parents — the chain link is parent 1, the
+    manifest's ``merged_from`` is parent 2 — and it is what lets a
     re-merge resolve to a noop and a sequential merge ship only the
-    NEW delta instead of re-appending rows already merged."""
-    from pyspark_big_data_spark.operators.versioned import (
-        manifest,
-        version_chain,
-    )
-
+    NEW delta instead of re-appending rows already merged. Every
+    version resolves from ``snap``'s listing and manifest reads."""
     seen: set[int] = set()
-    stack = [version]
+    stack = [snap]
     while stack:
-        for v in version_chain(spark, root, stack.pop(), _cache=_cache):
+        for v, m in stack.pop().manifests.items():
             if v in seen:
                 continue
             seen.add(v)
-            mf = (manifest(spark, root, v, _cache=_cache) or {}).get(
-                "merged_from"
-            )
+            mf = (m or {}).get("merged_from")
             if mf is not None and int(mf) not in seen:
-                stack.append(int(mf))
+                stack.append(snap.at(int(mf)))
     return seen
 
 
 def merge_base(
     spark: SparkSession,
     root: str,
-    version_a: int,
+    version_a: int | Snapshot,
     version_b: int,
-    _cache: dict | None = None,
     _reach_b: set[int] | None = None,
 ) -> int:
     """The three-way merge base: the NEWEST member of ``version_a``'s
     chain already incorporated in ``version_b`` (via its chain or past
     merges). Raises when the histories are unrelated (one side was
     rewritten from scratch — its chain no longer passes through any
-    shared commit, so there is nothing sound to merge onto)."""
-    from pyspark_big_data_spark.operators.versioned import version_chain
-
-    reach_b = (
-        _reach_b
-        if _reach_b is not None
-        else _merge_reachable(spark, root, version_b, _cache=_cache)
-    )
-    for v in version_chain(spark, root, version_a, _cache=_cache):  # newest first
+    shared commit, so there is nothing sound to merge onto).
+    ``version_b`` resolves from ``version_a``'s listing."""
+    a = snapshot(spark, root, version_a)
+    reach_b = _reach_b if _reach_b is not None else _merge_reachable(a.at(version_b))
+    for v in a.chain:  # newest first
         if v in reach_b:
             return v
     raise ValueError(
-        f"v={version_a} and v={version_b} under {root} share no ancestor — "
+        f"v={a.version} and v={version_b} under {root} share no ancestor — "
         "unrelated histories (a full rewrite broke the chain); merge them "
         "with an explicit commit instead"
     )
@@ -499,19 +489,16 @@ def merge_branch(
         _embedded_deletes_dir,
         external_vectors,
     )
-    from pyspark_big_data_spark.operators.versioned import (
-        manifest,
-        read_chain_files,
-        version_chain,
-    )
 
     head_s = branch_head(spark, root, source)
     head_t = branch_head(spark, root, into)
-    mcache: dict = {}  # one manifest read per version for the whole decision
-    reach_t = _merge_reachable(spark, root, head_t, _cache=mcache)
+    # one listing and one manifest read per version for the whole decision
+    snap_t = snapshot(spark, root, head_t)
+    snap_s = snap_t.at(head_s)
+    reach_t = _merge_reachable(snap_t)
     if head_s in reach_t:
         return {"mode": "noop", "version": head_t, "base": head_s}
-    if head_t in _merge_reachable(spark, root, head_s, _cache=mcache):
+    if head_t in _merge_reachable(snap_s):
         # DAG ancestry, not just the linear chain: a target head that
         # was previously MERGED into the source (merged_from parent) is
         # fully incorporated too, so the repoint is a pure fast-forward
@@ -520,12 +507,12 @@ def merge_branch(
         fast_forward_branch(spark, root, into, head_s)
         return {"mode": "fast-forward", "version": head_s, "base": head_t}
 
-    base = merge_base(spark, root, head_s, head_t, _cache=mcache, _reach_b=reach_t)
-    chain_s = version_chain(spark, root, head_s, _cache=mcache)
+    base = merge_base(spark, root, snap_s, head_t, _reach_b=reach_t)
+    chain_s = snap_s.chain
     divergent = list(itertools.takewhile(lambda v: v != base, chain_s))
     external = external_vectors(spark, root, divergent)
     for v in divergent:
-        if v in external or _embedded_deletes_dir(spark, root, v) is not None:
+        if v in external or _embedded_deletes_dir(snap_s, v) is not None:
             raise ValueError(
                 f"branch {source!r} carries deletion vectors on v={v} "
                 f"(diverged past the merge base v={base}); deletes are "
@@ -550,16 +537,13 @@ def merge_branch(
     for i, v in enumerate(chain_s):
         if v == base or v in reach_t:
             break
-        m = manifest(spark, root, v, _cache=mcache) or {}
-        mf = m.get("merged_from")
+        mf = (snap_s.manifests[v] or {}).get("merged_from")
         if mf is None:
-            ship_dirs.append(f"{root.rstrip('/')}/v={v}")
+            ship_dirs.append(snap_s.dir(v))
             continue
-        parent_v = chain_s[i + 1]
-        base_v = merge_base(spark, root, int(mf), parent_v, _cache=mcache)
-        origins = _merge_reachable(
-            spark, root, int(mf), _cache=mcache
-        ) - _merge_reachable(spark, root, base_v, _cache=mcache)
+        merged = snap_s.at(int(mf))
+        base_v = merge_base(spark, root, merged, chain_s[i + 1])
+        origins = _merge_reachable(merged) - _merge_reachable(snap_s.at(base_v))
         if not origins or origins <= reach_t:
             continue  # payload rows all target-reachable — skip
         if origins & reach_t:
@@ -570,7 +554,7 @@ def merge_branch(
                 "append-level merge cannot split a payload; replay the "
                 "missing commits onto the target explicitly"
             )
-        ship_dirs.append(f"{root.rstrip('/')}/v={v}")
+        ship_dirs.append(snap_s.dir(v))
     if not ship_dirs:
         # everything above the base is target-reachable payload (the
         # back-merge tail case): record the merge as an EMPTY append
@@ -578,11 +562,11 @@ def merge_branch(
         # the TARGET head's schema (the base's may predate additive
         # evolution on the target, and the append guard would refuse
         # a delta missing the evolved columns)
-        delta = read_chain_files(spark, root, head_t, [])
+        delta = read_chain_files(spark, root, snap_t, [])
     else:
         # ship dirs are members of the source chain: its bound schema
         # null-fills pre-evolution deltas
-        delta = read_chain_files(spark, root, head_s, ship_dirs)
+        delta = read_chain_files(spark, root, snap_s, ship_dirs)
     new_v = commit_to_branch(
         delta,
         root,
@@ -612,7 +596,7 @@ def fast_forward_branch(
     head = branch_head(spark, root, name)
     if to_version == head:
         return  # already there
-    if head not in _merge_reachable(spark, root, to_version):
+    if head not in _merge_reachable(snapshot(spark, root, to_version)):
         raise ValueError(
             f"cannot fast-forward branch {name!r}: its head v={head} is "
             f"not an ancestor of v={to_version} (divergent histories need "
@@ -640,8 +624,8 @@ def _row_hash(keys: list[str], nonkey: list[str]):
 def _keyed_diff(
     spark: SparkSession,
     root: str,
-    base_v: int,
-    head_v: int,
+    base: Snapshot,
+    head: Snapshot,
     keys: list[str],
     _base_proj=None,
 ):
@@ -658,12 +642,12 @@ def _keyed_diff(
 
     from pyspark_big_data_spark.operators.deletes import read_version_mor
 
-    old = read_version_mor(spark, root, base_v)
-    new = read_version_mor(spark, root, head_v)
+    old = read_version_mor(spark, root, base)
+    new = read_version_mor(spark, root, head)
     if set(old.columns) != set(new.columns):
         raise ValueError(
-            f"keyed merge needs matching schemas between v={base_v} and "
-            f"v={head_v} (got {sorted(old.columns)} vs "
+            f"keyed merge needs matching schemas between v={base.version} and "
+            f"v={head.version} (got {sorted(old.columns)} vs "
             f"{sorted(new.columns)}); reconcile evolution explicitly first"
         )
     nonkey = [c for c in new.columns if c not in keys]
@@ -775,15 +759,16 @@ def merge_branch_keyed(
 
     head_s = branch_head(spark, root, source)
     head_t = branch_head(spark, root, into)
-    mcache: dict = {}
-    reach_t = _merge_reachable(spark, root, head_t, _cache=mcache)
+    snap_t = snapshot(spark, root, head_t)
+    snap_s = snap_t.at(head_s)
+    reach_t = _merge_reachable(snap_t)
     if head_s in reach_t:
         return {"mode": "noop", "version": head_t, "base": head_s}
-    if head_t in _merge_reachable(spark, root, head_s, _cache=mcache):
+    if head_t in _merge_reachable(snap_s):
         fast_forward_branch(spark, root, into, head_s)
         return {"mode": "fast-forward", "version": head_s, "base": head_t}
 
-    base = merge_base(spark, root, head_s, head_t, _cache=mcache, _reach_b=reach_t)
+    base = merge_base(spark, root, snap_s, head_t, _reach_b=reach_t)
     # BOTH sides diff against the same merge base: compute + persist
     # the base's narrow (keys, payload-hash) projection ONCE and hand
     # it to both extracts — the base MOR state is scanned once, not
@@ -798,7 +783,8 @@ def merge_branch_keyed(
         read_version_mor,
     )
 
-    base_state = read_version_mor(spark, root, base)
+    base_snap = snap_t.at(base)
+    base_state = read_version_mor(spark, root, base_snap)
     base_nonkey = [c for c in base_state.columns if c not in keys]
     base_proj = base_state.select(
         *keys,
@@ -808,11 +794,11 @@ def merge_branch_keyed(
     pinned = [base_proj]
     try:
         s_old, s_new, j_s, s_stats = _keyed_diff(
-            spark, root, base, head_s, keys, _base_proj=base_proj
+            spark, root, base_snap, snap_s, keys, _base_proj=base_proj
         )
         pinned.append(j_s)
         t_old, t_new, j_t, t_stats = _keyed_diff(
-            spark, root, base, head_t, keys, _base_proj=base_proj
+            spark, root, base_snap, snap_t, keys, _base_proj=base_proj
         )
         pinned.append(j_t)
         # ONE action runs both sides' NULL guards, both changed-row

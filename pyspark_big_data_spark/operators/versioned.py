@@ -30,23 +30,24 @@ COUNT(*) with zero data pages), and optional per-file Bloom filters
 ``read_version_point``, a MERGE source's keys in operators/merge.py —
 to ~1 file each on hash-scattered keys where min/max can't help).
 ``expire_versions`` is the retention vacuum; ``snapshot_min_max``
-answers MIN/MAX from the same stats. Every file plan and metadata
-answer walks the chain's manifests through ``_chain_manifests``, which
-refuses a member whose manifest is missing or does not cover the
-column; the three file plans (stats range, Bloom probes, all-null
-files) are per-file keep rules over one loop, ``_file_plan``; and
-``read_chain_files`` is the one place any subset of a version's chain
-dirs or files (a file plan, a change feed's delta dirs, a branch
-merge's shipped deltas) becomes a DataFrame, bound to the memoized
-chain schema. ``manifest_shard_files`` shards the manifest into a
-manifest list (per-shard JSON files) so no single metadata file
-grows with the snapshot; multi-writer snapshot
-isolation lives in operators/transactions.py, merge-on-read deletes
+answers MIN/MAX from the same stats. An operation resolves its version
+ONCE, as a ``Snapshot`` from one ``v=`` listing, and passes it down:
+every function that takes ``version`` also takes one. Every file plan
+and metadata answer walks its manifests through ``_chain_manifests``,
+which refuses a member whose manifest is missing or does not cover the
+column; the three file plans are per-file keep rules over one loop,
+``_file_plan``; and ``read_chain_files`` is the one place any subset
+of a version's chain (all of it, a file plan, a change feed's delta
+dirs, a branch merge's shipped deltas) becomes a DataFrame, bound to
+the snapshot's chain schema. ``manifest_shard_files`` shards the
+manifest into a manifest list (per-shard JSON files) so no single
+metadata file grows with the snapshot; multi-writer snapshot isolation
+lives in operators/transactions.py, merge-on-read deletes
 (deletion-vector sidecars + broadcast anti-join reads) in
 operators/deletes.py, small-file compaction is ``compact_version``
 below, and file-level APPEND deltas are ``append_version`` (O(delta)
-commits whose reads resolve a base-version chain) — every named
-format seam now has a working in-repo shape. Unversioned plain-parquet datasets (upsert,
+commits whose reads resolve a base-version chain) — every named format
+seam now has a working in-repo shape. Unversioned plain-parquet datasets (upsert,
 erasure, CDC apply, the streaming maintainers, index compaction) are
 rewritten in place by ``replace_parquet``, the module's one
 replace-by-rename seam.
@@ -75,6 +76,7 @@ import os
 import re
 import time
 import uuid
+from functools import cached_property
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -243,7 +245,7 @@ def _build_file_ndv(
 
 
 def snapshot_ndv(
-    spark: SparkSession, root: str, col: str, version: int | None = None
+    spark: SparkSession, root: str, col: str, version: int | Snapshot | None = None
 ) -> int:
     """Approximate COUNT(DISTINCT col) answered from the manifests'
     per-file HLL sketches alone — zero data pages, chain-aware (the
@@ -478,16 +480,11 @@ def _write_json(fs, jvm, path: str, doc: dict) -> None:
         out.close()
 
 
-def manifest(
-    spark: SparkSession, root: str, version: int, _cache: dict | None = None
-) -> dict | None:
+def manifest(spark: SparkSession, root: str, version: int) -> dict | None:
     """The committed footer-stats manifest of ``v=version`` (None when
-    the snapshot was written without ``stats_cols``).
-
-    ``_cache`` (internal): a per-OPERATION memo dict — manifests of
-    committed versions are immutable, so callers that walk the version
-    DAG repeatedly (branch merges) pass one dict for the whole
-    decision and pay each manifest read once instead of O(chain^2).
+    the snapshot was written without ``stats_cols``). Memoized
+    process-wide once read; within one operation a ``Snapshot`` also
+    keeps the None answers, so a walk pays each read once.
 
     Transparently merges a SHARDED manifest (manifest_version 3: the
     root ``_manifest.json`` is a manifest LIST naming per-shard JSON
@@ -498,48 +495,132 @@ def manifest(
     min/max) is shard-agnostic. The merge is a driver-side JSON pass —
     O(files) like the flat read; at extreme file counts the shard
     reads parallelize the same way the footer pass does."""
-    if _cache is not None and version in _cache:
-        return _cache[version]
     hit = _meta_cache_get("manifest", root, version)
     if hit is not None:
-        if _cache is not None:
-            _cache[version] = hit
         return hit
-
-    def _done(res):
-        if _cache is not None:
-            _cache[version] = res
-        # committed manifests are immutable: memo process-wide too.
-        # None is NOT memoized — it costs one fs.exists to re-derive,
-        # and a probe racing a concurrent commit must never pin it.
-        if res is not None:
-            _meta_cache_put("manifest", root, version, res)
-        return res
-
     vdir = f"{root.rstrip('/')}/v={version}"
     mpath = f"{vdir}/{MANIFEST_NAME}"
     fs, hp, jvm = _fs(spark, mpath)
     if not fs.exists(hp):
-        return _done(None)
+        # not memoized: it costs one fs.exists to re-derive, and a
+        # probe racing a concurrent commit must never pin it
+        return None
     doc = _read_json(fs, jvm, mpath)
-    if not doc.get("sharded"):
-        return _done(doc)
-    merged = {k: v for k, v in doc.items() if k not in ("sharded", "shards")}
-    merged["files"] = {}
-    merged["file_nulls"] = {}
-    merged["file_rows"] = {}
-    blooms: dict[str, dict] = {c: {} for c in doc.get("bloom_cols", [])}
-    for shard_name in doc["shards"]:
-        shard = _read_json(fs, jvm, f"{vdir}/{shard_name}")
-        merged["files"].update(shard.get("files", {}))
-        merged["file_nulls"].update(shard.get("file_nulls", {}))
-        merged["file_rows"].update(shard.get("file_rows", {}))
-        for c, per_file in shard.get("blooms", {}).items():
-            blooms.setdefault(c, {}).update(per_file)
-    if blooms:
-        merged["blooms"] = blooms
-    merged["n_shards"] = len(doc["shards"])
-    return _done(merged)
+    if doc.get("sharded"):
+        shards = doc["shards"]
+        doc = {k: v for k, v in doc.items() if k not in ("sharded", "shards")}
+        doc.update(files={}, file_nulls={}, file_rows={}, n_shards=len(shards))
+        blooms: dict[str, dict] = {c: {} for c in doc.get("bloom_cols", [])}
+        for shard_name in shards:
+            shard = _read_json(fs, jvm, f"{vdir}/{shard_name}")
+            for key in ("files", "file_nulls", "file_rows"):
+                doc[key].update(shard.get(key, {}))
+            for c, per_file in shard.get("blooms", {}).items():
+                blooms.setdefault(c, {}).update(per_file)
+        if blooms:
+            doc["blooms"] = blooms
+    # committed manifests are immutable: memo process-wide
+    _meta_cache_put("manifest", root, version, doc)
+    return doc
+
+
+class Snapshot:
+    """One committed version of the table at ``root``, resolved once
+    per operation (Delta's per-operation snapshot): the ``version``,
+    the ``committed`` set of the one ``v=`` listing it came from, its
+    ``chain`` (newest first), each chain member's manifest
+    (``manifests``, None included) and the chain ``schema``, each
+    resolved on first use, so a metadata answer never infers a schema.
+    ``at(v)`` resolves another version from the same listing and
+    shares the manifest reads. External deletion vectors are not part
+    of it: they can be added after commit, so they stay live listings
+    (operators/deletes.py)."""
+
+    def __init__(self, spark, root, version, committed, _manifests=None):
+        if version not in committed:
+            raise ValueError(f"version {version} does not exist under {root}")
+        self.spark, self.root, self.version = spark, root.rstrip("/"), version
+        self.committed = frozenset(committed)
+        self._manifests = {} if _manifests is None else _manifests
+        self._refreshed = False
+
+    def _manifest(self, v: int) -> dict | None:
+        if v not in self._manifests:
+            self._manifests[v] = manifest(self.spark, self.root, v)
+        return self._manifests[v]
+
+    @property
+    def manifest(self) -> dict | None:
+        """This version's own manifest; reading it walks no chain."""
+        return self._manifest(self.version)
+
+    @cached_property
+    def chain(self) -> tuple[int, ...]:
+        """``(version, base, base-of-base, ...)`` down to the
+        full-snapshot ancestor. Raises on a broken link (base expired
+        or cyclic): a chain read must fail loudly, never silently drop
+        the missing ancestor's rows."""
+        chain = [self.version]
+        while True:
+            m = self._manifest(chain[-1])
+            base = m.get("base_version") if m else None
+            if base is None:
+                return tuple(chain)
+            if base in chain or base not in self.committed:
+                raise ValueError(
+                    f"v={chain[-1]} under {self.root} appends onto v={base}, "
+                    "which is on its own chain or no longer exists — the "
+                    "chain is broken (cyclic, or an expired ancestor?)"
+                )
+            chain.append(base)
+
+    @cached_property
+    def manifests(self) -> dict[int, dict | None]:
+        return {v: self._manifest(v) for v in self.chain}
+
+    @cached_property
+    def schema(self):
+        """The chain's merged schema: memoized per committed version,
+        inferred by the chain's first ``read_version`` otherwise."""
+        memo = _meta_cache_get("chain_schema", self.root, self.version)
+        if memo is not None:
+            return memo
+        return read_version(self.spark, self.root, self).schema
+
+    def dir(self, v: int) -> str:
+        return f"{self.root}/v={v}"
+
+    def refresh(self) -> None:
+        """``refreshByPath`` every chain dir, once per snapshot."""
+        if not self._refreshed:
+            for v in self.chain:
+                self.spark.catalog.refreshByPath(self.dir(v))
+            self._refreshed = True
+
+    def at(self, version: int) -> Snapshot:
+        return Snapshot(self.spark, self.root, version, self.committed, self._manifests)
+
+
+def latest_snapshot(spark: SparkSession, root: str) -> Snapshot | None:
+    """The newest committed version as a Snapshot, from one listing;
+    None for an empty log."""
+    versions = list_versions(spark, root)
+    return Snapshot(spark, root, versions[-1], versions) if versions else None
+
+
+def snapshot(
+    spark: SparkSession, root: str, version: int | Snapshot | None = None
+) -> Snapshot:
+    """``v=version`` (default: latest) under ``root`` from one ``v=``
+    listing; a Snapshot of ``root`` is returned unchanged."""
+    if isinstance(version, Snapshot):
+        if version.root != root.rstrip("/"):
+            raise ValueError(f"a snapshot of {version.root} cannot resolve {root}")
+        return version
+    head = latest_snapshot(spark, root)
+    if head is None:
+        raise ValueError(f"versioned dataset at {root} has no versions")
+    return head if version is None else head.at(version)
 
 
 class AuditFailed(RuntimeError):
@@ -934,7 +1015,8 @@ def _validate_append_base(
       every read of such a chain is documented as MOR-only."""
     from pyspark_big_data_spark.operators.deletes import external_vectors
 
-    base_cols = set(read_version(spark, root, base_version).columns)
+    base = snapshot(spark, root, base_version)
+    base_cols = set(base.schema.fieldNames())
     if allow_evolution:
         missing = base_cols - set(delta_cols)
         if missing:
@@ -951,7 +1033,7 @@ def _validate_append_base(
         return
     # re-censused on every validation (per commit retry): external
     # vectors are mutable post-commit
-    external = external_vectors(spark, root, version_chain(spark, root, base_version))
+    external = external_vectors(spark, root, base.chain)
     if external:
         raise ValueError(
             f"v={next(iter(external))} in the base chain of this append "
@@ -1029,12 +1111,6 @@ def append_version(
     ``embedded_pos_deletes`` stages a positional vector inside the new
     version dir itself (single-rename MERGE commits,
     operators/merge.py)."""
-    base = latest_version(df.sparkSession, root)
-    if base is None:
-        raise ValueError(
-            f"append needs a base version under {root}; commit the "
-            "initial snapshot with write_version first"
-        )
     return write_version(
         df,
         root,
@@ -1053,44 +1129,15 @@ def append_version(
 
 
 def version_chain(
-    spark: SparkSession,
-    root: str,
-    version: int | None = None,
-    _cache: dict | None = None,
+    spark: SparkSession, root: str, version: int | Snapshot | None = None
 ) -> list[int]:
     """The snapshot chain of ``v=version``, newest first: ``[version,
-    base, base-of-base, ...]`` down to the full-snapshot ancestor. A
-    non-append version is its own length-1 chain. Raises on a broken
-    link (base expired or cyclic) — a chain read must fail loudly,
-    never silently drop the missing ancestor's rows."""
-    version = _resolve_version(spark, root, version)
-    committed = set(list_versions(spark, root))
-    if version not in committed:
-        raise ValueError(f"version {version} does not exist under {root}")
-    chain = [version]
-    seen = {version}
-    cur = version
-    while True:
-        m = manifest(spark, root, cur, _cache=_cache)
-        base = m.get("base_version") if m else None
-        if base is None:
-            return chain
-        if base in seen:
-            raise ValueError(
-                f"cyclic version chain at v={cur} under {root} (base {base})"
-            )
-        if base not in committed:
-            raise ValueError(
-                f"v={cur} under {root} appends onto v={base}, which no "
-                "longer exists — the chain is broken (expired ancestor?)"
-            )
-        chain.append(base)
-        seen.add(base)
-        cur = base
+    base, base-of-base, ...]`` (``Snapshot.chain``)."""
+    return list(snapshot(spark, root, version).chain)
 
 
 def chain_writer_markers(
-    spark: SparkSession, root: str, version: int | None = None
+    spark: SparkSession, root: str, version: int | Snapshot | None = None
 ) -> set[int]:
     """Every ``writer_batch_id`` visible on the chain of ``version``
     (default: latest): singular markers stamped per commit plus the
@@ -1099,8 +1146,7 @@ def chain_writer_markers(
     state of the exactly-once streaming sinks (streaming/sinks.py) —
     driver-side manifest JSON, O(chain), no jobs."""
     seen: set[int] = set()
-    for v in version_chain(spark, root, version):
-        m = manifest(spark, root, v)
+    for m in snapshot(spark, root, version).manifests.values():
         if m is None:
             continue
         if "writer_batch_id" in m:
@@ -1110,34 +1156,25 @@ def chain_writer_markers(
 
 
 def read_version(
-    spark: SparkSession, root: str, version: int | None = None
+    spark: SparkSession, root: str, version: int | Snapshot | None = None
 ) -> DataFrame:
     """Time-travel read: the snapshot at ``version`` (default: latest
     committed). Raises if the version does not exist — a missing
     version must fail loudly, never read as empty. An APPEND version
     (``append_version``) reads as its whole chain: the base snapshot's
     files plus every delta's, one multi-directory parquet scan."""
-    if version is None:
-        version = latest_version(spark, root)
-        if version is None:
-            raise ValueError(f"versioned dataset at {root} has no versions")
-    elif version not in list_versions(spark, root):
-        raise ValueError(f"version {version} does not exist under {root}")
-    dirs = [
-        f"{root.rstrip('/')}/v={v}" for v in version_chain(spark, root, version)
-    ]
-    for d in dirs:
-        spark.catalog.refreshByPath(d)
+    snap = snapshot(spark, root, version)
+    dirs = [snap.dir(v) for v in snap.chain]
     # a committed chain's merged schema is immutable: re-reads bind the
     # memoized schema explicitly, skipping the per-read schema
     # inference (a distributed footer-merge job on multi-member
     # chains). The parquet reader null-fills columns a pre-evolution
     # file lacks when given an explicit schema — the same semantics
     # the mergeSchema inference produces.
-    cached = _meta_cache_get("chain_schema", root, version)
-    if cached is not None:
-        return spark.read.schema(cached).parquet(*dirs)
+    if _meta_cache_get("chain_schema", snap.root, snap.version) is not None:
+        return read_chain_files(spark, root, snap, dirs)
     # a chain's first read: nothing memoized yet, so infer
+    snap.refresh()
     if len(dirs) == 1:
         df = spark.read.parquet(dirs[0])
     else:
@@ -1146,7 +1183,7 @@ def read_version(
         # absent from pre-evolution files — the default reader would
         # bind one file's schema and silently drop late columns
         df = spark.read.option("mergeSchema", "true").parquet(*dirs)
-    _meta_cache_put("chain_schema", root, version, df.schema)
+    _meta_cache_put("chain_schema", snap.root, snap.version, df.schema)
     return df
 
 
@@ -1161,7 +1198,7 @@ _COVERAGE_NAMES = {
 def _chain_manifests(
     spark: SparkSession,
     root: str,
-    version: int | None,
+    version: int | Snapshot | None,
     need: str,
     col: str | None = None,
 ) -> list[tuple[int, str, dict]]:
@@ -1179,9 +1216,9 @@ def _chain_manifests(
     per_file = need in ("file_rows", "file_nulls")
     option = "stats_cols" if per_file else need
     fix = f"commit it with write_version(df, root, {option}=[...])"
+    snap = snapshot(spark, root, version)
     out = []
-    for v in version_chain(spark, root, version):
-        m = manifest(spark, root, v)
+    for v, m in snap.manifests.items():
         if per_file and (m is None or need not in m):
             what = "row counts" if need == "file_rows" else "null counts"
             raise ValueError(f"v={v} under {root} has no manifest {what}: {fix}")
@@ -1192,14 +1229,14 @@ def _chain_manifests(
                 f"manifest of v={v} has no {_COVERAGE_NAMES[option]} for "
                 f"{col!r}: {fix}"
             )
-        out.append((v, f"{root.rstrip('/')}/v={v}", m))
+        out.append((v, snap.dir(v), m))
     return out
 
 
 def _file_plan(
     spark: SparkSession,
     root: str,
-    version: int | None,
+    version: int | Snapshot | None,
     need: str,
     col: str,
     keep,
@@ -1222,20 +1259,21 @@ def _file_plan(
 
 
 def read_chain_files(
-    spark: SparkSession, root: str, version: int, paths: list[str]
+    spark: SparkSession, root: str, version: int | Snapshot, paths: list[str]
 ) -> DataFrame:
     """Any subset of ``v=version``'s chain dirs or files as a
-    DataFrame: a file plan, a change feed's delta dirs, the ancestor
-    files a vector addresses, a branch merge's shipped deltas. The
-    subset binds ``read_version``'s memoized chain schema: which paths
-    are read must not decide the result schema (a pre-evolution
-    member still carries the evolved columns, null-filled, in chain
-    order), and a warm read infers no schema at all. An empty subset
-    is an empty frame with that schema."""
-    full = read_version(spark, root, version)
-    if not paths:
-        return full.filter(F.lit(False))
-    return spark.read.schema(full.schema).parquet(*paths)
+    DataFrame: the whole chain (``read_version``), a file plan, a
+    change feed's delta dirs, the ancestor files a vector addresses, a
+    branch merge's shipped deltas. The subset binds the snapshot's
+    chain schema: which paths are read must not decide the result
+    schema (a pre-evolution member still carries the evolved columns,
+    null-filled, in chain order), and a warm read infers no schema at
+    all. An empty subset is an empty frame with that schema."""
+    snap = snapshot(spark, root, version)
+    schema = snap.schema
+    snap.refresh()
+    df = spark.read.schema(schema).parquet(*(paths or [snap.dir(snap.version)]))
+    return df if paths else df.filter(F.lit(False))
 
 
 def pruned_file_plan(
@@ -1244,7 +1282,7 @@ def pruned_file_plan(
     col: str,
     lower=None,
     upper=None,
-    version: int | None = None,
+    version: int | Snapshot | None = None,
 ) -> tuple[list[str], int, int]:
     """File-level pruning plan for a range predicate on ``col``:
     ``(selected_file_paths, n_selected, n_total)``. A file is selected
@@ -1269,7 +1307,7 @@ def read_version_pruned(
     col: str,
     lower=None,
     upper=None,
-    version: int | None = None,
+    version: int | Snapshot | None = None,
 ) -> DataFrame:
     """Time-travel read that touches ONLY the files whose footer-stats
     range overlaps ``lower <= col <= upper`` (then applies the
@@ -1279,9 +1317,9 @@ def read_version_pruned(
     (``test_partitioned_write_prunes``): the skipped files never reach
     Spark's file index, so a 100 TB snapshot with a range-clustered
     layout answers a narrow range predicate from a handful of files."""
-    version = _resolve_version(spark, root, version)
-    selected, _, _ = pruned_file_plan(spark, root, col, lower, upper, version)
-    df = read_chain_files(spark, root, version, selected)
+    snap = snapshot(spark, root, version)
+    selected, _, _ = pruned_file_plan(spark, root, col, lower, upper, snap)
+    df = read_chain_files(spark, root, snap, selected)
     if lower is not None:
         df = df.filter(F.col(col) >= F.lit(lower))
     if upper is not None:
@@ -1289,20 +1327,12 @@ def read_version_pruned(
     return df
 
 
-def _resolve_version(spark: SparkSession, root: str, version: int | None) -> int:
-    if version is None:
-        version = latest_version(spark, root)
-        if version is None:
-            raise ValueError(f"versioned dataset at {root} has no versions")
-    return version
-
-
 def bloom_file_plan(
     spark: SparkSession,
     root: str,
     col: str,
     values,
-    version: int | None = None,
+    version: int | Snapshot | None = None,
 ) -> tuple[list[str], int, int]:
     """Bloom pruning plan: the files whose filter for ``col`` MIGHT
     contain ANY of ``values`` (plus any file missing a filter, which
@@ -1337,15 +1367,15 @@ def read_version_point(
     root: str,
     col: str,
     value,
-    version: int | None = None,
+    version: int | Snapshot | None = None,
 ) -> DataFrame:
     """Time-travel point lookup through the per-file Bloom index:
     reads only the files whose filter might contain ``value``, then
     applies the exact equality predicate (superset pre-cut — results
     are bit-identical to ``read_version(...).filter(col == value)``)."""
-    version = _resolve_version(spark, root, version)
-    selected, _, _ = bloom_file_plan(spark, root, col, [value], version)
-    return read_chain_files(spark, root, version, selected).filter(
+    snap = snapshot(spark, root, version)
+    selected, _, _ = bloom_file_plan(spark, root, col, [value], snap)
+    return read_chain_files(spark, root, snap, selected).filter(
         F.col(col) == F.lit(value)
     )
 
@@ -1396,7 +1426,10 @@ def expire_versions(
         raise ValueError("keep_last must be >= 1")
     fs, _, jvm = _fs(spark, root)
     Path = jvm.org.apache.hadoop.fs.Path
-    versions = list_versions(spark, root)
+    head = latest_snapshot(spark, root)
+    if head is None:
+        return []
+    versions = sorted(head.committed)
     # tags AND branch heads protect their targets (and, via the chain
     # expansion below, their whole ancestries)
     protected = set(list_tags(spark, root).values()) | set(
@@ -1406,7 +1439,7 @@ def expire_versions(
         protected |= {int(v) for v in extra_protected}
     survivors = set(versions[-keep_last:]) | protected
     for s in survivors:
-        protected.update(version_chain(spark, root, s))
+        protected.update(head.at(s).chain)
     expired = [
         n
         for n in (versions[:-keep_last] if len(versions) > keep_last else [])
@@ -1427,7 +1460,7 @@ def expire_versions(
 
 
 def snapshot_row_count(
-    spark: SparkSession, root: str, version: int | None = None
+    spark: SparkSession, root: str, version: int | Snapshot | None = None
 ) -> int:
     """COUNT(*) of a snapshot answered from the manifest's per-file
     footer row counts — zero data pages, zero Spark jobs (the
@@ -1446,7 +1479,7 @@ def snapshot_min_max(
     spark: SparkSession,
     root: str,
     cols: list[str],
-    version: int | None = None,
+    version: int | Snapshot | None = None,
 ) -> dict[str, tuple]:
     """Global MIN/MAX per column answered from the manifest's per-file
     footer stats — zero data pages (the other metadata-only query shape
@@ -1455,12 +1488,12 @@ def snapshot_min_max(
     metadata answer that silently ignored a file would be wrong, not
     slow. Raises likewise for an uncovered column or an empty
     snapshot. An append chain merges every member's stats."""
-    version = _resolve_version(spark, root, version)
+    snap = snapshot(spark, root, version)
     out: dict[str, tuple] = {}
     for col in cols:
-        members = _chain_manifests(spark, root, version, "stats_cols", col)
+        members = _chain_manifests(spark, root, snap, "stats_cols", col)
         if not any(m["files"] for _, _, m in members):
-            raise ValueError(f"v={version} under {root} has no files")
+            raise ValueError(f"v={snap.version} under {root} has no files")
         lo = hi = None
         for v, _, m in members:
             for fname, stats in m["files"].items():
@@ -1482,7 +1515,7 @@ def compact_version(
     root: str,
     target_files: int,
     cluster_by: str | None = None,
-    version: int | None = None,
+    version: int | Snapshot | None = None,
     manifest_shard_files: int | None = None,
     manifest_extra: dict | None = None,
 ) -> dict:
@@ -1533,28 +1566,25 @@ def compact_version(
 
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
-    version = _resolve_version(spark, root, version)
-    if version not in list_versions(spark, root):
-        raise ValueError(f"version {version} does not exist under {root}")
+    snap = snapshot(spark, root, version)
     # chain-wide: an ancestor's vectors (external OR MERGE-embedded)
     # would be resurrected by compacting the physical chain read
-    if has_any_delete_vectors(spark, root, version):
+    if has_any_delete_vectors(spark, root, snap):
         raise ValueError(
-            f"v={version} under {root} has deletion vectors on its chain; "
+            f"v={snap.version} under {root} has deletion vectors on its chain; "
             "compacting the data files alone would resurrect deleted rows "
             "— run materialize_deletes first"
         )
     fs, _, jvm = _fs(spark, root)
     # logical census: an append chain's file count spans every member
     files_before = sum(
-        len(_list_parquet_files(fs, jvm, f"{root.rstrip('/')}/v={v}"))
-        for v in version_chain(spark, root, version)
+        len(_list_parquet_files(fs, jvm, snap.dir(v))) for v in snap.chain
     )
-    m = manifest(spark, root, version)
+    m = snap.manifest
     stats_cols = list(m["stats_cols"]) if m else None
     bloom_cols = list(m["bloom_cols"]) if m and m.get("bloom_cols") else None
 
-    df = read_version(spark, root, version)
+    df = read_version(spark, root, snap)
     if cluster_by is not None:
         packed = df.repartitionByRange(target_files, cluster_by).sortWithinPartitions(
             cluster_by
@@ -1569,9 +1599,7 @@ def compact_version(
         manifest_shard_files=manifest_shard_files,
         manifest_extra=manifest_extra,
     )
-    files_after = len(
-        _list_parquet_files(fs, jvm, f"{root.rstrip('/')}/v={new_v}")
-    )
+    files_after = len(_list_parquet_files(fs, jvm, snap.dir(new_v)))
     return {
         "version": new_v,
         "files_before": files_before,
@@ -1587,13 +1615,14 @@ def version_commit_times(spark: SparkSession, root: str) -> dict[int, float]:
     only; zero data pages."""
     fs, _, jvm = _fs(spark, root)
     Path = jvm.org.apache.hadoop.fs.Path
+    head = latest_snapshot(spark, root)
     out: dict[int, float] = {}
-    for v in list_versions(spark, root):
-        m = manifest(spark, root, v)
+    for v in sorted(head.committed) if head else []:
+        m = head.at(v).manifest
         if m is not None and m.get("committed_at") is not None:
             out[v] = float(m["committed_at"])
         else:
-            st = fs.getFileStatus(Path(f"{root.rstrip('/')}/v={v}"))
+            st = fs.getFileStatus(Path(head.dir(v)))
             out[v] = st.getModificationTime() / 1000.0
     return out
 
@@ -1677,17 +1706,18 @@ def snapshot_history(spark: SparkSession, root: str) -> list[dict]:
     format exposes; tags from operators/refs.py give versions names,
     this gives them shapes."""
     fs, _, jvm = _fs(spark, root)
+    head = latest_snapshot(spark, root)
     out = []
-    for v in list_versions(spark, root):
-        vdir = f"{root.rstrip('/')}/v={v}"
-        n_files = len(_list_parquet_files(fs, jvm, vdir))
-        m = manifest(spark, root, v)
+    for v in sorted(head.committed) if head else []:
+        snap = head.at(v)
+        n_files = len(_list_parquet_files(fs, jvm, snap.dir(v)))
+        m = snap.manifest
         base = m.get("base_version") if m is not None else None
         # n_rows is the version's LOGICAL census: an append version
         # sums its whole chain (still metadata-only); None whenever any
         # chain member lacks manifest row counts — never a guess.
         try:
-            n_rows = snapshot_row_count(spark, root, v)
+            n_rows = snapshot_row_count(spark, root, snap)
         except ValueError:
             n_rows = None
         out.append(
@@ -1729,46 +1759,52 @@ def table_changes(
         external_vectors,
     )
 
-    members = range_members(spark, root, from_version, to_version)
+    snap = snapshot(spark, root, to_version)
+    members = range_members(spark, root, from_version, snap)
     external = external_vectors(spark, root, members)
     for v in members:
-        if v in external or _embedded_deletes_dir(spark, root, v) is not None:
+        if v in external or _embedded_deletes_dir(snap, v) is not None:
             raise ValueError(
                 f"v={v} under {root} carries deletion vectors — the range "
-                f"(v={from_version}, v={to_version}] is not append-only and "
+                f"(v={from_version}, v={snap.version}] is not append-only and "
                 "an adds-only feed would misstate the change; use a keyed "
                 "snapshot diff instead"
             )
-    return read_chain_files(
-        spark, root, to_version, [f"{root.rstrip('/')}/v={v}" for v in members]
-    )
+    return read_chain_files(spark, root, snap, [snap.dir(v) for v in members])
 
 
 def range_members(
-    spark: SparkSession, root: str, from_version: int, to_version: int
+    spark: SparkSession,
+    root: str,
+    from_version: int,
+    to_version: int | Snapshot,
 ) -> list[int]:
     """The chain members in ``(from_version, to_version]``, ascending:
     the versions whose delta dirs carry the change between the two —
     the one range walk behind both change feeds (``table_changes``
-    and operators/cdf.py). Raises when an endpoint does not exist,
-    when ``from_version`` is newer than ``to_version``, when a member
-    is a full rewrite (its files do not represent the change), and
-    when ``to_version``'s chain does not pass through
+    and operators/cdf.py), down ``to_version``'s chain. Raises when an
+    endpoint does not exist, when ``from_version`` is newer than
+    ``to_version``, when a member is a full rewrite (its files do not
+    represent the change), and when the chain does not pass through
     ``from_version``. Deletion vectors are each caller's rule."""
-    committed = set(list_versions(spark, root))
-    for v in (from_version, to_version):
-        if v not in committed:
-            raise ValueError(f"version {v} does not exist under {root}")
+    snap = snapshot(spark, root, to_version)
+    to_version = snap.version
+    if from_version not in snap.committed:
+        raise ValueError(f"version {from_version} does not exist under {root}")
     if from_version > to_version:
         raise ValueError(
             f"from_version {from_version} is newer than to_version {to_version}"
         )
     members = []
-    v = to_version
-    while v != from_version:
-        m = manifest(spark, root, v)
-        base = m.get("base_version") if m else None
-        if base is None:
+    for v in snap.chain:
+        if v == from_version:
+            return members[::-1]
+        if v < from_version:
+            raise ValueError(
+                f"v={to_version} under {root} does not chain through "
+                f"v={from_version} (chain skips to v={v})"
+            )
+        if v == snap.chain[-1]:
             raise ValueError(
                 f"v={v} under {root} is a full rewrite, not an append — "
                 f"its files do not represent the change between "
@@ -1776,19 +1812,12 @@ def range_members(
                 "snapshot diff instead"
             )
         members.append(v)
-        v = int(base)
-        if v < from_version:
-            raise ValueError(
-                f"v={to_version} under {root} does not chain through "
-                f"v={from_version} (chain skips to v={v})"
-            )
-    return members[::-1]
 
 
 def restore_version(
     spark: SparkSession,
     root: str,
-    version: int,
+    version: int | Snapshot,
     allow_base_tombstones: bool = False,
 ) -> int:
     """METADATA-ONLY rollback (the table formats' RESTORE): make the
@@ -1811,15 +1840,14 @@ def restore_version(
     Contract: the target must be a committed version; restoring to the
     current latest is refused as a no-op (it would burn a version
     number to say nothing)."""
-    committed = list_versions(spark, root)
-    if version not in committed:
-        raise ValueError(f"version {version} does not exist under {root}")
-    if version == committed[-1]:
+    snap = snapshot(spark, root, version)
+    version = snap.version
+    if version == max(snap.committed):
         raise ValueError(
             f"v={version} is already the latest under {root}; restore "
             "would be a no-op"
         )
-    empty = read_version(spark, root, version).limit(0).coalesce(1)
+    empty = read_version(spark, root, snap).limit(0).coalesce(1)
     return write_version(
         empty,
         root,
@@ -1834,7 +1862,7 @@ def snapshot_null_counts(
     spark: SparkSession,
     root: str,
     cols: list[str],
-    version: int | None = None,
+    version: int | Snapshot | None = None,
 ) -> dict[str, int]:
     """Per-column NULL totals answered from the manifest's footer null
     counts — zero data pages, zero jobs (the third metadata-only query
@@ -1842,10 +1870,10 @@ def snapshot_null_counts(
     per data file). Sound only when EVERY file carries a null count
     for the column — a file with absent footer null stats raises, the
     same never-guess contract as snapshot_min_max. Chain-aware."""
-    version = _resolve_version(spark, root, version)
+    snap = snapshot(spark, root, version)
     out: dict[str, int] = {c: 0 for c in cols}
     for col in cols:
-        for v, _, m in _chain_manifests(spark, root, version, "file_nulls", col):
+        for v, _, m in _chain_manifests(spark, root, snap, "file_nulls", col):
             for fname, per in m["file_nulls"].items():
                 n = (per or {}).get(col)
                 if n is None:
@@ -1858,7 +1886,7 @@ def snapshot_null_counts(
 
 
 def not_null_file_plan(
-    spark: SparkSession, root: str, col: str, version: int | None = None
+    spark: SparkSession, root: str, col: str, version: int | Snapshot | None = None
 ) -> tuple[list[str], int, int]:
     """IS NOT NULL pruning plan: drop every file whose footer null
     count PROVES all its rows are null in ``col`` (null_count ==
@@ -1876,13 +1904,13 @@ def not_null_file_plan(
 
 
 def read_version_not_null(
-    spark: SparkSession, root: str, col: str, version: int | None = None
+    spark: SparkSession, root: str, col: str, version: int | Snapshot | None = None
 ) -> DataFrame:
     """Read that touches ONLY files which might hold a non-null ``col``
     (then applies IS NOT NULL — superset pre-cut, bit-identical to the
     full read + filter)."""
-    version = _resolve_version(spark, root, version)
-    selected, _, _ = not_null_file_plan(spark, root, col, version)
-    return read_chain_files(spark, root, version, selected).filter(
+    snap = snapshot(spark, root, version)
+    selected, _, _ = not_null_file_plan(spark, root, col, snap)
+    return read_chain_files(spark, root, snap, selected).filter(
         F.col(col).isNotNull()
     )

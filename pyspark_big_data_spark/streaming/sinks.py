@@ -92,14 +92,14 @@ def exactly_once_append_chain_sink(
         append_version,
         chain_writer_markers,
         compact_version,
-        latest_version,
-        version_chain,
+        latest_snapshot,
+        snapshot,
         write_version,
     )
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        latest = latest_version(spark, root)
+        latest = latest_snapshot(spark, root)
         if latest is not None:
             if int(batch_id) in chain_writer_markers(spark, root, latest):
                 return  # redelivery: this batch already committed
@@ -117,9 +117,8 @@ def exactly_once_append_chain_sink(
                 manifest_extra={"writer_batch_id": int(batch_id)},
             )
         if compact_every is not None:
-            tip = latest_version(spark, root)
-            chain = version_chain(spark, root, tip)
-            if len(chain) >= compact_every:
+            tip = snapshot(spark, root)
+            if len(tip.chain) >= compact_every:
                 compact_version(
                     spark,
                     root,
@@ -176,7 +175,7 @@ def exactly_once_merge_sink(
     from pyspark_big_data_spark.operators.merge import merge_into
     from pyspark_big_data_spark.operators.versioned import (
         chain_writer_markers,
-        latest_version,
+        latest_snapshot,
         write_version,
     )
 
@@ -209,7 +208,7 @@ def exactly_once_merge_sink(
                 .filter(F.col("__rn") == 1)
                 .drop("__rn", seq_col)
             )
-        latest = latest_version(spark, root)
+        latest = latest_snapshot(spark, root)
         if latest is None:
             base = src
             if delete_col is not None:

@@ -20,6 +20,7 @@ from pyspark_big_data_spark.operators.deletes import (
     read_version_mor,
 )
 from pyspark_big_data_spark.operators.versioned import (
+    Snapshot,
     compact_version,
     expire_versions,
     list_versions,
@@ -677,9 +678,10 @@ def test_external_vector_census_lists_only_existing_trees(spark, tmp_path, monke
     # v=3, the first member with a committed vector: v=1 is never listed
     listed.clear()
     os.makedirs(f"{root}/_deletes/v=1/d=0")
-    monkeypatch.setattr(deletes, "version_chain", lambda *a: [5, 4, 3, 2, 1, 0])
+    snap = Snapshot(spark, root, 5, range(6))
+    snap.chain = (5, 4, 3, 2, 1, 0)
     monkeypatch.setattr(deletes, "_embedded_deletes_dir", lambda *a: None)
-    assert deletes.has_any_delete_vectors(spark, root, 5)
+    assert deletes.has_any_delete_vectors(spark, root, snap)
     assert listed[2:] == [f"{root}/_pos_deletes/v=5", f"{root}/_deletes/v=3"]
 
 

@@ -421,6 +421,76 @@ def test_merge_schema_reads_only_at_known_sites():
     ]
 
 
+def test_one_listing_per_operation(spark, tmp_path, monkeypatch):
+    """Each table operation resolves its version from ONE ``v=`` listing
+    (``versioned.snapshot``) and passes the snapshot down: warm builds
+    of the reads, the change feeds and the metadata answers list the
+    table root once. A MERGE, UPDATE or DELETE lists it at most three
+    times: its snapshot, ``commit_next``'s slot, and the base check
+    its commit re-runs on every attempt."""
+    from pyspark_big_data_spark.operators import versioned
+    from pyspark_big_data_spark.operators.cdf import table_changes_typed
+    from pyspark_big_data_spark.operators.deletes import read_version_mor
+    from pyspark_big_data_spark.operators.merge import (
+        delete_where,
+        merge_into,
+        update_where,
+    )
+    from pyspark_big_data_spark.operators.versioned import (
+        read_chain_files,
+        snapshot_history,
+        table_changes,
+    )
+
+    root = str(tmp_path / "merged")
+    write_version(_df(spark, [(i, float(i)) for i in range(50)]), root, stats_cols=["k"])
+    for i in range(3):
+        merge_into(spark, root, _df(spark, [(i, -1.0), (100 + i, 1.0)]), "k")
+    appends = str(tmp_path / "appended")
+    write_version(_df(spark, [(0, 0.0)]), appends)
+    for i in range(1, 4):
+        append_version(_df(spark, [(i, float(i))]), appends)
+
+    listed = []
+    real = versioned.list_numbered_dirs
+
+    def counting(spark_, root_, prefix):
+        if prefix == "v=" and root_ in (root, appends):
+            listed.append(root_)
+        return real(spark_, root_, prefix)
+
+    monkeypatch.setattr(versioned, "list_numbered_dirs", counting)
+
+    def listings(op):
+        listed.clear()
+        op()
+        return len(listed)
+
+    builds = {
+        "read_version": lambda: read_version(spark, root),
+        "read_chain_files": lambda: read_chain_files(spark, root, 3, [f"{root}/v=3"]),
+        "read_version_mor": lambda: read_version_mor(spark, root),
+        "table_changes_typed": lambda: table_changes_typed(spark, root, 0, 3, "k"),
+        "snapshot_row_count": lambda: snapshot_row_count(spark, root),
+        "snapshot_history": lambda: snapshot_history(spark, root),
+        "table_changes": lambda: table_changes(spark, appends, 0, 3),
+    }
+    for build in builds.values():
+        build()  # warm: memoizes manifests and chain schemas
+    assert {n: listings(b) for n, b in builds.items()} == dict.fromkeys(builds, 1)
+
+    commits = {
+        "merge_into": lambda: merge_into(
+            spark, root, _df(spark, [(5, 5.5), (200, 2.0)]), "k"
+        ),
+        "update_where": lambda: update_where(spark, root, {"x": "x + 1"}, "k < 10"),
+        "delete_where": lambda: delete_where(spark, root, "k = 7"),
+    }
+    counts = {n: listings(c) for n, c in commits.items()}
+    assert all(n <= 3 for n in counts.values()), counts
+    assert snapshot_history(spark, root)[-1]["version"] == 6
+
+
 def test_lost_race_retries_instead_of_nesting(spark, tmp_path, monkeypatch):
     """Local-FS race seam: Hadoop's LocalFileSystem rename onto an
     existing ``v=N`` returns TRUE and moves the staging dir INSIDE it —
