@@ -5,7 +5,8 @@ Covers the reference's IO surface (SURVEY.md §2.1) Spark-first:
   the reference's ``inferSchema=True`` costs a full extra pass,
   ``src/query1.py:14-23`` / results/query1.txt csv-vs-parquet gap).
 - S2 Parquet scan -> read_table / spark.read.parquet (column pruning +
-  predicate pushdown for free).
+  predicate pushdown for free); read_table infers each table's schema
+  once per file identity (_on_disk_schema) and binds it afterwards.
 - S3 Parquet sink -> write_parquet / csv_to_parquet
   (== ``src/csv_to_parquet.py:7-13``), with optional partitioning —
   at scale, partition-pruned layout is the difference between a scan of
@@ -20,6 +21,49 @@ from pyspark.sql import types as T
 
 from pyspark_big_data_spark import schemas
 from pyspark_big_data_spark.session import ensure_session_confs
+
+
+# Session confs that steer how a parquet footer becomes a Spark schema;
+# a memoized schema is only valid under the values it was inferred with.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _on_disk_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema Spark infers for the parquet file or directory at
+    ``path``, inferred at most once per file identity: the path, the
+    name, length and modification time of every file under it (one
+    recursive Hadoop-FS ``listStatus`` walk) and the session values of
+    ``_SCHEMA_CONFS``. A missing path raises the reader's own error.
+    Entries share the bounded FIFO memo of ``versioned._META_CACHE``.
+    """
+    from pyspark_big_data_spark.operators import versioned
+
+    fs, hpath, _ = versioned._fs(spark, path)
+    if not fs.exists(hpath):
+        return spark.read.parquet(path).schema
+    files, dirs = [], [hpath]
+    while dirs:
+        # listStatus, not listFiles: on the local filesystem listFiles'
+        # LocatedFileStatus loads each file's permissions through a
+        # forked shell, about 10 ms a call
+        for st in fs.listStatus(dirs.pop()):
+            if st.isDirectory():
+                dirs.append(st.getPath())
+            else:
+                files.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    identity = (tuple(sorted(files)), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    schema = versioned._meta_cache_get("on_disk_schema", path, identity)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        versioned._meta_cache_put("on_disk_schema", path, identity, schema)
+    return schema
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -38,9 +82,19 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       ensure_session_confs, so values match DuckDB's naive read).
     - The reverse (tz-annotated on disk, canonical NTZ) casts the same
       way.
+
+    The on-disk schema is inferred (one footer job) at most once and then
+    bound, so a warm call runs no job. The memo key is the path, the
+    name, length and modification time of each file under it, and the
+    session confs that steer parquet schema conversion (``_SCHEMA_CONFS``).
+    A rewritten file is a miss. The one limit: a same-length rewrite in
+    place, within the filesystem's timestamp granularity, can be a stale
+    hit. Spark's own file-status cache has the same limit, and no writer
+    in this package rewrites a file in place.
     """
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(_on_disk_schema(spark, path)).parquet(path)
     canonical = schemas.TABLES.get(name)
     if canonical is None:
         return df
@@ -212,12 +266,14 @@ def schema_drift_report(spark: SparkSession, sf_dir: str) -> list[dict]:
     incompatible type).
 
     Driver-side metadata only (parquet footers via the reader's schema
-    resolution — no data scan); safe to run at any corpus size.
+    resolution, memoized per file identity by ``_on_disk_schema`` — no
+    data scan, and no job on a warm call); safe to run at any corpus
+    size.
     """
     report: list[dict] = []
     for name, canonical in schemas.TABLES.items():
         try:
-            actual_schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+            actual_schema = _on_disk_schema(spark, f"{sf_dir}/{name}.parquet")
         except Exception as exc:  # table missing entirely
             report.append(
                 {"table": name, "column": "*", "canonical": "<table>",

@@ -156,15 +156,19 @@ MANIFEST_NAME = "_manifest.json"
 # makes); a multi-coordinator deployment must route maintenance
 # through the coordinator or call ``invalidate_metadata_cache``
 # out-of-band after foreign expiry.
+#
+# ``io._on_disk_schema`` shares this memo for plain parquet paths: its
+# ``version`` is the path's file identity (listing plus schema confs),
+# so a rewritten file is a new key rather than a stale entry.
 _META_CACHE: dict[tuple, object] = {}
 _META_CACHE_MAX = 8192
 
 
-def _meta_cache_get(kind: str, root: str, version: int):
+def _meta_cache_get(kind: str, root: str, version):
     return _META_CACHE.get((kind, root.rstrip("/"), version))
 
 
-def _meta_cache_put(kind: str, root: str, version: int, value) -> None:
+def _meta_cache_put(kind: str, root: str, version, value) -> None:
     if len(_META_CACHE) >= _META_CACHE_MAX:
         # FIFO eviction: drop the oldest ~quarter in one sweep
         for k in list(_META_CACHE)[: _META_CACHE_MAX // 4]:

@@ -162,3 +162,71 @@ def test_corrupt_shard_handling_both_modes(spark, sf_dir, tmp_path):
         assert 0 < n < 25  # survivors only: fewer than the full 25 nations
     finally:
         spark.conf.set("spark.sql.files.ignoreCorruptFiles", saved)
+
+
+def test_read_table_infers_schema_once_per_file_identity(spark, sf_dir, tmp_path, count_jobs):
+    """The first read_table of a table runs the one footer-inference job;
+    a second read of the same files binds the memoized schema and runs
+    none, with the same schema and rows."""
+    import shutil
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{sf_dir}/nation.parquet", sf / "nation.parquet")
+    frames = []
+    assert count_jobs(lambda: frames.append(read_table(spark, str(sf), "nation"))) == 1
+    assert count_jobs(lambda: frames.append(read_table(spark, str(sf), "nation"))) == 0
+    cold, warm = frames
+    assert warm.schema == cold.schema
+    assert sorted(warm.collect()) == sorted(cold.collect())
+
+
+def test_read_table_schema_memo_misses_on_rewrite(spark, tmp_path):
+    """Rewriting the table at the same path with another schema changes
+    its file identity, so the next read_table infers the new columns."""
+    sf = str(tmp_path)
+    spark.range(3).write.parquet(f"{sf}/widgets.parquet")
+    assert read_table(spark, sf, "widgets").columns == ["id"]
+    spark.range(3).withColumn("label", F.lit("x")).write.mode("overwrite").parquet(
+        f"{sf}/widgets.parquet"
+    )
+    again = read_table(spark, sf, "widgets")
+    assert again.columns == ["id", "label"]
+    assert sorted(r.label for r in again.collect()) == ["x", "x", "x"]
+
+
+@pytest.mark.parametrize(
+    "ts_type", ["nanos", "us_ntz", "us_utc"],
+)
+def test_read_table_schema_memo_keeps_timestamp_normalization(spark, tmp_path, ts_type):
+    """For each on-disk timestamp encoding read_table normalizes, a warm
+    (memoized) read and the cold read give the canonical schema and the
+    same rows, truncated to microseconds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark_big_data_spark import schemas
+
+    nanos = [1_700_000_000_123_456_789, 1_700_000_100_000_000_999]
+    ts = {
+        "nanos": pa.array(nanos, type=pa.timestamp("ns")),
+        "us_ntz": pa.array([n // 1000 for n in nanos], type=pa.timestamp("us")),
+        "us_utc": pa.array([n // 1000 for n in nanos], type=pa.timestamp("us", tz="UTC")),
+    }[ts_type]
+    tbl = pa.table({
+        "event_id": pa.array([1, 2], type=pa.int64()),
+        "ts": ts,
+        "user_id": pa.array([7, 8], type=pa.int64()),
+        "event_type": ["click", "view"],
+        "value": pa.array([1.5, 2.5], type=pa.float64()),
+        "props": ["{}", "{}"],
+    })
+    pq.write_table(tbl, str(tmp_path / "events.parquet"))
+    cold = read_table(spark, str(tmp_path), "events")
+    warm = read_table(spark, str(tmp_path), "events")
+    for df in (cold, warm):
+        assert df.schema["ts"].dataType == schemas.EVENTS["ts"].dataType
+        got = df.select("event_id", F.unix_micros("ts").alias("us")).orderBy("event_id")
+        assert [tuple(r) for r in got.collect()] == [(1, nanos[0] // 1000), (2, nanos[1] // 1000)]
+    assert warm.schema == cold.schema
+    assert sorted(warm.collect()) == sorted(cold.collect())

@@ -15,7 +15,11 @@ started. The ledger lists per span name: calls, inclusive seconds, self
 seconds (minus nested spans) and the jobs the span launched itself;
 ``(query body)`` is what the query ran outside every traced span. A
 witness's ``*_gate`` columns are observed on the same write and printed
-as their minimum over the result (1 means every row passed).
+as their minimum over the result (1 means every row passed). The header
+line also gives the run's codegen compiles (the change in
+``CodegenMetrics.METRIC_COMPILATION_TIME``'s count) and their Janino
+milliseconds (the change in ``CodeGenerator.compileTime``); a warm rerun
+that still compiles means the codegen cache is evicting its working set.
 """
 
 from __future__ import annotations
@@ -65,12 +69,16 @@ def trace(work: str, data_dirs: list[str], names: list[str]):
     try:
         spark.sparkContext.setLogLevel("ERROR")
         tracer.jsc = spark.sparkContext._jsc
+        codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+            .METRIC_COMPILATION_TIME()
         spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm codegen
         for name in names:
             for data_dir in data_dirs:
                 spark.catalog.clearCache()
                 tracer.op = len(runs)
                 obs = Observation()
+                n0, ns0 = compiles.getCount(), codegen.compileTime()
                 t0 = time.perf_counter()
                 with tracer.span(name, "query"):
                     df = REGISTRY[name](spark, data_dir)
@@ -78,7 +86,9 @@ def trace(work: str, data_dirs: list[str], names: list[str]):
                     observed = df.observe(obs, F.count(F.lit(1)).alias("rows"), *gates)
                     observed.write.format("noop").mode("overwrite").save()
                 runs.append({"name": name, "data_dir": data_dir,
-                             "wall_s": time.perf_counter() - t0, **obs.get})
+                             "wall_s": time.perf_counter() - t0,
+                             "compiles": compiles.getCount() - n0,
+                             "compile_ms": (codegen.compileTime() - ns0) / 1e6, **obs.get})
                 tracer.op = None
     finally:
         stop_spark(spark)
@@ -107,7 +117,8 @@ def report(runs: list[dict], spans: list[dict], counters: dict[int, dict]) -> No
         gates = {k: v for k, v in run.items() if k.endswith("_gate")}
         print(f"\n== {run['name']} @ {run['data_dir']}: {run['wall_s']:.3f} s, "
               f"{run['rows']} rows, {total['jobs']:.0f} jobs, "
-              f"{total['stages']:.0f} stages, {total['tasks']:.0f} tasks"
+              f"{total['stages']:.0f} stages, {total['tasks']:.0f} tasks, "
+              f"{run['compiles']} compiles in {run['compile_ms']:.0f} ms"
               + (f", min gates {gates}" if gates else ""))
         print(f"  {'calls':>5} {'s':>8} {'self_s':>8} {'jobs':>5}  span")
         for label, (calls, incl, own, jobs) in sorted(ledger.items(), key=lambda kv: -kv[1][2]):
